@@ -1,22 +1,49 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 import graft.core.QuerySpec._
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, FingerprintIndex}
 import graft.indexes.{KVIndex, MultiLogSink, SinkIndex}
 import graft.multilog.MultiLog
+import graft.pipeline.{Boilerplate, BoilerplateIndex, Curation,
+  Decontaminate, EvalIndex, Importance, Layout}
 import graft.similarity.{Ann, Quantize}
-import graft.storage.ParquetLog
+import graft.sketch.Kmv
+import graft.storage.{ParquetLog, TableStore}
 import graft.text.TextFunctions
 
-/** Headline benchmark per BASELINE.md §"Our baseline": log append /
-  * scan / point-read / reverse-top-k / index-build throughput plus the
-  * relational and pipeline operators, on SPARK_GRAFT_SF_DIR.
-  * Prints ONE JSON line: {"metric":…,"value":…,"queries":{…},"sf":…}.
+/** The one measurement entry point. Every metric is a named [[Bench.Case]]
+  * in one ordered list ([[Bench.Cases]]), and four forms run that list:
+  *
+  * {{{
+  * sbt "runMain graft.Bench"                          # all 49 cases
+  * sbt "runMain graft.Bench lsh_pairs line_dedup"     # only the named cases
+  * sbt "runMain graft.Bench --plans <outDir> [suffix] [names]"
+  * sbt "runMain graft.Bench --audit [sfDir]"
+  * }}}
+  *
+  * The timed forms are the headline benchmark of BASELINE.md §"Our
+  * baseline" (log append / scan / point-read / reverse-top-k /
+  * index-build throughput plus the relational and pipeline operators)
+  * and print two JSON lines: the per-reading diagnostics, then
+  * {"metric":"total","value":…,"queries":{…},"sentinel":…,"sf":…}.
+  * `--plans` writes `.explain("formatted")` of each named case's frame,
+  * or of a `SparkEntry.queries` entry, to `<outDir>/<name><suffix>.txt`
+  * (names comma-separated; none = every case with a frame). It runs
+  * only the fixtures' untimed setup, so plan-shape claims (Exchange
+  * counts, join strategies, pushed filters) are committable evidence
+  * about the exact frames the timer runs. `--audit` flags plan
+  * anti-patterns over every oracle query. All forms read
+  * `SPARK_GRAFT_SF_DIR` and `SPARK_GRAFT_CPUS`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -31,6 +58,410 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try dispatch(spark, sfDir, args.toList)
+    finally spark.stop()
+  }
+
+  /** Runs one entry form on `spark`, which it leaves running. */
+  def dispatch(spark: SparkSession, sfDir: String, args: List[String]): Unit =
+    args match {
+      case "--plans" :: outDir :: rest =>
+        plans(spark, sfDir, outDir, rest.headOption.getOrElse(""),
+          rest.drop(1).flatMap(_.split(",")).filter(_.nonEmpty))
+      case "--audit" :: rest => audit(spark, rest.headOption.getOrElse(sfDir))
+      case flag :: _ if flag.startsWith("--") =>
+        throw new IllegalArgumentException(s"unknown form $flag; use " +
+          "[names…] | --plans <outDir> [suffix] [names] | --audit [sfDir]")
+      case names => time(spark, sfDir, names)
+    }
+
+  /** One metric. `setup` is untimed work run right before the
+    * readings; it forces the lazy fixtures the case uses. `frame(run)`
+    * is built inside the timer and `act` is the terminal action the
+    * timer applies to it: a count, an aggregate collected, or a
+    * stateful write. A case without a frame (point reads, pumps,
+    * compaction, the live tail) times `act` alone. `run` is the
+    * reading's index, so a stateful case writes a fresh target per
+    * reading. A `single` case takes one reading, and its failure drops
+    * the metric instead of the run. */
+  final class Case private (
+      val name: String,
+      setup: () => Any,
+      val frame: Option[Int => DataFrame],
+      act: (DataFrame, Int) => Any,
+      val single: Boolean) {
+    def prepare(): Unit = { setup(); () }
+    def apply(run: Int): Any = act(frame.map(_(run)).orNull, run)
+  }
+
+  object Case {
+    def count(name: String, setup: => Any = ())(frame: => DataFrame): Case =
+      new Case(name, () => setup, Some(_ => frame), (df, _) => df.count(),
+        single = false)
+    /** Aggregates a computed column rather than counting, where
+      * Catalyst could otherwise prune the work being measured. */
+    def agg(name: String, setup: => Any = ())(aggs: Column*)(
+        frame: => DataFrame): Case =
+      new Case(name, () => setup, Some(_ => frame),
+        (df, _) => df.agg(aggs.head, aggs.tail: _*).collect(), single = false)
+    def framed(name: String, setup: => Any = ())(frame: Int => DataFrame)(
+        act: (DataFrame, Int) => Any): Case =
+      new Case(name, () => setup, Some(frame), act, single = false)
+    def call(name: String, setup: => Any = (), single: Boolean = false)(
+        act: Int => Any): Case =
+      new Case(name, () => setup, None, (_, run) => act(run), single)
+  }
+
+  /** The shared fixtures, each built (untimed) the first time a case's
+    * setup touches it, and the ordered case list over them. */
+  final class Cases(spark: SparkSession, sfDir: String, work: String) {
+    private[Bench] lazy val events: DataFrame =
+      Tables.load(spark, sfDir, "events")
+    private lazy val docs: DataFrame = Tables.load(spark, sfDir, "documents")
+    private lazy val li: DataFrame = Tables.load(spark, sfDir, "lineitem")
+    private lazy val emb: DataFrame = Tables.load(spark, sfDir, "embeddings")
+    private[Bench] lazy val valueType: DataType =
+      EngineFixtures.eventValue(events).schema.head.dataType
+
+    // append_events fills one fresh log per reading; every other log
+    // case reads the first, appended here if append_events did not run
+    private lazy val logs: IndexedSeq[ParquetLog] = (0 until 3).map(i =>
+      ParquetLog.open(spark, s"$work/log$i", valueType))
+    private lazy val log: ParquetLog = {
+      if (logs(0).seq < 0) logs(0).append(EngineFixtures.eventValue(events))
+      logs(0)
+    }
+    private def graftLog(dir: String): DataFrame =
+      spark.read.format("graft-log").load(dir)
+
+    private lazy val mapLog: ParquetLog = {
+      val l = ParquetLog.open(spark, s"$work/maplog",
+        MapType(StringType, IntegerType))
+      l.append(events.select(
+        map_from_arrays(
+          array((0 until 5).map(j => lit(s"k$j")): _*),
+          array((0 until 5).map(j =>
+            (col("event_id") * 5 + j).cast("int")): _*)).as("value")))
+      l
+    }
+    private lazy val dtLog: ParquetLog = {
+      val l = ParquetLog.open(spark, s"$work/dtlog", StructType(Seq(
+        StructField("d", DateType),
+        StructField("t", TimestampType),
+        StructField("m", DecimalType(10, 2)),
+        StructField("w", DecimalType(22, 4)))))
+      l.append(events.select(struct(
+        date_add(lit("2024-01-01").cast("date"),
+          pmod(col("event_id"), lit(1000)).cast("int")).as("d"),
+        timestamp_micros(col("event_id") * 1000000L).as("t"),
+        (col("event_id").cast("decimal(8,0)")
+          * lit("0.25").cast("decimal(3,2)")).cast("decimal(10,2)").as("m"),
+        (col("event_id").cast("decimal(18,0)")
+          * lit("1000000000.0001").cast("decimal(14,4)"))
+          .cast("decimal(22,4)").as("w")).as("value")))
+      l
+    }
+
+    // index builds: fresh sink dirs per reading over the same source log
+    private lazy val mlogs: IndexedSeq[MultiLog] = (0 until 3).map(i =>
+      MultiLog.open(spark, s"$work/mlog$i"))
+    private lazy val mcurs: IndexedSeq[KVIndex] = (0 until 3).map(i =>
+      KVIndex.open(spark, s"$work/mcur$i"))
+    private lazy val kvs: IndexedSeq[KVIndex] = (0 until 3).map(i =>
+      KVIndex.open(spark, s"$work/kv$i"))
+    private def pumpMultiLog(i: Int): Long = MultiLogSink.pump(
+      log, mlogs(i), mcurs(i),
+      b => b.select(col("value.event_type").as("addr"), col("seq")))
+    // the pump is exactly-once: a no-op when multilog_build filled it
+    private lazy val mlog: MultiLog = { pumpMultiLog(0); mlogs(0) }
+
+    // the steady-state split: a 90% standing corpus, a 10% batch
+    private def corpus = docs.where(col("doc_id") % 10 =!= 0)
+    private def batch = docs.where(col("doc_id") % 10 === 0)
+
+    // standing artefacts: built once, untimed, amortized over every
+    // future batch — the timed legs are the per-ingest cost
+    private lazy val dsirDict: DataFrame = {
+      Importance.dsirDict(corpus, batch, "text", buckets = 8192,
+        portableHash = false).get
+        .write.mode("overwrite").parquet(s"$work/dsirdict")
+      spark.read.parquet(s"$work/dsirdict")
+    }
+    private lazy val evalIdx: EvalIndex = {
+      val e = EvalIndex.open(spark, s"$work/evalidx", width = 3)
+      e.ingest("suite", docs.where(col("doc_id") % 17 === 0), "text")
+      e
+    }
+    private lazy val lshIdx: String = {
+      Dedup.lshBandIndex(corpus, "text", "doc_id", 16, 2,
+        portableHash = false)
+        .write.mode("overwrite").partitionBy("band").parquet(s"$work/lshidx")
+      s"$work/lshidx"
+    }
+    private lazy val fpIdx: String = {
+      Dedup.fingerprintIndex(corpus, "text")
+        .write.mode("overwrite").parquet(s"$work/fpidx")
+      s"$work/fpidx"
+    }
+    private lazy val fps: DataFrame = docs.select(col("doc_id"),
+      xxhash64(col("text"), lit("fp")).as("h"))
+    private lazy val fpi: FingerprintIndex = {
+      val f = FingerprintIndex.open(spark, s"$work/fpingest", bands = 4,
+        bits = 64)
+      f.seed("corpus", fps.where(col("doc_id") % 10 >= 3), "h", "doc_id")
+      f
+    }
+    private lazy val boil: BoilerplateIndex = {
+      val b = BoilerplateIndex.open(spark, s"$work/boilingest", width = 3)
+      b.ingest("corpus", docs.where(col("doc_id") % 10 >= 3), "text",
+        "doc_id")
+      b
+    }
+
+    private val kvSchema = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("v", LongType, nullable = false)))
+    private def smallBatch(b: Int): DataFrame =
+      spark.range(b * 2000L, b * 2000L + 2000L)
+        .repartition(32)
+        .select((col("id") % 97).as("k"), col("id").as("v"))
+    // a refolded store is a no-op: each reading folds a FRESH store
+    // built from 8 small commits
+    private lazy val minorStores: IndexedSeq[TableStore] =
+      (0 until 3).map { s =>
+        val st = TableStore.open(spark, s"$work/minor$s", kvSchema)
+        (0 until 8).foreach(b => st.append(smallBatch(b)))
+        st
+      }
+    private lazy val smallStore: TableStore =
+      TableStore.open(spark, s"$work/smallappend", kvSchema)
+
+    // a MATERIALIZED signature frame, so hamming64_pairs is the
+    // banding+verify cost alone (simhash64 has its own metric)
+    private lazy val sims64: DataFrame =
+      Dedup.simhash64(docs, "text", "doc_id")
+        .select(col("id"), col("simhash").as("h"))
+        .localCheckpoint(true)
+
+    private def firstVectors(n: Int): Seq[(Long, Seq[Float])] =
+      emb.where(col("vec_id") < n)
+        .select("vec_id", "embedding").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toSeq.sortBy(_._1)
+    private lazy val queryVec: Seq[Float] = firstVectors(1).head._2
+    private lazy val batchQs: Seq[(Long, Seq[Float])] = firstVectors(4)
+    private lazy val annQs: Seq[(Long, Seq[Float])] = firstVectors(16)
+    // IVF cells / PQ codes: index builds amortize over every future
+    // probe, so only the batched serving pass is timed
+    private lazy val annCents: Map[Long, Seq[Float]] = Ann.kmeansTrain(
+      emb, "embedding", "vec_id", (0L until 16L).toSeq, 2)
+    private lazy val sortedCents = annCents.toSeq.sortBy(_._1)
+    private lazy val annAssigned: DataFrame = Ann
+      .ivfAssignVectors(emb, "embedding", "vec_id", sortedCents)
+      .localCheckpoint(true)
+    private lazy val annBooks: Seq[Seq[Seq[Float]]] = Quantize.pqTrain(
+      emb, "embedding", "vec_id", sortedCents, 8, 64, iters = 1)
+    private lazy val annEncoded: DataFrame = Quantize
+      .pqEncode(emb, "embedding", "vec_id", sortedCents, annBooks)
+      .localCheckpoint(true)
+
+    // one subscription serves both live cases; the timed forms stop it
+    // with every other active query when the run ends
+    private lazy val tail: StreamingQuery = {
+      val q = graft.live.LiveTail.push(
+        log, Seq(Gt(log.seq), Live(true), SeqWrap(true)), s"$work/ckpt",
+        _ => ())
+      q.processAllAvailable() // catch-up (empty)
+      q
+    }
+
+    val all: Seq[Case] = Seq(
+      Case.framed("append_events", logs)(_ =>
+        EngineFixtures.eventValue(events))((df, run) => logs(run).append(df)),
+      // full drain through the QuerySpec path
+      Case.count("seq_scan", log)(log.query(SeqWrap(true))),
+      // the same drain THROUGH the DSv2 connector, aggregating a
+      // computed column so the scan can't answer from row counts
+      Case.agg("seq_scan_connector", log)(sum(col("seq")))(graftLog(log.dir)),
+      // nested vectorized struct decode
+      Case.agg("value_drain", log)(sum(col("value.amount")))(
+        graftLog(log.dir)),
+      // physically ORDERED drain (toRdd keeps the sort): plans via the
+      // OrderedLogScan strategy — no Exchange, no Sort
+      Case.framed("ordered_drain", log)(_ => log.query(SeqWrap(true)))(
+        (df, _) => df.queryExecution.toRdd.count()),
+      Case.agg("map_drain", mapLog)(sum(element_at(col("value"), "k0")))(
+        graftLog(mapLog.dir)),
+      // INT96 timestamps, INT32 dates and both decimal storage tiers
+      Case.agg("datetime_drain", dtLog)(
+        sum(col("value.m")), sum(col("value.w")),
+        avg(unix_micros(col("value.t"))),
+        avg(datediff(col("value.d"), lit("2024-01-01").cast("date"))))(
+        graftLog(dtLog.dir)),
+      Case.count("bounded_scan", log)(
+        log.query(Gte(1000), Lt(50000), Limit(10000), SeqWrap(true))),
+      // 100 seq lookups through the manifest, then as ONE batched job
+      Case.call("point_reads_100", log) { _ =>
+        val top = log.seq
+        var i = 0L
+        while (i < 100) { log.get((i * 7919L) % (top + 1)); i += 1 }
+      },
+      Case.call("point_reads_batched", log) { _ =>
+        val top = log.seq
+        log.getMany((0L until 100L).map(i => (i * 7919L) % (top + 1)))
+      },
+      Case.count("reverse_top100", log)(log.query(Reverse(true), Limit(100))),
+      Case.call("multilog_build", (log, mlogs, mcurs))(pumpMultiLog),
+      Case.call("kvindex_build", (log, kvs)) { run =>
+        SinkIndex.pump(log, kvs(run),
+          b => b.select(col("value.user_id").as("addr"),
+            col("value.props").as("value"), col("seq").as("useq")))
+      },
+      Case.count("sublog_rank_read", mlog)(
+        mlog.sublog("click").query(Limit(100), SeqWrap(true))),
+      Case.count("agg_pricing", li)(
+        li.groupBy("l_returnflag", "l_linestatus")
+          .agg(sum("l_quantity"), sum("l_extendedprice"), avg("l_discount"),
+            count(lit(1)))),
+      Case.count("join_revenue")(
+        SparkEntry.queries("q13_join_revenue")(spark, sfDir)),
+      Case.count("window_rank")(
+        SparkEntry.queries("q14_window_rank")(spark, sfDir)),
+      Case.count("sort_topk")(SparkEntry.queries("q15_sort_topk")(spark, sfDir)),
+      Case.count("text_stats", docs)(docs.select(
+        TextFunctions.tokenCount(col("text")),
+        TextFunctions.qualityScore(col("text")),
+        TextFunctions.langId(col("text")),
+        TextFunctions.fingerprint(col("text")))),
+      // the eleven-signal Gopher repetition panel (9 per-size sorts per
+      // doc in one narrow expression tree)
+      Case.agg("repetition_stats", docs)(
+        sum(col("rs.dup_line_frac") + col("rs.dup_5gram_char_frac")))(
+        docs.select(TextFunctions.repetitionStats(col("text")).as("rs"))),
+      // DSIR model build at production config (xxhash64, B=8192), then
+      // one batch scored against the standing dictionary
+      Case.count("dsir_weights", docs)(Importance.dsirLogWeights(
+        corpus, batch, "text", "doc_id", buckets = 8192,
+        portableHash = false, deterministic = false)),
+      Case.agg("dsir_score_batch", dsirDict)(sum("dsir_logw"))(
+        Importance.dsirScoreWith(docs.where(col("doc_id") % 10 === 3),
+          dsirDict, "text", "doc_id", deterministic = false, buckets = 8192,
+          portableHash = false)),
+      // the Gopher repetition GATE: the admission decision a curation
+      // run pays, on top of the panel compute above
+      Case.agg("repetition_gate", docs)(count(lit(1)))(
+        Curation.repetitionGate(docs, "text")),
+      Case.agg("eval_decontaminate", evalIdx)(count(lit(1)))(
+        evalIdx.decontaminate(docs.where(col("doc_id") % 17 =!= 0), "text",
+          "doc_id")),
+      // production hash config (xxhash64); the md5 variant exists only
+      // so the DuckDB oracle can recompute signatures bit-for-bit
+      Case.count("minhash_sigs", docs)(Dedup.minhashSignatures(
+        docs, "text", "doc_id", 16, portableHash = false)),
+      // r=8 rows/band: the s-curve admits only near-dup candidates
+      Case.count("lsh_pairs", docs)(Dedup.minhashLshPairs(
+        docs, "text", "doc_id", 16, 2, 3, 0.7, portableHash = false)),
+      // steady-state ingest dedup: one batch probes the standing band
+      // index instead of re-pairing corpus+batch
+      Case.count("incremental_lsh", lshIdx)(Dedup.incrementalLshPairs(
+        batch, "text", "doc_id",
+        corpusBands = spark.read.parquet(lshIdx),
+        corpusTexts = corpus.select("doc_id", "text"),
+        numHashes = 16, bands = 2, threshold = 0.7, portableHash = false)),
+      // the EXACT tier: the batch's fingerprints anti-join the standing
+      // index (AQE broadcasts the batch keys)
+      Case.count("incremental_exact", fpIdx)(Dedup.incrementalExactDedup(
+        batch, "text", "doc_id", spark.read.parquet(fpIdx))),
+      // managed-artifact ingests against a standing store: each reading
+      // ingests a DIFFERENT tenth under a fresh batch id (a same-id rerun
+      // would measure the replay path). The four store fixtures are
+      // built together first: their 26 untimed commits warm the
+      // TableStore commit path, and without them fingerprint_ingest
+      // reads ~1.2 s instead of ~0.8 s (sf0.1, 4 cores)
+      Case.framed("fingerprint_ingest",
+        (fpi, boil, minorStores, smallStore))(run =>
+        fps.where(col("doc_id") % 10 === run % 3))((df, run) =>
+        fpi.ingest(s"b$run", df, "h", "doc_id", maxHamming = 2)),
+      Case.framed("boilerplate_ingest", boil)(run =>
+        docs.where(col("doc_id") % 10 === run % 3))((df, run) =>
+        boil.ingest(s"b$run", df, "text", "doc_id")),
+      // one MINOR fold, and the small-append commit (staging +
+      // byte-aware merge + manifest CAS): the per-micro-batch floor of
+      // every store the daemon advances
+      Case.call("minor_compact", minorStores)(run =>
+        minorStores(run).compactSmall(Seq("k"), targetPartitions = 2)),
+      Case.framed("small_append", smallStore)(smallBatch)((df, _) =>
+        smallStore.append(df)),
+      Case.count("simhash", docs)(Dedup.simhash32(docs, "text", "doc_id")),
+      // the 100 TB fingerprint tier: 64 conditional-sum columns and
+      // 16-bit-band Hamming pairing
+      Case.count("simhash64", docs)(Dedup.simhash64(docs, "text", "doc_id")),
+      Case.count("hamming64_pairs", sims64)(Dedup.hammingPairs(
+        sims64, "h", "id", maxHamming = 3, bands = 4, bits = 64)),
+      Case.count("ann_bruteforce", queryVec)(
+        Ann.cosineTopK(emb, "embedding", "vec_id", queryVec, 10)),
+      // 4 queries in ONE pass — compare against 4x ann_bruteforce
+      Case.agg("batch_topk", batchQs)(sum("score"))(
+        Ann.cosineTopKBatch(emb, "embedding", "vec_id", batchQs, 10)),
+      Case.agg("ivf_topk_batch", (annQs, annAssigned))(sum("score"))(
+        Ann.ivfTopKBatch(annAssigned, "embedding", "vec_id", annQs, 10,
+          annCents, 2)),
+      Case.agg("pq_topk_batch", (annQs, annEncoded))(sum("score"))(
+        Quantize.pqTopKBatch(annEncoded, "vec_id", annQs, 10, annCents,
+          annBooks, 2)),
+      Case.count("embed_neardup_lsh", emb)(Dedup.embeddingNearDupLsh(
+        emb, "embedding", "vec_id", 0.3, bits = 4)),
+      // corpus curation: eval-overlap decontamination, corpus-frequency
+      // boilerplate, adaptive quality gate (approxQuantile cut)
+      Case.agg("decontaminate", docs)(sum("overlap"))(
+        Decontaminate.overlapCounts(
+          docs.where(col("doc_id") % 17 =!= 0),
+          docs.where(col("doc_id") % 17 === 0), "text", "doc_id")),
+      Case.agg("boilerplate", docs)(sum("boiler_ratio"))(
+        Boilerplate.boilerplateRatio(docs, "text", "doc_id", 3, 5L)),
+      Case.agg("quality_gate", docs)(sum("q"))(Curation.qualityGate(
+        docs.withColumn("q", TextFunctions.qualityScore(col("text"))),
+        "q", "doc_id", 0.2)),
+      Case.agg("unigram_lm", docs)(sum("lm_logprob"))(
+        TextFunctions.unigramLm(docs, "text", "doc_id")),
+      // line-granular cross-doc dedup over an 8-token reflow of the
+      // newline-free synthetic text, production xxhash64 line keys
+      Case.agg("line_dedup", docs)(sum("n_removed"))(Dedup.dedupLines(
+        docs.select(col("doc_id"),
+          TextFunctions.reflowLines(col("text"), 8).as("text")),
+        "text", "doc_id", portableHash = false)),
+      // z-order clustered rewrite of lineitem: the OPTIMIZE-style
+      // maintenance cost of multi-dim file skipping (the read-side
+      // payoff is in BASELINE.md, "Z-order layout payoff")
+      Case.framed("zorder_write", li)(_ => Layout.zOrdered(
+        li, Seq("l_partkey", "l_suppkey"), numFiles = 32, bits = 15))(
+        (df, run) => df.write.mode("overwrite").parquet(s"$work/zorder$run")),
+      // mergeable corpus profile: per-source counters + KMV sketches
+      Case.agg("kmv_profile", docs)(sum("est_distinct_tokens"))(
+        Kmv.withEstimates(Kmv.profileSketch(docs, "text", "source", 1024),
+          1024)),
+      // append-after-subscribe delivery, then the same trigger round
+      // with the append untimed: a slow append and a slow trigger loop
+      // are told apart
+      Case.call("live_tail_roundtrip", tail, single = true) { _ =>
+        log.append(EngineFixtures.eventValue(events.limit(1)))
+        tail.processAllAvailable()
+      },
+      Case.call("live_tail_delivery",
+        (tail, log.append(EngineFixtures.eventValue(events.limit(1)))),
+        single = true)(_ => tail.processAllAvailable())
+    )
+  }
+
+  private def time(spark: SparkSession, sfDir: String,
+      names: Seq[String]): Unit = {
+    val work = Files.createTempDirectory("graft-bench").toString
+    val cases = new Cases(spark, sfDir, work)
+    val unknown = names.filterNot(n => cases.all.exists(_.name == n))
+    require(unknown.isEmpty, s"unknown bench case ${unknown.mkString(", ")}" +
+      s"; cases: ${cases.all.map(_.name).mkString(" ")}")
+    val picked =
+      if (names.isEmpty) cases.all
+      else cases.all.filter(c => names.contains(c.name))
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // every individual execution, for the "runs" diagnostic field: a
@@ -51,9 +482,9 @@ object Bench {
     }
     // One timed execution of f, with the cache cleared afterwards so a
     // query's residue can't steal unified memory from the next metric.
-    def once[A](name: String)(f: => A): A = {
+    def once(name: String)(f: => Any): Unit = {
       val t0 = System.nanoTime()
-      val r = f
+      f
       results(name) = (System.nanoTime() - t0) / 1e9
       allRuns(name) = allRuns.getOrElse(name, Nil) :+ results(name)
       spark.catalog.clearCache()
@@ -69,53 +500,11 @@ object Bench {
       // cache pressure) and a real leak-shaped regression would
       // masquerade as co-timed host noise
       sentinel()
-      r
     }
-    // Stateful metrics (append, index builds, live tail) mutate their
-    // target and can't repeat against the same dir — but a SINGLE
-    // reading has no noise defense, and the round-9 capture showed
-    // exactly these metrics absorbing host-window noise worst
-    // (multilog_build +48%, kvindex_build +40% on untouched code). So
-    // they run min-of-3 like the pure metrics, each run against a
-    // FRESH pre-opened dir (f receives the run index), which also
-    // keeps per-run work identical.
-    def timedStateful[A](name: String)(f: Int => A): A = {
-      var best = Double.MaxValue
-      var r: A = null.asInstanceOf[A]
-      var i = 0
-      while (i < 3) {
-        r = once(name)(f(i))
-        best = math.min(best, results(name))
-        i += 1
-      }
-      results(name) = best
-      r
-    }
-    def timedOnce[A](name: String)(f: => A): A = once(name)(f)
-    // Pure queries run THREE times, reporting the MIN: the round-2/3
-    // driver runs recorded 50–70 s lsh_pairs outliers (host-level
-    // contention bursts) that neither the judge nor a local re-run
-    // could reproduce — min-of-3 is the standard robust statistic when
-    // the machine, not the plan, is the noise source.
-    def timed[A](name: String)(f: => A): A = {
-      var best = Double.MaxValue
-      var r: A = null.asInstanceOf[A]
-      var i = 0
-      while (i < 3) {
-        r = once(name)(f)
-        best = math.min(best, results(name))
-        i += 1
-      }
-      results(name) = best
-      r
-    }
-
-    val work = Files.createTempDirectory("graft-bench").toString
-    val events = Tables.load(spark, sfDir, "events")
 
     // JIT/codegen warm-up so per-metric numbers are comparable
     // run-to-run (first query in a session otherwise pays compilation)
-    events.limit(1000).select(md5(col("props"))).count()
+    cases.events.limit(1000).select(md5(col("props"))).count()
     spark.range(100).selectExpr("sum(id)").count()
     // warm the sentinel's own plan, then discard the warm-up readings
     // (first execution pays codegen; the sentinel must measure the
@@ -169,471 +558,26 @@ object Bench {
     // warm the WRITE path too (committer + parquet writer codegen):
     // the first append in a session otherwise pays ~2 s of one-time
     // class init that has nothing to do with append throughput
-    ParquetLog
-      .open(spark, s"$work/warmlog",
-        EngineFixtures.eventValue(events).schema.head.dataType)
-      .append(EngineFixtures.eventValue(events.limit(100)))
+    ParquetLog.open(spark, s"$work/warmlog", cases.valueType)
+      .append(EngineFixtures.eventValue(cases.events.limit(100)))
 
-    // 1. append throughput: ingest events into a fresh ParquetLog
-    // (3 fresh logs, min-of-3; later metrics read the first)
-    val valueType = EngineFixtures.eventValue(events).schema.head.dataType
-    val logs = (0 until 3).map(i =>
-      ParquetLog.open(spark, s"$work/log$i", valueType))
-    timedStateful("append_events") { i =>
-      logs(i).append(EngineFixtures.eventValue(events))
-    }
-    val log = logs(0)
-
-    // 2. sequential scan: full drain through the QuerySpec path
-    timed("seq_scan")(log.query(SeqWrap(true)).count())
-
-    // 2b. the same full drain THROUGH the DSv2 connector (manifest-
-    // packed partitions, parquet-mr readers, direct InternalRow emit):
-    // aggregates a computed column so the scan can't be optimized to
-    // manifest row counts
-    timed("seq_scan_connector") {
-      spark.read.format("graft-log").load(log.dir)
-        .agg(sum(col("seq"))).collect()
-    }
-
-    // 2c. full STRUCT-value drain: nested vectorized decode (round 10
-    // — the struct gate; 2.5× over the row leg on the 40× probe)
-    timed("value_drain") {
-      spark.read.format("graft-log").load(log.dir)
-        .agg(sum(col("value.amount"))).collect()
-    }
-
-    // 2d. physically ORDERED drain (toRdd keeps the sort): plans via
-    // the OrderedLogScan strategy — no Exchange, no Sort (round 10)
-    timed("ordered_drain") {
-      log.query(SeqWrap(true)).queryExecution.toRdd.count()
-    }
-
-    // 2e. MAP-value drain (round 11: the nesting-ladder columnar
-    // close) — the one value shape that always paid parquet-mr row
-    // assembly before; the build is untimed setup, the drain decodes
-    // the map column through the vectorized path
-    val mapLog = ParquetLog.open(spark, s"$work/maplog",
-      org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.IntegerType))
-    mapLog.append(events.select(
-      map_from_arrays(
-        array((0 until 5).map(j => lit(s"k$j")): _*),
-        array((0 until 5).map(j =>
-          (col("event_id") * 5 + j).cast("int")): _*)).as("value")))
-    timed("map_drain") {
-      spark.read.format("graft-log").load(mapLog.dir)
-        .agg(sum(element_at(col("value"), "k0"))).collect()
-    }
-
-    // 2f. DATETIME/DECIMAL drain (round 13: the gate's last exclusion
-    // closed) — INT96 timestamps (the writer default), INT32 dates and
-    // both decimal storage tiers decode through the vectorized path;
-    // the build is untimed setup, the drain materializes all four
-    // fields so a regression in any tier shows here
-    val dtLog = ParquetLog.open(spark, s"$work/dtlog",
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("d",
-          org.apache.spark.sql.types.DateType),
-        org.apache.spark.sql.types.StructField("t",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("m",
-          org.apache.spark.sql.types.DecimalType(10, 2)),
-        org.apache.spark.sql.types.StructField("w",
-          org.apache.spark.sql.types.DecimalType(22, 4)))))
-    dtLog.append(events.select(struct(
-      date_add(lit("2024-01-01").cast("date"),
-        pmod(col("event_id"), lit(1000)).cast("int")).as("d"),
-      timestamp_micros(col("event_id") * 1000000L).as("t"),
-      (col("event_id").cast("decimal(8,0)")
-        * lit("0.25").cast("decimal(3,2)")).cast("decimal(10,2)").as("m"),
-      (col("event_id").cast("decimal(18,0)")
-        * lit("1000000000.0001").cast("decimal(14,4)"))
-        .cast("decimal(22,4)").as("w")).as("value")))
-    timed("datetime_drain") {
-      spark.read.format("graft-log").load(dtLog.dir)
-        .agg(sum(col("value.m")), sum(col("value.w")),
-          avg(unix_micros(col("value.t"))),
-          avg(datediff(col("value.d"), lit("2024-01-01").cast("date"))))
-        .collect()
-    }
-
-    // 3. bounded scan: Gte/Lt + Limit
-    timed("bounded_scan") {
-      log.query(Gte(1000), Lt(50000), Limit(10000), SeqWrap(true)).count()
-    }
-
-    // 4. point reads: 100 seq lookups through the manifest
-    timed("point_reads_100") {
-      val top = log.seq
-      var i = 0L
-      while (i < 100) { log.get((i * 7919L) % (top + 1)); i += 1 }
-    }
-
-    // 4b. the same 100 lookups as ONE batched job
-    timed("point_reads_batched") {
-      val top = log.seq
-      log.getMany((0L until 100L).map(i => (i * 7919L) % (top + 1)))
-    }
-
-    // 5. reverse top-k
-    timed("reverse_top100")(log.query(Reverse(true), Limit(100)).count())
-
-    // 6. index build: multilog fan-out + KV last-write per user
-    // (fresh sink dirs per run, identical source log → min-of-3)
-    val mlogs = (0 until 3).map(i => MultiLog.open(spark, s"$work/mlog$i"))
-    val mcurs = (0 until 3).map(i => KVIndex.open(spark, s"$work/mcur$i"))
-    timedStateful("multilog_build") { i =>
-      MultiLogSink.pump(
-        log, mlogs(i), mcurs(i),
-        b => b.select(col("value.event_type").as("addr"), col("seq")))
-    }
-    val mlog = mlogs(0)
-    val kvs = (0 until 3).map(i => KVIndex.open(spark, s"$work/kv$i"))
-    timedStateful("kvindex_build") { i =>
-      SinkIndex.pump(
-        log, kvs(i),
-        b => b.select(col("value.user_id").as("addr"),
-          col("value.props").as("value"), col("seq").as("useq")))
-    }
-    timed("sublog_rank_read") {
-      mlog.sublog("click").query(Limit(100), SeqWrap(true)).count()
-    }
-
-    // 7. relational: agg / join / window / top-k
-    val li = Tables.load(spark, sfDir, "lineitem")
-    timed("agg_pricing") {
-      li.groupBy("l_returnflag", "l_linestatus")
-        .agg(sum("l_quantity"), sum("l_extendedprice"), avg("l_discount"),
-          count(lit(1)))
-        .count()
-    }
-    timed("join_revenue")(SparkEntry.queries("q13_join_revenue")(spark, sfDir).count())
-    timed("window_rank")(SparkEntry.queries("q14_window_rank")(spark, sfDir).count())
-    timed("sort_topk")(SparkEntry.queries("q15_sort_topk")(spark, sfDir).count())
-
-    // 8. pipeline: text / dedup / similarity
-    val docs = Tables.load(spark, sfDir, "documents")
-    timed("text_stats") {
-      docs.select(
-        TextFunctions.tokenCount(col("text")),
-        TextFunctions.qualityScore(col("text")),
-        TextFunctions.langId(col("text")),
-        TextFunctions.fingerprint(col("text"))
-      ).count()
-    }
-    // the eleven-signal Gopher repetition panel: one narrow per-row
-    // expression tree (9 per-size sorts per doc) — tracks the cost of
-    // the standard pre-training repetition gate per round
-    timed("repetition_stats") {
-      docs.select(TextFunctions.repetitionStats(col("text")).as("rs"))
-        .select(sum(col("rs.dup_line_frac") + col("rs.dup_5gram_char_frac")))
-        .collect()
-    }
-    // DSIR importance weights at production config (xxhash64 buckets,
-    // B=8192): two bucket-count shuffles + one broadcast-scored pass
-    timed("dsir_weights") {
-      graft.pipeline.Importance.dsirLogWeights(
-        docs.where(col("doc_id") % 10 =!= 0),
-        docs.where(col("doc_id") % 10 === 0),
-        "text", "doc_id", buckets = 8192, portableHash = false,
-        deterministic = false)
-        .count()
-    }
-    // the STEADY-STATE dsir path: one batch scored against a standing
-    // parquet dictionary (built untimed — amortized over every future
-    // batch, DsirProbe pins it flat). At 100 TB this is the per-ingest
-    // number; dsir_weights above is the once-ever model build.
-    graft.pipeline.Importance.dsirDict(
-      docs.where(col("doc_id") % 10 =!= 0),
-      docs.where(col("doc_id") % 10 === 0),
-      "text", buckets = 8192, portableHash = false).get
-      .write.mode("overwrite").parquet(s"$work/dsirdict")
-    locally {
-      val standing = spark.read.parquet(s"$work/dsirdict")
-      timed("dsir_score_batch") {
-        graft.pipeline.Importance.dsirScoreWith(
-          docs.where(col("doc_id") % 10 === 3), standing, "text",
-          "doc_id", deterministic = false, buckets = 8192,
-          portableHash = false)
-          .agg(sum("dsir_logw")).collect()
+    picked.foreach { c =>
+      if (c.single)
+        try { c.prepare(); once(c.name)(c(0)) } catch { case NonFatal(_) => () }
+      else {
+        // THREE readings, reporting the MIN: the round-2/3 captures
+        // recorded 50–70 s lsh_pairs outliers (host-level contention
+        // bursts) that no re-run could reproduce — min-of-3 is the
+        // standard robust statistic when the machine, not the plan, is
+        // the noise source. Stateful
+        // cases (appends, index builds) get a fresh target per reading,
+        // which also keeps per-reading work identical.
+        c.prepare()
+        results(c.name) =
+          (0 until 3).map { run => once(c.name)(c(run)); results(c.name) }.min
       }
     }
-    // the Gopher repetition GATE as a filter (repetition_stats above
-    // is the panel compute; this is the eleven-threshold admission
-    // decision a curation run actually pays)
-    timed("repetition_gate") {
-      graft.pipeline.Curation.repetitionGate(docs, "text")
-        .agg(count(lit(1))).collect()
-    }
-    // standing-EvalIndex decontamination: suites registered untimed
-    // (once per benchmark release), the timed leg is one corpus pass
-    // against the standing dictionary — the per-ingest cost
-    locally {
-      val evalIdx = graft.pipeline.EvalIndex.open(
-        spark, s"$work/evalidx", width = 3)
-      evalIdx.ingest("suite", docs.where(col("doc_id") % 17 === 0), "text")
-      timed("eval_decontaminate") {
-        evalIdx.decontaminate(
-          docs.where(col("doc_id") % 17 =!= 0), "text", "doc_id")
-          .agg(count(lit(1))).collect()
-      }
-    }
-    // Production hash config (xxhash64, codegen'd): the md5 variant
-    // exists solely so the DuckDB oracle can recompute signatures
-    // bit-for-bit (exercised by q22/q24 in Verify); throughput is
-    // measured on the hash a real deployment would run.
-    timed("minhash_sigs") {
-      Dedup.minhashSignatures(docs, "text", "doc_id", 16, portableHash = false)
-        .count()
-    }
-    // High-similarity config (r=8 rows/band): the s-curve admits only
-    // near-dup candidates, so no candidate flood on vocab-heavy corpora
-    timed("lsh_pairs") {
-      Dedup.minhashLshPairs(docs, "text", "doc_id", 16, 2, 3, 0.7,
-        portableHash = false).count()
-    }
-    // steady-state ingest dedup: the corpus's band index is persisted
-    // ONCE (untimed — amortized over every future batch); the timed
-    // leg is one 10% batch probing it. At 100 TB this is the number
-    // that matters: re-running lsh_pairs over corpus+batch per ingest
-    // redoes the corpus work every day, the probe never touches it.
-    val incCorpus = docs.where(col("doc_id") % 10 =!= 0)
-    val incBatch = docs.where(col("doc_id") % 10 === 0)
-    Dedup.lshBandIndex(incCorpus, "text", "doc_id", 16, 2,
-      portableHash = false)
-      .write.mode("overwrite").partitionBy("band").parquet(s"$work/lshidx")
-    timed("incremental_lsh") {
-      Dedup.incrementalLshPairs(
-        incBatch, "text", "doc_id",
-        corpusBands = spark.read.parquet(s"$work/lshidx"),
-        corpusTexts = incCorpus.select("doc_id", "text"),
-        numHashes = 16, bands = 2, threshold = 0.7,
-        portableHash = false).count()
-    }
-    // the EXACT tier of the same steady-state ingest: the corpus's
-    // fingerprint index is persisted once (untimed, amortized); the
-    // timed leg anti-joins one batch's fingerprints against it —
-    // nothing corpus-sized moves (AQE broadcasts the batch keys)
-    Dedup.fingerprintIndex(incCorpus, "text")
-      .write.mode("overwrite").parquet(s"$work/fpidx")
-    timed("incremental_exact") {
-      Dedup.incrementalExactDedup(
-        incBatch, "text", "doc_id",
-        spark.read.parquet(s"$work/fpidx")).count()
-    }
-    // the MANAGED-ARTIFACT ingest paths, per-round regression
-    // trackers like incremental_lsh: one journaled batch ingest
-    // against a STANDING store (seeded untimed). Each of the 3 timed
-    // runs ingests a DIFFERENT tenth under a fresh batch id — ids
-    // must be disjoint from indexed ids, and a same-id rerun would
-    // measure the replay path (probe without commit), not ingest.
-    locally {
-      val fps = docs.select(col("doc_id"),
-        xxhash64(col("text"), lit("fp")).as("h"))
-      val fpi = graft.dedup.FingerprintIndex.open(
-        spark, s"$work/fpingest", bands = 4, bits = 64)
-      fpi.seed("corpus", fps.where(col("doc_id") % 10 >= 3), "h", "doc_id")
-      var fpRun = 0
-      timed("fingerprint_ingest") {
-        fpi.ingest(s"b$fpRun",
-          fps.where(col("doc_id") % 10 === fpRun % 3),
-          "h", "doc_id", maxHamming = 2)
-        fpRun += 1
-      }
-      val boil = graft.pipeline.BoilerplateIndex.open(
-        spark, s"$work/boilingest", width = 3)
-      boil.ingest("corpus",
-        docs.where(col("doc_id") % 10 >= 3), "text", "doc_id")
-      var boilRun = 0
-      timed("boilerplate_ingest") {
-        boil.ingest(s"b$boilRun",
-          docs.where(col("doc_id") % 10 === boilRun % 3),
-          "text", "doc_id")
-        boilRun += 1
-      }
-      // the r19 maintenance path: one MINOR fold over a store built
-      // from 8 small commits (each run folds a FRESH store — a
-      // refolded store is a no-op and would measure nothing), and the
-      // small-append commit itself (staging + byte-aware merge +
-      // manifest CAS — the per-micro-batch floor of every store the
-      // daemon advances)
-      val mSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      def smallBatch(b: Int) =
-        spark.range(b * 2000L, b * 2000L + 2000L)
-          .repartition(32)
-          .select((col("id") % 97).as("k"), col("id").as("v"))
-      val mStores = (0 until 3).map { s =>
-        val st = graft.storage.TableStore.open(
-          spark, s"$work/minor$s", mSchema)
-        (0 until 8).foreach(b => st.append(smallBatch(b)))
-        st
-      }
-      var mRun = 0
-      timed("minor_compact") {
-        mStores(mRun % 3).compactSmall(Seq("k"), targetPartitions = 2)
-        mRun += 1
-      }
-      val saStore = graft.storage.TableStore.open(
-        spark, s"$work/smallappend", mSchema)
-      var saRun = 0
-      timed("small_append") {
-        saStore.append(smallBatch(saRun))
-        saRun += 1
-      }
-    }
-    timed("simhash")(Dedup.simhash32(docs, "text", "doc_id").count())
-    // the 100 TB fingerprint tier: 64 conditional-sum columns (the
-    // widest agg in the engine) and 16-bit-band Hamming pairing —
-    // regression-guarded here because the 32-bit numbers say nothing
-    // about either
-    timed("simhash64")(Dedup.simhash64(docs, "text", "doc_id").count())
-    // pairing timed over a MATERIALIZED signature frame so this metric
-    // is the banding+verify cost alone — round 9 conflated it with a
-    // recompute of simhash64, which has its own metric above
-    val sims64 = Dedup.simhash64(docs, "text", "doc_id")
-      .select(col("id"), col("simhash").as("h"))
-      .localCheckpoint(true)
-    timed("hamming64_pairs") {
-      Dedup.hammingPairs(
-        sims64, "h", "id", maxHamming = 3, bands = 4, bits = 64).count()
-    }
-    sims64.unpersist(blocking = false)
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val qv = emb.where(col("vec_id") === 0).select("embedding")
-      .collect()(0).getSeq[Float](0)
-    timed("ann_bruteforce")(Ann.cosineTopK(emb, "embedding", "vec_id", qv, 10).count())
-    // 4 queries against the corpus in ONE pass (literal query batch,
-    // per-partition bounded heaps) — compare against 4x ann_bruteforce
-    val batchQs = emb.where(col("vec_id") < 4)
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toSeq.sortBy(_._1)
-    timed("batch_topk") {
-      Ann.cosineTopKBatch(emb, "embedding", "vec_id", batchQs, 10)
-        .agg(sum("score")).collect()
-    }
-    // batched APPROXIMATE tiers (IVF cells / PQ codes): 16 queries per
-    // single partition-pruned pass. The index builds are UNTIMED —
-    // they amortize over every future probe — so the timed legs are
-    // the steady-state serving cost the retrieval-eval loop pays.
-    locally {
-      val annQs = emb.where(col("vec_id") < 16)
-        .select("vec_id", "embedding").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toSeq.sortBy(_._1)
-      val annCents = Ann.kmeansTrain(emb, "embedding", "vec_id",
-        (0L until 16L).toSeq, 2)
-      val sorted = annCents.toSeq.sortBy(_._1)
-      val annAssigned = Ann
-        .ivfAssignVectors(emb, "embedding", "vec_id", sorted)
-        .localCheckpoint(true)
-      timed("ivf_topk_batch") {
-        Ann.ivfTopKBatch(annAssigned, "embedding", "vec_id", annQs, 10,
-          annCents, 2).agg(sum("score")).collect()
-      }
-      val annBooks = Quantize.pqTrain(emb, "embedding", "vec_id", sorted,
-        8, 64, iters = 1)
-      val annEncoded = Quantize
-        .pqEncode(emb, "embedding", "vec_id", sorted, annBooks)
-        .localCheckpoint(true)
-      timed("pq_topk_batch") {
-        Quantize.pqTopKBatch(annEncoded, "vec_id", annQs, 10, annCents,
-          annBooks, 2).agg(sum("score")).collect()
-      }
-    }
-    timed("embed_neardup_lsh") {
-      Dedup.embeddingNearDupLsh(emb, "embedding", "vec_id", 0.3, bits = 4).count()
-    }
-    // corpus curation: eval-overlap decontamination (broadcast
-    // corpus×benchmark), corpus-frequency boilerplate, adaptive
-    // quality gate (approxQuantile cut, no sort)
-    // aggregate a computed column (NOT count()) so Catalyst cannot
-    // eliminate the joins that are the work being measured
-    timed("decontaminate") {
-      graft.pipeline.Decontaminate.overlapCounts(
-        docs.where(col("doc_id") % 17 =!= 0),
-        docs.where(col("doc_id") % 17 === 0),
-        "text", "doc_id").agg(sum("overlap")).collect()
-    }
-    timed("boilerplate") {
-      graft.pipeline.Boilerplate
-        .boilerplateRatio(docs, "text", "doc_id", 3, 5L)
-        .agg(sum("boiler_ratio")).collect()
-    }
-    timed("quality_gate") {
-      graft.pipeline.Curation.qualityGate(
-        docs.withColumn("q", TextFunctions.qualityScore(col("text"))),
-        "q", "doc_id", 0.2).agg(sum("q")).collect()
-    }
-
-    timed("unigram_lm") {
-      TextFunctions.unigramLm(docs, "text", "doc_id")
-        .agg(sum("lm_logprob")).collect()
-    }
-
-    // line-granular cross-doc dedup over an 8-token reflow of the
-    // corpus (the synthetic text is newline-free); aggregate the
-    // rewrite's output so the joins can't be optimized away.
-    // Production hash config (xxhash64 line keys — the md5 variant
-    // exists so the q85/q86 oracles can recompute keys bit-for-bit;
-    // output is hash-choice-invariant, spec-pinned)
-    timed("line_dedup") {
-      val lined = docs.select(col("doc_id"),
-        TextFunctions.reflowLines(col("text"), 8).as("text"))
-      Dedup.dedupLines(lined, "text", "doc_id", portableHash = false)
-        .agg(sum("n_removed")).collect()
-    }
-
-    // z-order clustered rewrite of lineitem on (l_partkey, l_suppkey):
-    // the OPTIMIZE-style maintenance cost a corpus owner pays for
-    // multi-dim file skipping — one range shuffle + in-file sort
-    // (fresh out dir per run; the read-side payoff is LayoutProbe's)
-    timedStateful("zorder_write") { i =>
-      graft.pipeline.Layout.writeZOrdered(
-        li, Seq("l_partkey", "l_suppkey"), s"$work/zorder$i",
-        numFiles = 32, bits = 15)
-    }
-
-    // mergeable corpus profile: per-source counters + content/vocab
-    // KMV sketches (k=1024) in the two map-side-combined passes —
-    // the per-batch cost of keeping a standing profile current
-    timed("kmv_profile") {
-      graft.sketch.Kmv.withEstimates(
-          graft.sketch.Kmv.profileSketch(docs, "text", "source", 1024), 1024)
-        .agg(sum("est_distinct_tokens")).collect()
-    }
-
-    // 9. live tail: append-after-subscribe delivery latency (one
-    // trigger round, includes micro-batch scheduling)
-    {
-      val seen = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val q = graft.live.LiveTail.push(
-        log,
-        Seq(Gt(log.seq), Live(true), SeqWrap(true)),
-        s"$work/ckpt",
-        r => { seen.set(r.getLong(0)); () }
-      )
-      try {
-        q.processAllAvailable() // catch-up (empty)
-        timedOnce("live_tail_roundtrip") {
-          log.append(EngineFixtures.eventValue(events.limit(1)))
-          q.processAllAvailable()
-        }
-        // the same path with the APPEND untimed: isolates the
-        // micro-batch scheduling + discovery + delivery floor from
-        // the append's write cost, so the two components of the
-        // roundtrip are measured separately (r19/r20 verdict item —
-        // the roundtrip number alone can't tell a slow append from a
-        // slow trigger loop). New metric: additions are allowed,
-        // existing entries untouched.
-        log.append(EngineFixtures.eventValue(events.limit(1)))
-        timedOnce("live_tail_delivery") { q.processAllAvailable() }
-      } catch { case _: Throwable => () } finally q.stop()
-    }
+    spark.streams.active.foreach(_.stop())
 
     val qs = results
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -673,6 +617,60 @@ object Bench {
     println(
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sentinel":$sentinelJson,"sf":"$sfDir"}"""
     )
-    spark.stop()
+  }
+
+  private def plans(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, names: Seq[String]): Unit = {
+    val cases = new Cases(spark, sfDir,
+      Files.createTempDirectory("graft-plans").toString)
+    val framed = cases.all.filter(_.frame.isDefined)
+    val want = if (names.isEmpty) framed.map(_.name) else names
+    val bad = want.filterNot(n =>
+      framed.exists(_.name == n) || SparkEntry.queries.contains(n))
+    require(bad.isEmpty, s"no plan for ${bad.mkString(", ")}: not a bench " +
+      "case with a frame, nor a SparkEntry query")
+    Files.createDirectories(Paths.get(outDir))
+    want.foreach { name =>
+      val txt =
+        try {
+          val df = framed.find(_.name == name) match {
+            case Some(c) => c.prepare(); c.frame.get(0)
+            case None => SparkEntry.queries(name)(spark, sfDir)
+          }
+          df.queryExecution.explainString(FormattedMode)
+        } catch { case e: Exception => s"<failed: ${e.getMessage}>" }
+      Files.write(Paths.get(outDir, s"$name$suffix.txt"), txt.getBytes("UTF-8"))
+      println(s"dumped $name")
+    }
+  }
+
+  /** Materializes each oracle query's physical plan (setup side
+    * effects only; the final frame never runs) and flags the
+    * anti-patterns the optimization guide names: cartesian products,
+    * nested-loop joins, SortMergeJoins (our operators are expected to
+    * broadcast or pre-partition) and Python evaluation, with
+    * per-plan Exchange counts. One line per query, then a summary. */
+  private def audit(spark: SparkSession, sfDir: String): Unit = {
+    val flagged = scala.collection.mutable.ListBuffer.empty[String]
+    var audited = 0
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, f) =>
+      try {
+        val plan = f(spark, sfDir).queryExecution.executedPlan.toString
+        audited += 1
+        val bad = Seq(
+          "CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin",
+          "BatchEvalPython", "ArrowEvalPython")
+          .filter(plan.contains)
+        val exchanges = "Exchange".r.findAllIn(plan).length
+        if (bad.nonEmpty)
+          flagged += s"$name: ${bad.mkString(",")} (exchanges=$exchanges)"
+        println(f"$name%-28s exchanges=$exchanges%-3d ${bad.mkString(",")}")
+      } catch {
+        case e: Exception =>
+          println(f"$name%-28s <plan failed: ${e.getClass.getSimpleName}>")
+      }
+    }
+    println(s"== audited $audited queries; flagged ${flagged.size}")
+    flagged.foreach(l => println(s"  FLAG $l"))
   }
 }

@@ -4679,8 +4679,9 @@ object SparkEntry {
         |SELECT query_id, vec_id, score FROM ranked WHERE rn <= 10
         |ORDER BY query_id, score DESC, vec_id""".stripMargin,
 
-    // the watermark-boundary arithmetic, pinned (probe-verified,
-    // tools/WmProbe): batch k's watermark = 100·(k−2) − 30 s (event
+    // the watermark-boundary arithmetic, pinned (probe-verified;
+    // COVERAGE.md, "Streaming dedup watermark-boundary semantics"):
+    // batch k's watermark = 100·(k−2) − 30 s (event
     // time lags one committed batch), a key's state expires at
     // first_ts + 30 s, eviction is INCLUSIVE (expire ≤ wm — gid 39
     // sits exactly on the boundary and IS evicted), dropped

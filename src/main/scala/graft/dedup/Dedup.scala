@@ -510,11 +510,13 @@ object Dedup {
     // tests below must check overflow FIRST: with a small
     // maxPushedFetchIds (< maxInLiteralIds) a truncated gather would
     // otherwise slip into the IN-literal tier with an incomplete id
-    // list and silently drop candidate texts (caught by
-    // FetchTierProbe's pushed-vs-forced answer assert).
+    // list and silently drop candidate texts (caught by a
+    // pushed-vs-forced answer check; BASELINE.md, "Candidate-fetch
+    // top tier probed").
     val overflow = gathered.length > maxPushedFetchIds
-    // Three-tier text fetch, gates set from the round-10 InGateProbe
-    // (100 k-row corpus, local[32]): a pushed IN literal costs
+    // Three-tier text fetch, gates set from the round-10 IN-literal
+    // gate probe (BASELINE.md; 100 k-row corpus, local[32]): a pushed
+    // IN literal costs
     // planning LINEAR in n (n=10k: 0.12 s plan / 0.40 s exec; n=100k:
     // 1.24 s / 2.99 s) and past spark's parquet inFilterThreshold the
     // pushed predicate degrades to a min/max RANGE filter — which
@@ -540,8 +542,8 @@ object Dedup {
         // order) whenever the candidate set is id-clustered (the
         // steady-state shape: near-dups concentrate in recent ids).
         // Spread candidates degrade to the old full pass plus a
-        // footer min/max check per row group — the FetchTierProbe
-        // pins both slopes.
+        // footer min/max check per row group — both slopes are in
+        // BASELINE.md, "Candidate-fetch top tier probed".
         val env = candIds.agg(min(col("_cid")), max(col("_cid")))
           .collect().head
         corpusTexts.where(
@@ -1546,7 +1548,8 @@ object Dedup {
     // semi-join, both pair-join sides), and without a reuse point
     // each re-runs this standing-index semi-probe — three extra
     // scans of the standing store per ingest, the corpus-linear
-    // drift FpProbe recorded (+4 s/batch by 786k docs). With the
+    // drift BASELINE.md records under "Round 16 (cont.):
+    // fingerprint-artifact probe" (+4 s/batch by 786k docs). With the
     // exchange, ReuseExchange serves every consumer from ONE
     // batch-bound shuffle of probed rows. Small batches (probe reach
     // is bucket-correlated with the batch) skip the fixed stage cost
@@ -1583,8 +1586,9 @@ object Dedup {
       // iterations, the admitted anti-join, the index commit's loser
       // join and the caller's own evaluation all reuse this
       // pair-bound frame — without it each consumer re-runs the
-      // whole standing-index probe, a corpus-linear multiplier
-      // (FpProbe measured the full ingest at 3-4x the lone probe)
+      // whole standing-index probe, a corpus-linear multiplier (the
+      // full ingest measured 3-4x the lone probe; BASELINE.md,
+      // "FingerprintIndex probe made batch-bound")
       .localCheckpoint(true)
     (pairs, capped)
   }

@@ -96,7 +96,13 @@ final class FingerprintIndex private (
   /** Transactional ingest: batch-touching pairs against the
     * pre-batch snapshot ([[Dedup.incrementalHammingPairsDiag]]), the
     * corpus-wins survivor rule ([[Dedup.incrementalDropIds]]), then
-    * the batch's band rows + journal as one commit. */
+    * the batch's band rows + journal as one commit.
+    *
+    * Precondition: `bands > maxHamming` against the PINNED bands (the
+    * pigeonhole bound: a pair within `maxHamming` bits then agrees on
+    * at least one band). A call that violates it, or passes a negative
+    * `maxHamming`, throws `IllegalArgumentException`; to dedup at a
+    * wider distance, open the index with more `bands`. */
   def ingest(
       batchId: String,
       docs: DataFrame,
@@ -106,16 +112,7 @@ final class FingerprintIndex private (
       maxBucket: Long = 100000L,
       maxIter: Int = 50
   ): FingerprintIngestResult = synchronized {
-    // the direct hammingBandIndex + incrementalHammingFromBands path
-    // bypasses incrementalHammingPairsDiag's guards — re-assert them
-    // here against the PINNED bands, or an ingest with maxHamming >=
-    // bands silently loses near-dup recall (pairs spreading their
-    // differing bits one per band share no band) instead of failing
-    // fast
-    require(maxHamming >= 0, s"maxHamming must be >= 0 (got $maxHamming)")
-    require(bands > maxHamming,
-      s"pigeonhole recall needs bands > maxHamming " +
-        s"(pinned bands=$bands <= $maxHamming)")
+    checkMaxHamming(maxHamming)
     val applied = appliedVersion(batchId)
     val pre = applied.map(_ - 1)
     // band the batch ONCE: the probe, the cap union AND the commit
@@ -168,11 +165,12 @@ final class FingerprintIndex private (
     //
     // DETERMINISTIC routing, not repartitionByRange: the range
     // partitioner's boundary sampler ran 2 extra jobs per ingest and
-    // re-evaluated this whole child (FpCommitProbe: 5 jobs / 224 ms
-    // task time vs 3 jobs / 189 ms). Bands are a tiny, KNOWN domain,
-    // so boundaries need no sampling — band b routes to partition
-    // floor(b·n/bands) via a literal whose Spark Murmur3 hash lands
-    // on exactly that partition index ([[FingerprintIndex.routing]]).
+    // re-evaluated this whole child (5 jobs / 224 ms task time vs
+    // 3 jobs / 189 ms; OPTIMIZATION_r21.md, fingerprint_ingest).
+    // Bands are a tiny, KNOWN domain, so boundaries need no sampling
+    // — band b routes to partition floor(b·n/bands) via a literal
+    // that Spark's hash partitioning sends to exactly that partition
+    // index ([[FingerprintIndex.routing]]).
     // Partition order == band order, so staged-file name order (and a
     // small commit's coalesce/concat fold) keeps every file's
     // (kind, band, bkey) run monotone — FingerprintIndexSpec pins the
@@ -196,7 +194,9 @@ final class FingerprintIndex private (
 
   /** Checkpointed streaming leg — the family's [[VecDedupIndex.start]]
     * shape: one [[ingest]] per micro-batch, kill/resume ≡ the
-    * uninterrupted rolling run. */
+    * uninterrupted rolling run. Same precondition as [[ingest]]:
+    * `bands > maxHamming`, checked here before the query starts — a
+    * violating call throws `IllegalArgumentException`; raise `bands`. */
   def start(
       docs: DataFrame,
       hashCol: String,
@@ -206,7 +206,8 @@ final class FingerprintIndex private (
       maxBucket: Long = 100000L,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)
-  ): org.apache.spark.sql.streaming.StreamingQuery =
+  ): org.apache.spark.sql.streaming.StreamingQuery = {
+    checkMaxHamming(maxHamming)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -219,6 +220,19 @@ final class FingerprintIndex private (
         }
       }
       .start()
+  }
+
+  // the direct hammingBandIndex + incrementalHammingFromBands path
+  // bypasses incrementalHammingPairsDiag's guards — re-assert them
+  // against the PINNED bands, or an ingest with maxHamming >= bands
+  // silently loses near-dup recall (pairs spreading their differing
+  // bits one per band share no band) instead of failing fast
+  private def checkMaxHamming(maxHamming: Int): Unit = {
+    require(maxHamming >= 0, s"maxHamming must be >= 0 (got $maxHamming)")
+    require(bands > maxHamming,
+      s"pigeonhole recall needs bands > maxHamming " +
+        s"(pinned bands=$bands <= $maxHamming)")
+  }
 
   /** Offline maintenance — the [[DedupIndex.compact]] contract;
     * (band, bkey) sort so probes prune row groups. */
@@ -260,20 +274,23 @@ object FingerprintIndex {
   val SegmentsPerCommit: Int = 4
 
   /** Routing literals for the commit's deterministic band tiling:
-    * `routing(n)(t)` is an int whose Spark Murmur3 hash (seed 42 —
-    * what HashPartitioning applies to an int column) pmods to
-    * partition exactly `t` of `n`, so `repartition(n, lit-mapped
-    * band)` places band-block t in partition t WITHOUT the range
-    * partitioner's sampling job. Found by scanning small ints —
-    * a handful of hash evaluations, once per n. */
+    * `routing(n)(t)` is an int that Spark's own hash partitioning
+    * (`HashPartitioning.partitionIdExpression`, evaluated on the
+    * literal) sends to partition exactly `t` of `n`, so
+    * `repartition(n, lit-mapped band)` places band-block t in
+    * partition t WITHOUT the range partitioner's sampling job. Found
+    * by scanning small ints — a handful of hash evaluations, once
+    * per n. */
   private[graft] def routing(n: Int): Array[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     val out = new Array[Int](n)
     val found = new Array[Boolean](n)
     var remaining = n
     var i = 0
     while (remaining > 0) {
-      val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(i, 42)
-      val t = ((h % n) + n) % n
+      val t = HashPartitioning(Seq(Literal(i)), n).partitionIdExpression
+        .eval().asInstanceOf[Int]
       if (!found(t)) { found(t) = true; out(t) = i; remaining -= 1 }
       i += 1
     }

@@ -84,32 +84,26 @@ object Layout {
       cols: Seq[String],
       outDir: String,
       numFiles: Int,
-      bits: Int = 20): Unit = {
+      bits: Int = 20): Unit =
+    zOrdered(df, cols, numFiles, bits).write.mode("overwrite").parquet(outDir)
+
+  /** The frame [[writeZOrdered]] writes: one z-key projection, a
+    * range shuffle into `numFiles` partitions and an in-partition
+    * sort, with the key dropped. */
+  private[graft] def zOrdered(
+      df: DataFrame,
+      cols: Seq[String],
+      numFiles: Int,
+      bits: Int): DataFrame = {
     require(cols.nonEmpty, "writeZOrdered needs at least one column")
     require(numFiles > 0, s"numFiles must be > 0 (got $numFiles)")
-    val keyed = df.withColumn("_zkey", zvalue(cols.map(col), bits))
-    // OPT-IN double-eval cut (spark.graft.zorder.materializeKeys):
-    // repartitionByRange's boundary sampler evaluates its child once
-    // more than the shuffle does, so the source scan + key compute
-    // run twice per rewrite. Materializing the keyed frame
-    // (localCheckpoint) trades that second scan for one
-    // memory-and-disk copy of the frame — a win when the input scan
-    // is expensive relative to a local copy, but at 100 TB the copy
-    // is a full extra materialization of the corpus on executor
-    // storage, so the default stays off and the knob is a
-    // per-deployment call (probe numbers in OPTIMIZATION_r21.md).
-    val mat = df.sparkSession.conf
-      .getOption("spark.graft.zorder.materializeKeys")
-      .exists(_.toBoolean)
-    val src = if (mat) keyed.localCheckpoint(true) else keyed
-    try {
-      src.repartitionByRange(numFiles, col("_zkey"))
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write
-        .mode("overwrite")
-        .parquet(outDir)
-    } finally if (mat) { src.unpersist(blocking = false); () }
+    // the range sampler evaluates the keyed child once more than the
+    // shuffle does; materializing it first measured slower at sf0.1
+    // (OPTIMIZATION_r21.md) and would copy the whole input at scale
+    df.withColumn("_zkey", zvalue(cols.map(col), bits))
+      .repartitionByRange(numFiles, col("_zkey"))
+      .sortWithinPartitions("_zkey")
+      .drop("_zkey")
   }
 
   /** Append `_zrank`: the z-order key over ARBITRARY orderable

@@ -33,7 +33,8 @@ object Ann {
     * in [-1, 1]), each dim perturbed by hash-derived noise uniform in
     * [-sigma, sigma]. Everything derives from integer arithmetic on
     * `vec_id` — no RNG state, bit-reproducible across runs and
-    * engines — so recall curves measured on it (tools/AnnProbe) and
+    * engines — so recall curves measured on it (BASELINE.md, "ANN
+    * recall-vs-cost curves") and
     * the recall floor pinned on it (AnnIndexSpec) are stable numbers,
     * not seeds. `sigma` sets the overlap regime: ~0.5 is
     * well-separated, ~1.0 heavily overlapping. Cluster of vector v is

@@ -281,8 +281,9 @@ object Quantize {
     // skipping on an id-sorted corpus); above the gate a broadcast
     // semi-join of the shortlist frame — IN planning cost is LINEAR
     // in n and past parquet's inFilterThreshold the pushed predicate
-    // degrades to a useless min/max range (the round-10 InGateProbe
-    // curve, same gates as the incremental text fetch)
+    // degrades to a useless min/max range (the round-10 IN-literal
+    // gate curve in BASELINE.md, same gates as the incremental text
+    // fetch)
     val ids = short.limit(maxInLiteralIds + 1).collect().map(_.get(0))
     val pruned =
       if (ids.length <= maxInLiteralIds)

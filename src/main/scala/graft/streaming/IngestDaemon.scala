@@ -627,8 +627,9 @@ final class IngestDaemon private (
       // column and MATERIALIZED once before the next tier consumes
       // it — downstream tiers, the stats tiers and the seen append
       // otherwise re-run the ENTIRE upstream probe lineage per
-      // consumer (the six-store DaemonProbe measured the un-pinned
-      // chain at ~2x the four-store cost from exactly this). The pin
+      // consumer (the un-pinned six-store chain measured ~2x the
+      // four-store cost from exactly this; BASELINE.md, "Six-store
+      // composed daemon"). The pin
       // is a STORE-BACKED parquet, not localCheckpoint: checkpoint
       // blocks are executor-local and unrecoverable on executor
       // death, so on a preemptible cluster a lost block strands the

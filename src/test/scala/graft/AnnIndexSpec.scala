@@ -143,7 +143,7 @@ class AnnIndexSpec extends SparkSpec {
     // just the WRONG rows. On the deterministic clustered corpus
     // (the geometry real embedding corpora have; the isotropic
     // embeddings fixture admits no high-recall config at all — see
-    // tools/AnnProbe and BASELINE.md), the defaults measure ≈0.97–1.0,
+    // BASELINE.md), the defaults measure ≈0.97–1.0,
     // so a 0.9 floor trips on broken math, not on noise — the corpus
     // is bit-deterministic, so the measured recall is a CONSTANT.
     val n = 4000L

@@ -6,8 +6,8 @@ package graft
   * static plan shows SMJ — the claim was that AQE converts the
   * small-side joins to broadcast AT RUNTIME. This spec executes each
   * query and asserts the FINAL adaptive plan contains no
-  * SortMergeJoin (AqeConvProbe measured SMJ=0 / BHJ>0 on sf0.001 and
-  * sf0.01), so a regression that silently pins the static SMJ shape
+  * SortMergeJoin (OPTIMIZATION_r21.md measured SMJ=0 / BHJ>0 on
+  * sf0.001 and sf0.01), so a regression that silently pins the static SMJ shape
   * at runtime fails loudly instead of surviving as a justified flag.
   */
 class AqePlanSpec extends SparkSpec {

@@ -41,6 +41,19 @@ class DocsSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"COVERAGE.md has no row mentioning: $missing")
   }
 
+  test("every README runMain target is a compiled main") {
+    val targets = """runMain (graft\.[\w.]+)""".r
+      .findAllMatchIn(read("README.md")).map(_.group(1)).toList.distinct
+    assert(targets.nonEmpty, "README names no runMain target")
+    val missing = targets.filterNot { n =>
+      try java.lang.reflect.Modifier.isStatic(
+        Class.forName(n, false, getClass.getClassLoader)
+          .getMethod("main", classOf[Array[String]]).getModifiers)
+      catch { case _: ReflectiveOperationException => false }
+    }
+    assert(missing.isEmpty, s"README runs mains that do not exist: $missing")
+  }
+
   test("README test count matches the registered suite total") {
     val classesDir = Paths.get("target/scala-2.13/test-classes")
     assume(Files.isDirectory(classesDir), "compiled test classes not found")

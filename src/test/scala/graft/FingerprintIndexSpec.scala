@@ -102,6 +102,27 @@ class FingerprintIndexSpec extends SparkSpec {
     assert(FingerprintIndex.open(spark, dir).bands == 4)
   }
 
+  test("ingest and start refuse bands <= maxHamming") {
+    val idx = FingerprintIndex.open(spark, tmpDir("fpidx-pigeon-"),
+      bands = 4, bits = 32)
+    intercept[IllegalArgumentException](
+      idx.ingest("b", fp.limit(10), "h", "doc_id", maxHamming = 4))
+    intercept[IllegalArgumentException](
+      idx.start(fp.limit(10), "h", "doc_id", tmpDir("fpidx-pigeon-ckpt-"),
+        maxHamming = 4))
+  }
+
+  test("routing(n)(t) lands on partition t under Spark's hash partitioning") {
+    Seq(1, 4, 7, 32).foreach { n =>
+      val route = FingerprintIndex.routing(n)
+      (0 until n).foreach { t =>
+        val parts = spark.range(4).repartition(n, lit(route(t)))
+          .select(spark_partition_id()).collect().map(_.getInt(0)).toSet
+        assert(parts == Set(t), s"n=$n: routing(n)($t) landed on $parts")
+      }
+    }
+  }
+
   test("ingest lays segments out range-tiled and sorted (probe prunes between compacts)") {
     import graft.storage.FileIO
     import scala.jdk.CollectionConverters._

@@ -265,8 +265,8 @@ class PipelineSpec extends SparkSpec {
     // above maxInLiteralIds (forced to 0 here) but under the fetch
     // gate, the candidate ids must prune the corpus text scan via a
     // BROADCAST semi-join of the candidate-id frame — O(1) plan size
-    // instead of an n-ary IN literal (round-10 InGateProbe: at n=100k
-    // the IN plan costs 1.24 s planning / 2.99 s exec vs 0.46 s for
+    // instead of an n-ary IN literal (round-10 IN-literal gate probe:
+    // at n=100k the IN plan costs 1.24 s planning / 2.99 s exec vs 0.46 s for
     // the semi-join) — and the result must be identical
     val corpus = docs.where(col("doc_id") < 250)
     val fresh = docs.where(col("doc_id") >= 250)
@@ -295,8 +295,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("incremental LSH: forced text-fetch TOP tier equals the pushed tiers") {
-    // regression (r19, found by FetchTierProbe): `gathered` is
-    // TRUNCATED at maxPushedFetchIds+1, and the tier selection used
+    // regression (r19, found by the candidate-fetch probe): `gathered`
+    // is TRUNCATED at maxPushedFetchIds+1, and the tier selection used
     // to test `gathered.length <= maxInLiteralIds` FIRST — so a gate
     // below maxInLiteralIds sent a truncated 2-id gather into the
     // IN-literal tier with an incomplete candidate list and silently

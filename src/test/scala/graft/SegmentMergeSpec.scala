@@ -91,8 +91,9 @@ class SegmentMergeSpec extends SparkSpec {
     // exactly this shape at sf0.1/local[32]: the count and write
     // executions AQE-coalesced the sort's shuffle differently and the
     // offset inner join dropped the unmatched partitions. r21 pins
-    // one evaluation (localCheckpoint for runtime-partitioned inputs)
-    // and verifies density before the commit.
+    // one evaluation (a single shared queryExecution.toRdd lineage for
+    // runtime-partitioned inputs) and the pre-commit dense-seq gate
+    // verifies density before the commit.
     val dir = tmpDir("sm-sorted-") + "/log"
     val log = ParquetLog.open(spark, dir, LongType)
     val sorted = spark.range(0L, 60000L)
