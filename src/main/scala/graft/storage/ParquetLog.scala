@@ -4,6 +4,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -121,11 +122,21 @@ final class ParquetLog private (
   /** Append a batch of values (single `value` column) and return the
     * first assigned sequence number.
     *
-    * Dense-seq assignment: `monotonically_increasing_id` is NOT
-    * contiguous, so we use the two-pass zipWithIndex discipline (count
-    * partition sizes, then stamp `base + partitionOffset + i`). The
-    * extra pass is the price of dense seqs; it parallelizes across the
-    * cluster and only the manifest commit is serialized.
+    * Dense-seq assignment takes one of two paths:
+    *   - DRIVER PATH, for a small batch already on the driver (a local
+    *     relation under only deterministic projections/filters, within
+    *     the small-append cut `spark.graft.smallAppendCoalesceMaxBytes`
+    *     and `spark.graft.segmentTargetFileBytes`): the rows are
+    *     stamped `base + i` on the driver and written as one segment
+    *     through Spark's own parquet writer — no Spark job, the
+    *     in-process append of offset2/log.go:425-462.
+    *   - JOB PATH, for everything else: `monotonically_increasing_id`
+    *     is NOT contiguous, so we use the two-pass zipWithIndex
+    *     discipline (count partition sizes, then stamp
+    *     `base + partitionOffset + i`). The extra pass is the price of
+    *     dense seqs; it parallelizes across the cluster.
+    * Either way only the manifest commit is serialized, and the
+    * dense-seq gate verifies the staged files' footers before it.
     */
   def append(values: DataFrame): Long = synchronized {
     appendInternal(values, None)
@@ -192,30 +203,13 @@ final class ParquetLog private (
       manifest.segments.isEmpty || vType == valueType,
       s"value type $vType does not match log's $valueType"
     )
-    val schema = StructType(
-      Seq(
-        StructField("seq", LongType, nullable = false),
-        StructField("value", vType, nullable = true),
-        StructField("nulled", BooleanType, nullable = false)
-      )
-    )
-    // Dense-seq stamping WITHOUT leaving Tungsten: the old
-    // rdd.zipWithIndex discipline deserialized every value to a Row
-    // and re-encoded it through createDataFrame's per-row converters
-    // — for struct values that round-trip dominated append cost
-    // (guide §1.4's rdd-conversion warning, measured on the r20
-    // append_events leg). Same two passes, native form: count rows
-    // per input partition (job 1), broadcast the cumulative offsets,
-    // stamp `base + offset(pid) + withinPartitionCounter` in the
-    // write job. monotonically_increasing_id is partitionId·2^33 +
-    // counter, so the within-partition counter recovers by
-    // subtraction; both passes plan the same deterministic scan —
-    // the exact property zipWithIndex relied on.
     val src0 = values.select(col(vCol).as("value"))
-    // tiny-batch task-floor cut (see smallAppendCoalesceMaxBytes):
-    // applied before BOTH passes, so count and stamp plan the same
-    // single-partition scan — the dense-seq gate below still verifies
-    val src1 = {
+    // tiny-batch cut (see smallAppendCoalesceMaxBytes): a tiny batch
+    // whose rows are on the driver takes the driver path; any other
+    // is coalesced before BOTH job passes, so count and stamp plan the
+    // same single-partition scan — the dense-seq gate below verifies
+    // either way
+    val small = {
       // analyzed-plan MAX-node stats, not optimizedPlan — see the
       // TableStore append gate: an optimizer pass per append is real
       // per-commit cost, and the max-node estimate keeps the cut off
@@ -223,104 +217,28 @@ final class ParquetLog private (
       lazy val est = TableStore.maxPlanEstimate(src0)
       // tiny AND justifying a single target file (a deliberately tiny
       // per-file target means "never fold" — honor it here too)
-      if (segmentTargetFileBytes > 0 && smallAppendCoalesceMaxBytes > 0 &&
+      segmentTargetFileBytes > 0 && smallAppendCoalesceMaxBytes > 0 &&
         est <= BigInt(smallAppendCoalesceMaxBytes) &&
-        est <= BigInt(segmentTargetFileBytes)) src0.coalesce(1)
-      else src0
+        est <= BigInt(segmentTargetFileBytes)
     }
-    // PIN ONE EVALUATION SHAPE for both stamping passes. They are
-    // separate actions, and an input whose partitioning is decided at
-    // RUNTIME — a range exchange's sampled boundaries, an
-    // AQE-coalesced shuffle — can legitimately partition DIFFERENTLY
-    // across separate query executions; the old rdd.zipWithIndex was
-    // immune only because both its jobs shared one RDD lineage. NOT
-    // theoretical: the r20 two-execution shape SILENTLY COMMITTED
-    // 31,198 of 100,000 rows on an orderBy-fed append at
-    // sf0.1/local[32], deterministically (the count execution's
-    // AQE-coalesced pids disagreed with the write execution's, and
-    // the offset inner join dropped the unmatched partitions) — found
-    // when the r21 integrity gate below turned it loud.
-    //
-    // Two pinned forms, chosen by the input's plan:
-    //  - DETERMINISTIC NARROW (a scan under only deterministic
-    //    projections/filters — the common micro-batch shape): the
-    //    two-execution SQL form is safe (partitioning comes from the
-    //    file listing) and its count pass prunes every column, so the
-    //    count job is metadata-cheap. Kept.
-    //  - RUNTIME-PARTITIONED (sort/repartition/aggregate/join/limit
-    //    in the lineage): both passes run over ONE toRdd lineage —
-    //    the adaptive plan finalizes once, its shuffle stages execute
-    //    once and BOTH jobs reuse that shuffle output with identical
-    //    partitioning (zipWithIndex's safety), while the stamping
-    //    stays in Tungsten (InternalRow, no Row codec round-trip —
-    //    the r20 rewrite's point, now without its divergence hole).
-    val narrow = ParquetLog.deterministicNarrow(src1.queryExecution.analyzed)
-    val (df, acc) =
-      if (narrow) {
-        val partCounts = src1
-          .groupBy(spark_partition_id().as("_pid"))
-          .agg(count(lit(1)).as("_n"))
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1)))
-          .sortBy(_._1)
-        var acc0 = 0L
-        val offsets = partCounts.map { case (pid, n) =>
-          val o = (pid, acc0); acc0 += n; o
+    // DRIVER PATH: a small batch that already sits on the driver is
+    // stamped and staged here, with no Spark job (see append)
+    val driverRows = if (small) ParquetLog.driverResident(src0) else None
+    val (segs, acc) = driverRows match {
+      case Some(rows) =>
+        val stampedSchema = stampedLayout(src0.schema.head)
+        val stamped = rows.iterator.zipWithIndex.map { case (row, i) =>
+          InternalRow(base + i, row.get(0, vType), false)
         }
-        val offDf = org.apache.spark.sql.functions.broadcast(
-          spark.createDataFrame(
-            java.util.Arrays.asList(
-              offsets.map(o => Row(o._1, o._2)): _*),
-            StructType(Seq(
-              StructField("_pid", org.apache.spark.sql.types.IntegerType,
-                nullable = false),
-              StructField("_off", LongType, nullable = false)))))
-        val stamped = src1
-          .select(col("value"), spark_partition_id().as("_pid"),
-            monotonically_increasing_id().as("_mid"))
-          .join(offDf, Seq("_pid"))
-          .select(
-            (lit(base) + col("_off") +
-              (col("_mid") - col("_pid").cast("long") * lit(1L << 33)))
-              .as("seq"),
-            col("value"),
-            lit(false).as("nulled"))
-        (stamped, acc0)
-      } else {
-        val rdd = src1.queryExecution.toRdd
-        val counts = rdd
-          .mapPartitionsWithIndex((pid, it) => {
-            var n = 0L
-            while (it.hasNext) { it.next(); n += 1 }
-            Iterator((pid, n))
-          }, preservesPartitioning = true)
-          .collect().sortBy(_._1).map(_._2)
-        var acc0 = 0L
-        val offsets = counts.map { n => val o = acc0; acc0 += n; o }
-        val bc = spark.sparkContext.broadcast(offsets)
-        val vTypeLocal = vType
-        val baseLocal = base
-        val stampedRdd = rdd.mapPartitionsWithIndex({ (pid, it) =>
-          var seqNo = baseLocal + bc.value(pid)
-          it.map { row =>
-            val out = new org.apache.spark.sql.catalyst.expressions
-              .GenericInternalRow(3)
-            out.update(0, seqNo)
-            out.update(1, row.get(0, vTypeLocal))
-            out.update(2, false)
-            seqNo += 1
-            // the inner value may view a reused Unsafe buffer: every
-            // consumer below (sortWithinPartitions' unsafe projection,
-            // the parquet writer's) copies per row before advancing
-            out: org.apache.spark.sql.catalyst.InternalRow
-          }
-        }, preservesPartitioning = true)
-        (org.apache.spark.sql.graftshim.InternalRows.toDF(
-          spark, stampedRdd, schema), acc0)
-      }
-    val segs = writeSegments(df)
+        (publishSegments(stageOnDriver(stamped, stampedSchema),
+          stampedSchema), rows.length.toLong)
+      case None =>
+        val (df, n) =
+          stampByJob(if (small) src0.coalesce(1) else src0, base, vType)
+        (writeSegments(df), n)
+    }
     // DENSE-SEQ INTEGRITY GATE (pre-commit, driver-side arithmetic
-    // over footer stats writeSegments already read): the two-pass
+    // over footer stats publishSegments already read): the two-pass
     // stamping assumes both jobs plan the same deterministic scan —
     // the same assumption rdd.zipWithIndex made, but here it is
     // VERIFIED instead of trusted. If the row-to-partition assignment
@@ -329,7 +247,8 @@ final class ParquetLog private (
     // offsets no longer match partition counts and seqs would collide
     // or gap — this refuses the append LOUDLY before the manifest
     // commit, so the positional point-read math and the fsck density
-    // check can never be silently corrupted.
+    // check can never be silently corrupted. The driver path's
+    // footers pass the same gate: its stamp is checked, not trusted.
     locally {
       val sorted = segs.sortBy(_.minSeq)
       var expect = base
@@ -372,6 +291,113 @@ final class ParquetLog private (
     base
   }
 
+  /** JOB PATH stamping: `(seq, value, nulled)` rows of `src1` stamped
+    * `base …` by two Spark passes (count, then stamp in the write
+    * job), plus the row count the count pass saw. */
+  private def stampByJob(
+      src1: DataFrame,
+      base: Long,
+      vType: DataType
+  ): (DataFrame, Long) = {
+    // Dense-seq stamping WITHOUT leaving Tungsten: the old
+    // rdd.zipWithIndex discipline deserialized every value to a Row
+    // and re-encoded it through createDataFrame's per-row converters
+    // — for struct values that round-trip dominated append cost
+    // (guide §1.4's rdd-conversion warning, measured on the r20
+    // append_events leg). Same two passes, native form: count rows
+    // per input partition (job 1), broadcast the cumulative offsets,
+    // stamp `base + offset(pid) + withinPartitionCounter` in the
+    // write job. monotonically_increasing_id is partitionId·2^33 +
+    // counter, so the within-partition counter recovers by
+    // subtraction; both passes plan the same deterministic scan —
+    // the exact property zipWithIndex relied on.
+    //
+    // PIN ONE EVALUATION SHAPE for both stamping passes. They are
+    // separate actions, and an input whose partitioning is decided at
+    // RUNTIME — a range exchange's sampled boundaries, an
+    // AQE-coalesced shuffle — can legitimately partition DIFFERENTLY
+    // across separate query executions; the old rdd.zipWithIndex was
+    // immune only because both its jobs shared one RDD lineage. NOT
+    // theoretical: the r20 two-execution shape SILENTLY COMMITTED
+    // 31,198 of 100,000 rows on an orderBy-fed append at
+    // sf0.1/local[32], deterministically (the count execution's
+    // AQE-coalesced pids disagreed with the write execution's, and
+    // the offset inner join dropped the unmatched partitions) — found
+    // when the r21 integrity gate below turned it loud.
+    //
+    // Two pinned forms, chosen by the input's plan:
+    //  - DETERMINISTIC NARROW (a scan under only deterministic
+    //    projections/filters — the common micro-batch shape): the
+    //    two-execution SQL form is safe (partitioning comes from the
+    //    file listing) and its count pass prunes every column, so the
+    //    count job is metadata-cheap. Kept.
+    //  - RUNTIME-PARTITIONED (sort/repartition/aggregate/join/limit
+    //    in the lineage): both passes run over ONE toRdd lineage —
+    //    the adaptive plan finalizes once, its shuffle stages execute
+    //    once and BOTH jobs reuse that shuffle output with identical
+    //    partitioning (zipWithIndex's safety), while the stamping
+    //    stays in Tungsten (InternalRow, no Row codec round-trip —
+    //    the r20 rewrite's point, now without its divergence hole).
+    if (ParquetLog.deterministicNarrow(src1.queryExecution.analyzed)) {
+      val partCounts = src1
+        .groupBy(spark_partition_id().as("_pid"))
+        .agg(count(lit(1)).as("_n"))
+        .collect()
+        .map(r => (r.getInt(0), r.getLong(1)))
+        .sortBy(_._1)
+      var acc0 = 0L
+      val offsets = partCounts.map { case (pid, n) =>
+        val o = (pid, acc0); acc0 += n; o
+      }
+      val offDf = org.apache.spark.sql.functions.broadcast(
+        spark.createDataFrame(
+          java.util.Arrays.asList(
+            offsets.map(o => Row(o._1, o._2)): _*),
+          StructType(Seq(
+            StructField("_pid", org.apache.spark.sql.types.IntegerType,
+              nullable = false),
+            StructField("_off", LongType, nullable = false)))))
+      val stamped = src1
+        .select(col("value"), spark_partition_id().as("_pid"),
+          monotonically_increasing_id().as("_mid"))
+        .join(offDf, Seq("_pid"))
+        .select(
+          (lit(base) + col("_off") +
+            (col("_mid") - col("_pid").cast("long") * lit(1L << 33)))
+            .as("seq"),
+          col("value"),
+          lit(false).as("nulled"))
+      (stamped, acc0)
+    } else {
+      val rdd = src1.queryExecution.toRdd
+      val counts = rdd
+        .mapPartitionsWithIndex((pid, it) => {
+          var n = 0L
+          while (it.hasNext) { it.next(); n += 1 }
+          Iterator((pid, n))
+        }, preservesPartitioning = true)
+        .collect().sortBy(_._1).map(_._2)
+      var acc0 = 0L
+      val offsets = counts.map { n => val o = acc0; acc0 += n; o }
+      val bc = spark.sparkContext.broadcast(offsets)
+      val stampedRdd = rdd.mapPartitionsWithIndex({ (pid, it) =>
+        var seqNo = base + bc.value(pid)
+        it.map { row =>
+          // a non-primitive value (struct, string, array, map) may view
+          // the scan's reused Unsafe buffer: copy it as it is stamped,
+          // so every stamped row stays valid after the iterator
+          // advances, whatever its consumer buffers
+          val out: InternalRow = InternalRow(
+            seqNo, InternalRow.copyValue(row.get(0, vType)), false)
+          seqNo += 1
+          out
+        }
+      }, preservesPartitioning = true)
+      (org.apache.spark.sql.graftshim.InternalRows.toDF(spark, stampedRdd,
+        stampedLayout(StructField("value", vType, nullable = true))), acc0)
+    }
+  }
+
   /** Commit then publish: the in-memory manifest only advances after
     * the disk commit succeeds, so a stale handle that loses the CAS
     * (ConcurrentWriteException) never serves uncommitted segments; its
@@ -395,13 +421,59 @@ final class ParquetLog private (
     val tmp = FileIO.join(dir, s"tmp-${UUID.randomUUID()}")
     df.sortWithinPartitions("seq")
       .write
-      // small pages (row-count-bounded) make the column index precise:
-      // a point read decodes ONE ~1k-row page instead of a whole
-      // 20k-row default page — the log is a point-read-optimized store
-      // and pays a negligible scan/size cost for it
-      .option("parquet.page.row.count.limit", "1024")
+      .options(SegmentWriteOptions)
       .mode(SaveMode.Overwrite)
       .parquet(tmp)
+    publishSegments(tmp, df.schema)
+  }
+
+  /** The driver path's staging half: `rows` (already seq-stamped, in
+    * seq order, laid out as `schema`) written as ONE parquet file into
+    * a fresh `tmp-<uuid>` staging dir, and the dir returned. The file
+    * comes from Spark's own parquet output-writer factory, on the
+    * driver: the write support, codec, footer metadata
+    * (`org.apache.spark.sql.parquet.row.metadata`, writer version),
+    * [[SegmentWriteOptions]] and `part-` file name of a write job over
+    * the same rows, with no job. */
+  private def stageOnDriver(
+      rows: Iterator[InternalRow],
+      schema: StructType
+  ): String = {
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.internal.SQLConf
+    val tmp = FileIO.join(dir, s"tmp-${UUID.randomUUID()}")
+    val state = spark.sessionState
+    // the writer reads session settings (rebase modes, timestamp
+    // type) through SQLConf.get; a task sees the submitting session's
+    // conf, so the driver pins the same one
+    try SQLConf.withExistingConf(state.conf) {
+      val job = Job.getInstance(
+        state.newHadoopConfWithOptions(SegmentWriteOptions))
+      job.setOutputKeyClass(classOf[Void])
+      job.setOutputValueClass(classOf[InternalRow])
+      val factory = new ParquetFileFormat()
+        .prepareWrite(spark, job, SegmentWriteOptions, schema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
+      val out = factory.newInstance(
+        FileIO.join(tmp, s"part-00000-${UUID.randomUUID()}" +
+          factory.getFileExtension(ctx)),
+        schema, ctx)
+      try rows.foreach(out.write)
+      finally out.close()
+    } catch {
+      case e: Throwable => FsckSweep.deleteRecursively(tmp); throw e
+    }
+    tmp
+  }
+
+  /** The publish half of every segment write: fold the part files
+    * staged under `tmp` (laid out as `schema`) when the staged bytes
+    * justify fewer files, move them into data/ under their seq-range
+    * names, and return their manifest entries. */
+  private def publishSegments(tmp: String, schema: StructType): List[Segment] = {
     // Small-append coalescing (the TableStore.writeSegmentFiles
     // discipline): a small batch arriving with N partitions writes N
     // tiny seq-range files, and a log advanced by thousands of small
@@ -464,11 +536,11 @@ final class ParquetLog private (
                   FileIO.join(tmp2, f"part-$i%05d.parquet"))
               }
           } else
-            spark.read.schema(df.schema).parquet(tmp)
+            spark.read.schema(schema).parquet(tmp)
               .repartitionByRange(target.toInt, col("seq"))
               .sortWithinPartitions("seq")
               .write
-              .option("parquet.page.row.count.limit", "1024")
+              .options(SegmentWriteOptions)
               .mode(SaveMode.Overwrite)
               .parquet(tmp2)
           FsckSweep.deleteRecursively(tmp)
@@ -880,6 +952,43 @@ object ParquetLog {
       case a: SubqueryAlias => deterministicNarrow(a.child)
       case r: Repartition if !r.shuffle => deterministicNarrow(r.child)
       case _ => false
+    }
+  }
+
+  /** The `(seq, value, nulled)` layout of stamped rows around `value`. */
+  private def stampedLayout(value: StructField): StructType = StructType(Seq(
+    StructField("seq", LongType, nullable = false),
+    value,
+    StructField("nulled", BooleanType, nullable = false)))
+
+  /** Parquet writer options of every segment write, job or driver:
+    * small pages (row-count-bounded) make the column index precise —
+    * a point read decodes ONE ~1k-row page instead of a whole 20k-row
+    * default page. The log is a point-read-optimized store and pays a
+    * negligible scan/size cost for it. */
+  private val SegmentWriteOptions: Map[String, String] =
+    Map("parquet.page.row.count.limit" -> "1024")
+
+  /** The rows of `src` when it is already resident on the driver: its
+    * analyzed plan is a (non-streaming) local relation under only
+    * deterministic projections/filters, and the optimizer folded it to
+    * a bare local table scan, whose rows come back with no Spark job.
+    * None for anything else (file scans, RDDs, shuffles, streams, or a
+    * projection the optimizer could not fold), which takes the job
+    * path. */
+  private def driverResident(src: DataFrame): Option[Array[InternalRow]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    val analyzed = src.queryExecution.analyzed
+    val local = deterministicNarrow(analyzed) &&
+      analyzed.collectLeaves().forall {
+        case l: LocalRelation => !l.isStreaming
+        case _ => false
+      }
+    if (!local) None
+    else src.queryExecution.executedPlan match {
+      case scan: LocalTableScanExec => Some(scan.executeCollect())
+      case _ => None
     }
   }
 

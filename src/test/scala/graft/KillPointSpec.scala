@@ -117,36 +117,87 @@ abstract class KillPointContract extends SparkSpec {
       finally FaultPoints.clear()
 
       // crash model: discard the handle, reopen from disk
-      val re = noMerge(ParquetLog.open(spark, dir, IntegerType))
-      assert(re.seq == 9L, s"reopened seq after $point crash")
-      assert(drain(re) == baseline, "committed reads changed by a crashed append")
+      recoversFromAppendCrash(point, baseline,
+        noMerge(ParquetLog.open(spark, dir, IntegerType)))
+    }
 
-      // every append kill point leaves DETECTABLE litter (orphan tmp
-      // dir, orphan data file, or torn manifest tmp) — EXCEPT a
-      // manifest PUT crash on the object-store leg, whose
-      // all-or-nothing publish leaves nothing (the in-process guard
-      // already swept the fresh segments) ...
-      val reported = re.checkConsistency(repair = false)
-      if (point == "manifest.tmpWritten" && !manifestTmpLitter)
-        assert(reported.isEmpty,
-          s"direct-PUT manifest crash left litter: $reported")
-      else
-        assert(reported.nonEmpty, s"$point crash left no fsck-visible litter")
-      // ... and none of it is a manifest-level problem (no gaps, no
-      // missing committed segments — so repair never truncates data)
-      assert(!reported.exists(_.contains("missing segment")), reported.toString)
-      assert(!reported.exists(_.contains("gap/overlap")), reported.toString)
+  /** After an append of `10 until 25` over `baseline` (seqs 0..9) was
+    * killed at `point`: the reopened log reads the pre-op state, fsck
+    * reports the litter and repair cleans it without touching committed
+    * data, and the replayed append lands on the same seqs. Returns the
+    * Spark jobs the replay ran. */
+  private def recoversFromAppendCrash(
+      point: String,
+      baseline: Seq[(Long, Int)],
+      re: ParquetLog): Int = {
+    import spark.implicits._
+    assert(re.seq == 9L, s"reopened seq after $point crash")
+    assert(drain(re) == baseline, "committed reads changed by a crashed append")
 
-      re.checkConsistency(repair = true, minAgeMs = 0L)
-      assert(re.checkConsistency(repair = false).isEmpty,
-        "fsck not clean after repair")
-      assert(drain(re) == baseline, "repair touched committed data")
+    // every append kill point leaves DETECTABLE litter (orphan tmp
+    // dir, orphan data file, or torn manifest tmp) — EXCEPT a
+    // manifest PUT crash on the object-store leg, whose
+    // all-or-nothing publish leaves nothing (the in-process guard
+    // already swept the fresh segments) ...
+    val reported = re.checkConsistency(repair = false)
+    if (point == "manifest.tmpWritten" && !manifestTmpLitter)
+      assert(reported.isEmpty,
+        s"direct-PUT manifest crash left litter: $reported")
+    else
+      assert(reported.nonEmpty, s"$point crash left no fsck-visible litter")
+    // ... and none of it is a manifest-level problem (no gaps, no
+    // missing committed segments — so repair never truncates data)
+    assert(!reported.exists(_.contains("missing segment")), reported.toString)
+    assert(!reported.exists(_.contains("gap/overlap")), reported.toString)
 
-      // replay lands on the SAME seqs with the same values
-      val base = re.appendValues(10 until 25)
-      assert(base == 10L, "replayed append did not resume at the crashed base")
-      assert(drain(re) == (0 until 25).map(i => (i.toLong, i)))
-      assert(re.checkConsistency(repair = false).isEmpty)
+    re.checkConsistency(repair = true, minAgeMs = 0L)
+    assert(re.checkConsistency(repair = false).isEmpty,
+      "fsck not clean after repair")
+    assert(drain(re) == baseline, "repair touched committed data")
+
+    // replay lands on the SAME seqs with the same values
+    var base = -1L
+    val jobs = jobsDuring { base = re.appendValues(10 until 25) }
+    assert(base == 10L, "replayed append did not resume at the crashed base")
+    assert(drain(re) == (0 until 25).map(i => (i.toLong, i)))
+    assert(re.checkConsistency(repair = false).isEmpty)
+    jobs
+  }
+
+  // ---------------------------------------------------------------
+  // append on the DRIVER PATH (merge left enabled, a local batch): it
+  // reaches the same publish-half fault points and commit as the job
+  // path, with no Spark job — the crash windows are the same, and so
+  // must be the recovery
+  // ---------------------------------------------------------------
+  private val driverAppendKills = Seq(
+    "log.segments.tmpWritten", // staged file written, nothing moved
+    "log.segments.beforeMove", // the one move about to happen
+    "log.segments.moved", // moved into data/, tmp not yet swept
+    "log.segments.allMoved", // all moved, tmp not yet swept
+    "log.append.preCommit", // file in place, manifest not committed
+    "manifest.tmpWritten" // torn manifest: tmp written, not renamed
+  )
+
+  for (point <- driverAppendKills)
+    test(s"[$tag] driver-path append killed at $point: reopen=pre-op, fsck repairs, replay exact") {
+      import spark.implicits._
+      val dir = storeDir("kp-dappend")
+      val log = ParquetLog.open(spark, dir, IntegerType)
+      assert(jobsDuring(log.appendValues(0 until 10)) == 0,
+        "the baseline append left the driver path")
+      val baseline = drain(log)
+      assert(baseline == (0 until 10).map(i => (i.toLong, i)))
+
+      killAt(point)
+      val jobs =
+        try jobsDuring(expectInjected(log.appendValues(10 until 25)))
+        finally FaultPoints.clear()
+      assert(jobs == 0, s"the killed append ran $jobs Spark jobs: not the driver path")
+
+      val replayJobs = recoversFromAppendCrash(point, baseline,
+        ParquetLog.open(spark, dir, IntegerType))
+      assert(replayJobs == 0, "the replayed append left the driver path")
     }
 
   // ---------------------------------------------------------------

@@ -285,27 +285,8 @@ class LayoutSpec extends SparkSpec {
       (col("id") % 83).cast("double").as("c"),
       (col("id") % 79).cast("double").as("d"))
       .localCheckpoint(true) // isolate the quantile pass from range's jobs
-    def jobsOf(body: => Unit): Int = {
-      Thread.sleep(300) // let previous async job events drain
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        val deadline = System.nanoTime() + 5000000000L
-        while (jobs.get() < 1 && System.nanoTime() < deadline)
-          Thread.sleep(20)
-        Thread.sleep(300) // catch any trailing extra jobs
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
-    val one = jobsOf(Layout.withZRank(df, Seq("a"), bits = 4))
-    val four = jobsOf(Layout.withZRank(df, Seq("a", "b", "c", "d"), bits = 4))
+    val one = jobsDuring(Layout.withZRank(df, Seq("a"), bits = 4))
+    val four = jobsDuring(Layout.withZRank(df, Seq("a", "b", "c", "d"), bits = 4))
     // the multi-column approxQuantile overload shares one GK scan —
     // a d-dim ranked layout must not pay d corpus reads
     assert(one >= 1, s"1-dim pass launched no job?")

@@ -104,6 +104,34 @@ class SegmentMergeSpec extends SparkSpec {
     assert(log.toDF.count() == 60000L)
   }
 
+  test("append of an orderBy-fed STRUCT-valued frame stamps every value " +
+      "intact — the shared-lineage stamp copies what it stamps") {
+    // a struct value read from an unsafe row views the scan's reused
+    // buffer; the stamp copies it, so rows stay exact whatever
+    // consumes them downstream
+    val dir = tmpDir("sm-sorted-struct-") + "/log"
+    val sorted = spark.range(0L, 20000L)
+      .select((col("id") * 7919L % 20000L).as("k"))
+      .orderBy("k")
+      .select(struct(col("k"), concat(lit("s"), col("k").cast("string"))
+        .as("name"), array(col("k"), col("k") + 1L).as("pair")).as("value"))
+    val log = ParquetLog.open(spark, dir, sorted.schema.head.dataType)
+    log.append(sorted)
+    assert(log.seq == 19999L, s"append truncated: maxSeq ${log.seq}")
+    val rows = log.toDF.select("seq", "value.k", "value.name", "value.pair")
+      .collect()
+    assert(rows.length == 20000)
+    rows.foreach { r =>
+      val k = r.getLong(1)
+      assert(r.getString(2) == s"s$k" && r.getSeq[Long](3) == Seq(k, k + 1),
+        s"seq ${r.getLong(0)} carries a torn value $r")
+    }
+    assert(rows.map(_.getLong(1)).sorted.toSeq == (0L until 20000L),
+      "every struct must land exactly once")
+    // an orderBy input stamps in sort order
+    assert(rows.sortBy(_.getLong(0)).map(_.getLong(1)).toSeq == (0L until 20000L))
+  }
+
   test("segmentTargetFileBytes = 0 is merge-free mode on both stores") {
     spark.conf.set("spark.graft.segmentTargetFileBytes", "0")
     try {
