@@ -472,9 +472,7 @@ final case class LogSegmentPartition(
   * the row reader — the A/B lever for benches and a safety valve. */
 private[sources] object ColumnarOpt {
   def enabled: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.columnar.enabled", "true")
-      .toBoolean
+    graft.core.GraftConf.boolean("spark.graft.columnar.enabled", true)
 }
 
 private[sources] object SegmentPacking {

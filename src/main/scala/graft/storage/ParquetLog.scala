@@ -56,8 +56,7 @@ final class ParquetLog private (
   // in [[writeSegments]] — same knob and default as
   // [[TableStore]]'s (`spark.graft.segmentTargetFileBytes`)
   private val segmentTargetFileBytes: Long =
-    spark.conf.getOption("spark.graft.segmentTargetFileBytes")
-      .map(_.toLong).getOrElse(32L << 20)
+    GraftConf.long(spark, "spark.graft.segmentTargetFileBytes", 32L << 20)
 
   // staged-bytes ceiling for the DRIVER-SIDE row-group-copy merge
   // (same knob and default as [[TableStore]]'s): under it the
@@ -66,23 +65,21 @@ final class ParquetLog private (
   // rewrite is worth its scheduling cost and the driver never
   // streams large byte volumes through itself (guide §5)
   private val segmentMergeDriverMaxBytes: Long =
-    spark.conf.getOption("spark.graft.segmentMergeDriverMaxBytes")
-      .map(_.toLong).getOrElse(128L << 20)
+    GraftConf.long(spark, "spark.graft.segmentMergeDriverMaxBytes", 128L << 20)
 
   // plan-estimate ceiling under which an append is coalesced to one
-  // task BEFORE the two stamping passes (same knob and max-node
+  // task BEFORE its count and write jobs (same knob and max-node
   // semantics as [[TableStore]]'s small-append task-floor cut): a
-  // small batch then pays 1+1 tasks instead of 2×N, stages ONE file
-  // (no post-write merge, no per-file footer reads), and a
-  // single-partition append cannot even in principle diverge between
-  // the passes. The LOG's default is 8 MB where the table store's is
-  // 1 MB: a log append's post-shuffle work is a per-byte-cheap
-  // sort-merge + encode (50 ms single-task at this ceiling), while
-  // the table stores commit pump AGGREGATIONS whose serialized
-  // compute is the regression the 1 MB default exists to avoid.
+  // small batch then pays 1+1 tasks instead of 2×N and stages ONE
+  // file (no post-write merge, no per-file footer reads). A small
+  // batch already on the driver skips both jobs (the driver path).
+  // The LOG's default is 8 MB where the table store's is 1 MB: a log
+  // append's post-shuffle work is a per-byte-cheap sort-merge +
+  // encode (50 ms single-task at this ceiling), while the table
+  // stores commit pump AGGREGATIONS whose serialized compute is the
+  // regression the 1 MB default exists to avoid.
   private val smallAppendCoalesceMaxBytes: Long =
-    spark.conf.getOption("spark.graft.smallAppendCoalesceMaxBytes")
-      .map(_.toLong).getOrElse(8L << 20)
+    GraftConf.long(spark, "spark.graft.smallAppendCoalesceMaxBytes", 8L << 20)
 
   private def dataDir: String = FileIO.join(dir, "data")
 
@@ -123,18 +120,19 @@ final class ParquetLog private (
     * first assigned sequence number.
     *
     * Dense-seq assignment takes one of two paths:
-    *   - DRIVER PATH, for a small batch already on the driver (a local
-    *     relation under only deterministic projections/filters, within
-    *     the small-append cut `spark.graft.smallAppendCoalesceMaxBytes`
-    *     and `spark.graft.segmentTargetFileBytes`): the rows are
-    *     stamped `base + i` on the driver and written as one segment
-    *     through Spark's own parquet writer — no Spark job, the
-    *     in-process append of offset2/log.go:425-462.
-    *   - JOB PATH, for everything else: `monotonically_increasing_id`
-    *     is NOT contiguous, so we use the two-pass zipWithIndex
-    *     discipline (count partition sizes, then stamp
-    *     `base + partitionOffset + i`). The extra pass is the price of
-    *     dense seqs; it parallelizes across the cluster.
+    *   - DRIVER PATH, for a small batch already on the driver (local
+    *     relations only, which the optimizer folds to one local table
+    *     scan, within the small-append cut
+    *     `spark.graft.smallAppendCoalesceMaxBytes` and
+    *     `spark.graft.segmentTargetFileBytes`): the rows are stamped
+    *     `base + i` on the driver and written as one segment through
+    *     Spark's own parquet writer — no Spark job, the in-process
+    *     append of offset2/log.go:425-462.
+    *   - JOB PATH, for everything else: two jobs over ONE RDD lineage
+    *     of the input — count the rows of each partition, then stamp
+    *     `base + partitionOffset + i` in the write job. The count job
+    *     is the price of dense seqs; both parallelize across the
+    *     cluster.
     * Either way only the manifest commit is serialized, and the
     * dense-seq gate verifies the staged files' footers before it.
     */
@@ -206,9 +204,7 @@ final class ParquetLog private (
     val src0 = values.select(col(vCol).as("value"))
     // tiny-batch cut (see smallAppendCoalesceMaxBytes): a tiny batch
     // whose rows are on the driver takes the driver path; any other
-    // is coalesced before BOTH job passes, so count and stamp plan the
-    // same single-partition scan — the dense-seq gate below verifies
-    // either way
+    // is coalesced to one partition before its count and write jobs
     val small = {
       // analyzed-plan MAX-node stats, not optimizedPlan — see the
       // TableStore append gate: an optimizer pass per append is real
@@ -238,17 +234,17 @@ final class ParquetLog private (
         (writeSegments(df), n)
     }
     // DENSE-SEQ INTEGRITY GATE (pre-commit, driver-side arithmetic
-    // over footer stats publishSegments already read): the two-pass
-    // stamping assumes both jobs plan the same deterministic scan —
-    // the same assumption rdd.zipWithIndex made, but here it is
-    // VERIFIED instead of trusted. If the row-to-partition assignment
-    // diverged between the count job and the write job (source
-    // re-listed under a concurrent writer, nondeterministic input),
-    // offsets no longer match partition counts and seqs would collide
-    // or gap — this refuses the append LOUDLY before the manifest
-    // commit, so the positional point-read math and the fsck density
-    // check can never be silently corrupted. The driver path's
-    // footers pass the same gate: its stamp is checked, not trusted.
+    // over footer stats publishSegments already read): the job path
+    // assumes its write job sees the rows its count job counted, per
+    // partition — the assumption rdd.zipWithIndex made, but here it
+    // is VERIFIED instead of trusted. If a leaf the write job re-reads
+    // changed under it (source re-listed under a concurrent writer,
+    // a nondeterministic input), offsets no longer match partition
+    // counts and seqs would collide or gap — this refuses the append
+    // LOUDLY before the manifest commit, so the positional point-read
+    // math and the fsck density check can never be silently
+    // corrupted. The driver path's footers pass the same gate: its
+    // stamp is checked, not trusted.
     locally {
       val sorted = segs.sortBy(_.minSeq)
       var expect = base
@@ -292,110 +288,50 @@ final class ParquetLog private (
   }
 
   /** JOB PATH stamping: `(seq, value, nulled)` rows of `src1` stamped
-    * `base …` by two Spark passes (count, then stamp in the write
-    * job), plus the row count the count pass saw. */
+    * `base …` in its write job, plus the row count its count job saw.
+    *
+    * Both jobs run over ONE `queryExecution.toRdd` lineage, so the
+    * input's plan is finalized once: a shuffle in it (a range
+    * exchange's sampled boundaries, an AQE-coalesced aggregate) runs
+    * once, and the write job reuses that shuffle output with the
+    * partitioning the count job saw — the property zipWithIndex
+    * relied on. Two separate query executions do NOT share it: the
+    * r20 two-execution form committed 31,198 of 100,000 rows of an
+    * orderBy-fed append when their AQE coalescing disagreed. The rows
+    * stay in Tungsten (InternalRow, no Row codec round-trip). */
   private def stampByJob(
       src1: DataFrame,
       base: Long,
       vType: DataType
   ): (DataFrame, Long) = {
-    // Dense-seq stamping WITHOUT leaving Tungsten: the old
-    // rdd.zipWithIndex discipline deserialized every value to a Row
-    // and re-encoded it through createDataFrame's per-row converters
-    // — for struct values that round-trip dominated append cost
-    // (guide §1.4's rdd-conversion warning, measured on the r20
-    // append_events leg). Same two passes, native form: count rows
-    // per input partition (job 1), broadcast the cumulative offsets,
-    // stamp `base + offset(pid) + withinPartitionCounter` in the
-    // write job. monotonically_increasing_id is partitionId·2^33 +
-    // counter, so the within-partition counter recovers by
-    // subtraction; both passes plan the same deterministic scan —
-    // the exact property zipWithIndex relied on.
-    //
-    // PIN ONE EVALUATION SHAPE for both stamping passes. They are
-    // separate actions, and an input whose partitioning is decided at
-    // RUNTIME — a range exchange's sampled boundaries, an
-    // AQE-coalesced shuffle — can legitimately partition DIFFERENTLY
-    // across separate query executions; the old rdd.zipWithIndex was
-    // immune only because both its jobs shared one RDD lineage. NOT
-    // theoretical: the r20 two-execution shape SILENTLY COMMITTED
-    // 31,198 of 100,000 rows on an orderBy-fed append at
-    // sf0.1/local[32], deterministically (the count execution's
-    // AQE-coalesced pids disagreed with the write execution's, and
-    // the offset inner join dropped the unmatched partitions) — found
-    // when the r21 integrity gate below turned it loud.
-    //
-    // Two pinned forms, chosen by the input's plan:
-    //  - DETERMINISTIC NARROW (a scan under only deterministic
-    //    projections/filters — the common micro-batch shape): the
-    //    two-execution SQL form is safe (partitioning comes from the
-    //    file listing) and its count pass prunes every column, so the
-    //    count job is metadata-cheap. Kept.
-    //  - RUNTIME-PARTITIONED (sort/repartition/aggregate/join/limit
-    //    in the lineage): both passes run over ONE toRdd lineage —
-    //    the adaptive plan finalizes once, its shuffle stages execute
-    //    once and BOTH jobs reuse that shuffle output with identical
-    //    partitioning (zipWithIndex's safety), while the stamping
-    //    stays in Tungsten (InternalRow, no Row codec round-trip —
-    //    the r20 rewrite's point, now without its divergence hole).
-    if (ParquetLog.deterministicNarrow(src1.queryExecution.analyzed)) {
-      val partCounts = src1
-        .groupBy(spark_partition_id().as("_pid"))
-        .agg(count(lit(1)).as("_n"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1)))
-        .sortBy(_._1)
-      var acc0 = 0L
-      val offsets = partCounts.map { case (pid, n) =>
-        val o = (pid, acc0); acc0 += n; o
-      }
-      val offDf = org.apache.spark.sql.functions.broadcast(
-        spark.createDataFrame(
-          java.util.Arrays.asList(
-            offsets.map(o => Row(o._1, o._2)): _*),
-          StructType(Seq(
-            StructField("_pid", org.apache.spark.sql.types.IntegerType,
-              nullable = false),
-            StructField("_off", LongType, nullable = false)))))
-      val stamped = src1
-        .select(col("value"), spark_partition_id().as("_pid"),
-          monotonically_increasing_id().as("_mid"))
-        .join(offDf, Seq("_pid"))
-        .select(
-          (lit(base) + col("_off") +
-            (col("_mid") - col("_pid").cast("long") * lit(1L << 33)))
-            .as("seq"),
-          col("value"),
-          lit(false).as("nulled"))
-      (stamped, acc0)
-    } else {
-      val rdd = src1.queryExecution.toRdd
-      val counts = rdd
-        .mapPartitionsWithIndex((pid, it) => {
-          var n = 0L
-          while (it.hasNext) { it.next(); n += 1 }
-          Iterator((pid, n))
-        }, preservesPartitioning = true)
-        .collect().sortBy(_._1).map(_._2)
-      var acc0 = 0L
-      val offsets = counts.map { n => val o = acc0; acc0 += n; o }
-      val bc = spark.sparkContext.broadcast(offsets)
-      val stampedRdd = rdd.mapPartitionsWithIndex({ (pid, it) =>
-        var seqNo = base + bc.value(pid)
-        it.map { row =>
-          // a non-primitive value (struct, string, array, map) may view
-          // the scan's reused Unsafe buffer: copy it as it is stamped,
-          // so every stamped row stays valid after the iterator
-          // advances, whatever its consumer buffers
-          val out: InternalRow = InternalRow(
-            seqNo, InternalRow.copyValue(row.get(0, vType)), false)
-          seqNo += 1
-          out
-        }
+    val rdd = src1.queryExecution.toRdd
+    val counts = rdd
+      .mapPartitionsWithIndex((pid, it) => {
+        var n = 0L
+        while (it.hasNext) { it.next(); n += 1 }
+        Iterator((pid, n))
       }, preservesPartitioning = true)
-      (org.apache.spark.sql.graftshim.InternalRows.toDF(spark, stampedRdd,
-        stampedLayout(StructField("value", vType, nullable = true))), acc0)
-    }
+      .collect().sortBy(_._1).map(_._2)
+    var acc0 = 0L
+    val offsets = counts.map { n => val o = acc0; acc0 += n; o }
+    val bc = spark.sparkContext.broadcast(offsets)
+    val stampedRdd = rdd.mapPartitionsWithIndex({ (pid, it) =>
+      var seqNo = base + bc.value(pid)
+      it.map { row =>
+        // a non-primitive value (struct, string, array, map) may view
+        // the scan's reused Unsafe buffer: copy it as it is stamped,
+        // so every stamped row stays valid after the iterator
+        // advances, whatever its consumer buffers
+        val out: InternalRow = InternalRow(
+          seqNo, InternalRow.copyValue(row.get(0, vType)), false)
+        seqNo += 1
+        out
+      }
+    }, preservesPartitioning = true)
+    // the input's own value field: a job-path segment keeps its
+    // nullability, exactly as a driver-path segment does
+    (org.apache.spark.sql.graftshim.InternalRows.toDF(spark, stampedRdd,
+      stampedLayout(src1.schema.head)), acc0)
   }
 
   /** Commit then publish: the in-memory manifest only advances after
@@ -930,31 +866,6 @@ object ParquetLog {
     * forfeited. */
   val MaxDirectReads: Int = 128
 
-  /** True when `p` partitions deterministically and identically on
-    * every execution: a leaf (scan partitioning comes from the file
-    * listing; local/rdd relations are materialized) under only
-    * deterministic projections/filters and narrow coalesces. Anything
-    * with a shuffle in it — sort, repartition-by-expression,
-    * aggregate, join, window, limit — is runtime-partitioned (sampled
-    * boundaries, AQE coalescing) and must be pinned before the
-    * two-pass stamping (see appendInternal). Conservative: unknown
-    * nodes are NOT narrow. */
-  private[storage] def deterministicNarrow(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    p match {
-      case _: LeafNode => true
-      case pr: Project =>
-        pr.projectList.forall(_.deterministic) &&
-          deterministicNarrow(pr.child)
-      case f: Filter =>
-        f.condition.deterministic && deterministicNarrow(f.child)
-      case a: SubqueryAlias => deterministicNarrow(a.child)
-      case r: Repartition if !r.shuffle => deterministicNarrow(r.child)
-      case _ => false
-    }
-  }
-
   /** The `(seq, value, nulled)` layout of stamped rows around `value`. */
   private def stampedLayout(value: StructField): StructType = StructType(Seq(
     StructField("seq", LongType, nullable = false),
@@ -969,22 +880,22 @@ object ParquetLog {
   private val SegmentWriteOptions: Map[String, String] =
     Map("parquet.page.row.count.limit" -> "1024")
 
-  /** The rows of `src` when it is already resident on the driver: its
-    * analyzed plan is a (non-streaming) local relation under only
-    * deterministic projections/filters, and the optimizer folded it to
-    * a bare local table scan, whose rows come back with no Spark job.
-    * None for anything else (file scans, RDDs, shuffles, streams, or a
-    * projection the optimizer could not fold), which takes the job
-    * path. */
+  /** The rows of `src` when it is already resident on the driver:
+    * every leaf of its analyzed plan is a (non-streaming) local
+    * relation, and the optimizer folded the plan to a bare local table
+    * scan, whose rows come back with no Spark job. Those rows were
+    * evaluated once, as the optimizer folded them (a `limit` or a
+    * seeded `rand` over a local relation included), so stamping them
+    * needs no other check on the plan. None for anything else (file
+    * scans, RDDs, shuffles, streams, or a plan the optimizer could not
+    * fold), which takes the job path. */
   private def driverResident(src: DataFrame): Option[Array[InternalRow]] = {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.execution.LocalTableScanExec
-    val analyzed = src.queryExecution.analyzed
-    val local = deterministicNarrow(analyzed) &&
-      analyzed.collectLeaves().forall {
-        case l: LocalRelation => !l.isStreaming
-        case _ => false
-      }
+    val local = src.queryExecution.analyzed.collectLeaves().forall {
+      case l: LocalRelation => !l.isStreaming
+      case _ => false
+    }
     if (!local) None
     else src.queryExecution.executedPlan match {
       case scan: LocalTableScanExec => Some(scan.executeCollect())

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
+import graft.core.GraftConf
+
 /** A small manifest-committed parquet table: append-only segments with
   * atomic visibility and copy-on-write rewrite. The shared storage
   * primitive under the derived-view layers ([[graft.multilog.MultiLog]]
@@ -38,8 +40,7 @@ final class TableStore private (
   // micro-batch commit at 1–2 files while leaving any append whose
   // staged bytes already justify its file count untouched
   private val segmentTargetFileBytes: Long =
-    spark.conf.getOption("spark.graft.segmentTargetFileBytes")
-      .map(_.toLong).getOrElse(32L << 20)
+    GraftConf.long(spark, "spark.graft.segmentTargetFileBytes", 32L << 20)
 
   // staged-bytes ceiling for the DRIVER-SIDE row-group-copy merge: a
   // merge under it skips the read-back Spark job entirely (the
@@ -49,8 +50,7 @@ final class TableStore private (
   // byte volumes through itself (guide §5: the driver does no data
   // work)
   private val segmentMergeDriverMaxBytes: Long =
-    spark.conf.getOption("spark.graft.segmentMergeDriverMaxBytes")
-      .map(_.toLong).getOrElse(128L << 20)
+    GraftConf.long(spark, "spark.graft.segmentMergeDriverMaxBytes", 128L << 20)
 
   // PLAN-ESTIMATE ceiling under which an append's write job is
   // coalesced to one task (the small-append task-floor cut in
@@ -63,8 +63,7 @@ final class TableStore private (
   // in-memory estimate ≈ a few thousand rows — the micro-commit
   // shape and nothing else.
   private val smallAppendCoalesceMaxBytes: Long =
-    spark.conf.getOption("spark.graft.smallAppendCoalesceMaxBytes")
-      .map(_.toLong).getOrElse(1L << 20)
+    GraftConf.long(spark, "spark.graft.smallAppendCoalesceMaxBytes", 1L << 20)
 
   /** On-disk schema: the logical columns plus the physical `_ver`. */
   private val diskSchema: StructType =

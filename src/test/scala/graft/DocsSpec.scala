@@ -54,6 +54,21 @@ class DocsSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"README runs mains that do not exist: $missing")
   }
 
+  test("README names exactly the spark.graft.* keys src/main reads") {
+    val read0 = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => "\"(spark\\.graft\\.[\\w.]+)\"".r
+        .findAllMatchIn(read(p.toString)).map(_.group(1)))
+      .toSet
+    val named = """spark\.graft\.\w+(?:\.\w+)*""".r
+      .findAllIn(read("README.md")).toSet
+    assert(read0.nonEmpty, "found no spark.graft.* key under src/main")
+    assert((read0 -- named).isEmpty,
+      s"keys read under src/main but not in README: ${read0 -- named}")
+    assert((named -- read0).isEmpty,
+      s"keys in README but read nowhere under src/main: ${named -- read0}")
+  }
+
   test("README test count matches the registered suite total") {
     val classesDir = Paths.get("target/scala-2.13/test-classes")
     assume(Files.isDirectory(classesDir), "compiled test classes not found")

@@ -77,6 +77,64 @@ class DriverAppendSpec extends SparkSpec {
     assert(log.seq == 63L)
   }
 
+  test("a filtered multi-partition parquet-scan append runs exactly 2 " +
+      "jobs (count + write), in input order, with dense seqs") {
+    import spark.implicits._
+    val src = tmpDir("da-2job-src-") + "/in"
+    (0L until 26667L).toDF("value").repartition(4).write.parquet(src)
+    // keep the multi-partition job path (no tiny-batch coalesce)
+    spark.conf.set("spark.graft.smallAppendCoalesceMaxBytes", "0")
+    val log = try ParquetLog.open(spark, tmpDir("da-2job-") + "/log", LongType)
+    finally spark.conf.unset("spark.graft.smallAppendCoalesceMaxBytes")
+    val in = spark.read.schema("value BIGINT").parquet(src)
+      .filter(col("value") % 3L =!= 1L)
+    assert(in.rdd.getNumPartitions > 1, "setup: the scan must be multi-partition")
+    val expected = in.collect().map(_.getLong(0)).toSeq
+    (0 until 3).foreach { b =>
+      assert(jobsDuring(log.append(in)) == 2, s"append $b")
+    }
+    val got = values(log)
+    assert(got.map(_._1) == (0L until 3L * expected.length))
+    assert(got.map(_._2.getLong(1)) == expected ++ expected ++ expected)
+    assert(log.checkConsistency(repair = false, minAgeMs = 0L).isEmpty)
+  }
+
+  /** `shape` appended to a fresh log: dense seqs over duplicate-free
+    * values, each drawn from `input`, on which `get`, `toDF` and fsck
+    * agree. Returns the jobs the append ran. */
+  private def appendsConsistently(name: String, input: Seq[Long],
+      shape: DataFrame, drawn: Long => Long = identity): Int = {
+    val log = ParquetLog.open(spark, tmpDir(s"da-$name-") + "/log", LongType)
+    val jobs = jobsDuring(log.append(shape))
+    val got = values(log)
+    val vs = got.map(_._2.getLong(1))
+    assert(got.nonEmpty && got.map(_._1) == (0L until got.length.toLong),
+      s"$name: seqs not dense from 0")
+    assert(log.seq == got.length - 1L)
+    assert(vs.distinct == vs, s"$name: a value committed twice")
+    assert(vs.forall(v => input.contains(drawn(v))),
+      s"$name: a value not drawn from the input")
+    got.foreach { case (s, r) => assert(log.get(s) == r, s"$name: get($s)") }
+    assert(log.checkConsistency(repair = false, minAgeMs = 0L).isEmpty)
+    jobs
+  }
+
+  test("local relations under limit and a seeded rand filter or " +
+      "projection commit dense, drawn-from-input rows with 0 jobs") {
+    import spark.implicits._
+    val input = (0L until 100L)
+    val local = input.toDF("value")
+    // Spark folds each shape into one local table scan, so its rows are
+    // evaluated once on the driver and take the driver path
+    assert(appendsConsistently("limit", input, local.limit(7)) == 0)
+    assert(appendsConsistently("rand-filter", input,
+      local.filter(rand(7L) < 0.5)) == 0)
+    assert(appendsConsistently("rand-project", input,
+      local.select((col("value") * 1000L +
+        (rand(3L) * 10).cast("long")).as("value")),
+      drawn = _ / 1000L) == 0)
+  }
+
   test("segmentTargetFileBytes=1 keeps a local append on the job path " +
       "and its one-file-per-partition layout") {
     val dir = tmpDir("da-nomerge-") + "/log"

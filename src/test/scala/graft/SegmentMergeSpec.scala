@@ -12,8 +12,8 @@ import graft.storage.{FileIO, Manifest, ParquetLog, TableStore}
   *     page indexes, so point reads must succeed through DirectRead's
   *     whole-row-group fallback and stay exact;
   *   - the dense-seq integrity gate verifies (not assumes) that the
-  *     two-pass stamping produced exactly [base, base+n-1], including
-  *     over shuffled inputs (VERDICT r20 #10);
+  *     count-then-stamp jobs produced exactly [base, base+n-1],
+  *     including over shuffled inputs (VERDICT r20 #10);
   *   - `spark.graft.segmentTargetFileBytes = 0` = documented
   *     merge-free mode (the old code divided by the knob and threw);
   *   - TableStore.append coalesces a small batch's write job instead
@@ -70,12 +70,12 @@ class SegmentMergeSpec extends SparkSpec {
       "unique seqs (the two-pass stamping contract, verified)") {
     val dir = tmpDir("sm-dense-") + "/log"
     // keep the multi-partition stamping in play (no tiny-batch
-    // coalesce): the two-pass offsets themselves are under test
+    // coalesce): the per-partition offsets themselves are under test
     spark.conf.set("spark.graft.smallAppendCoalesceMaxBytes", "0")
     val log = try ParquetLog.open(spark, dir, LongType)
     finally spark.conf.unset("spark.graft.smallAppendCoalesceMaxBytes")
-    // a genuine exchange (aggregate) feeding append: both stamping
-    // passes must plan the same shuffle and agree on partition counts
+    // a genuine exchange (aggregate) feeding append: the write job
+    // must stamp the partitions the count job counted
     val shuffled = spark.range(0L, 5000L)
       .groupBy((col("id") % 17L).as("g")).agg(sum("id").as("s"))
       .select((col("g") * 1000000L + col("s")).as("value"))
@@ -87,12 +87,12 @@ class SegmentMergeSpec extends SparkSpec {
 
   test("append of a RANGE-EXCHANGE-fed (orderBy) frame loses nothing " +
       "— the r20 silent-truncation shape") {
-    // the r20 two-pass stamping committed 31,198 of 100,000 rows on
-    // exactly this shape at sf0.1/local[32]: the count and write
+    // the r20 two-execution stamping committed 31,198 of 100,000 rows
+    // on exactly this shape at sf0.1/local[32]: the count and write
     // executions AQE-coalesced the sort's shuffle differently and the
-    // offset inner join dropped the unmatched partitions. r21 pins
-    // one evaluation (a single shared queryExecution.toRdd lineage for
-    // runtime-partitioned inputs) and the pre-commit dense-seq gate
+    // offset inner join dropped the unmatched partitions. Every
+    // job-path append now counts and stamps over one shared
+    // queryExecution.toRdd lineage, and the pre-commit dense-seq gate
     // verifies density before the commit.
     val dir = tmpDir("sm-sorted-") + "/log"
     val log = ParquetLog.open(spark, dir, LongType)
