@@ -1,12 +1,16 @@
 package graft.indexes
 
+import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.storage.TableStore
+import graft.storage.{SliceRead, TableStore}
 
 /** Key→value derived view with observable-style reads and a persisted
   * resume cursor — the reference's index layer
@@ -20,12 +24,30 @@ import graft.storage.TableStore
   * exactly-once where the reference is only as good as its user funcs
   * (indexes/sinkindex.go:39-50).
   *
+  * Each commit's segment files are sorted by `addr`, so the footer
+  * statistics and page indexes narrow one key to the pages holding
+  * it. Point reads ([[get]], [[getAsOf]]) and watcher deliveries read
+  * those pages ON THE DRIVER ([[graft.storage.TableStore.slice]]) and
+  * fold last-write-wins in memory — no Spark job — while the pruned
+  * slice holds at most `driverRowBound` rows; a larger slice runs the
+  * window plan as a job instead. [[current]] and [[currentAsOf]] are
+  * always that window plan (one shuffle on addr).
+  *
   * The resume cursor (`SetSeq`/`GetSeq`, indexes/index.go:63-70) is a
   * sidecar file committed AFTER the data batch, mirroring the
   * reference's cursor-after-apply = at-least-once, made exactly-once
   * by the idempotent upsert.
   */
-final class KVIndex(val spark: SparkSession, val dir: String) extends KV {
+final class KVIndex private[graft] (
+    val spark: SparkSession,
+    val dir: String,
+    driverRowBound: Long
+) extends KV {
+
+  def this(spark: SparkSession, dir: String) =
+    this(spark, dir, SliceRead.MaxRows)
+
+  import KVIndex.{Addr, keyIs}
 
   private val store = TableStore.open(spark, dir, KVIndex.schema)
   private val io = graft.storage.FileIO.forPath(dir)
@@ -59,11 +81,11 @@ final class KVIndex(val spark: SparkSession, val dir: String) extends KV {
         col("tombstone").cast(BooleanType),
         col("useq").cast(LongType)
       ).where(col("addr").isNotNull) // null key = "don't index"
-      val ver = store.append(prepared)
+      val ver = store.append(prepared, sortWithin = Seq("addr"))
       // deliveries are computed BEFORE the ticket: watcherDeliveries
-      // runs a Spark job that can fail transiently, and a ticket taken
-      // but never passed to deliverOrdered would stall every later
-      // delivery on this index forever
+      // reads the committed files and can fail transiently, and a
+      // ticket taken but never passed to deliverOrdered would stall
+      // every later delivery on this index forever
       val deliveries = watcherDeliveries(ver)
       (takeDeliveryTicket(), deliveries)
     }
@@ -78,21 +100,28 @@ final class KVIndex(val spark: SparkSession, val dir: String) extends KV {
     * never had if its upstream source changed between the append and
     * the notify (and which would cost a second full evaluation of the
     * batch). The winning row per addr is the commit's highest useq.
-    * Costs one tiny pruned job, only when watchers exist. */
+    * Only when watchers exist: a driver slice of the commit's files,
+    * or one tiny pruned job above the row bound. */
   private def watcherDeliveries(
       ver: Long
   ): Seq[(KV.Watcher, Option[String])] = {
     val watched = watcherReg.keySet.toSeq
     if (watched.isEmpty) return Nil
-    val hits = store.readVersioned
-      .where(col("_ver") === ver && col("addr").isin(watched: _*))
-      .collect()
+    val keys = watched.map(Binary.fromString).toSet.asJava
+    val hits: Seq[(String, String, Boolean, Long)] = store
+      .slice(FilterApi.in(Addr, keys), driverRowBound, version = Some(ver))
+      .map(_.map(KVIndex.change))
+      .getOrElse(store.readVersioned
+        .where(col("_ver") === ver && col("addr").isin(watched: _*))
+        .collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getBoolean(2),
+          r.getLong(3))))
     hits
-      .groupBy(_.getString(0))
+      .groupBy(_._1)
       .toSeq
       .flatMap { case (addr, rows) =>
-        val win = rows.maxBy(_.getLong(3))
-        val v = if (win.getBoolean(2)) None else Option(win.getString(1))
+        val win = rows.maxBy(_._4)
+        val v = if (win._3) None else Option(win._2)
         watcherReg.getOrElse(addr, Nil).map(_ -> v)
       }
   }
@@ -136,8 +165,9 @@ final class KVIndex(val spark: SparkSession, val dir: String) extends KV {
   def current: DataFrame = currentWhere(lit(true))
 
   /** Last-write-wins snapshot restricted to `pred` — the predicate is
-    * applied BELOW the window so it reaches the parquet scan (a point
-    * read touches one addr's row groups, not the whole change log). */
+    * applied BELOW the window so it reaches the parquet scan (the job
+    * path of a point read over a slice too big for the driver touches
+    * one addr's row groups, not the whole change log). */
   private def currentWhere(pred: org.apache.spark.sql.Column): DataFrame =
     foldLww(store.readVersioned, pred)
 
@@ -158,11 +188,15 @@ final class KVIndex(val spark: SparkSession, val dir: String) extends KV {
   /** Point read; None = unset (the reference's `UnsetValue`). A
     * non-tombstone row whose value is SQL NULL also reads as None —
     * the same mapping notifyWatchers and MemKV apply, so the two
-    * backends (and get-vs-watch on one backend) agree. */
-  def get(addr: String): Option[String] = {
-    val rows = currentWhere(col("addr") === addr).collect()
-    rows.headOption.flatMap(r => Option(r.getString(1)))
-  }
+    * backends (and get-vs-watch on one backend) agree. Answered on
+    * the driver from the key's pages (see the class doc). */
+  def get(addr: String): Option[String] =
+    store.slice(keyIs(addr), driverRowBound) match {
+      case Some(rows) => KVIndex.winner(rows)
+      case None =>
+        currentWhere(col("addr") === addr).collect()
+          .headOption.flatMap(r => Option(r.getString(1)))
+    }
 
   /** The materialized index exactly as of commit `version`: the same
     * last-write-wins fold over the PLANNING-time-pruned snapshot read
@@ -173,11 +207,13 @@ final class KVIndex(val spark: SparkSession, val dir: String) extends KV {
 
   /** Point-in-time point read: the value `addr` had as of commit
     * `version`; None = unset at that version. */
-  def getAsOf(addr: String, version: Long): Option[String] = {
-    val rows =
-      foldLww(store.readAsOf(version), col("addr") === addr).collect()
-    rows.headOption.flatMap(r => Option(r.getString(1)))
-  }
+  def getAsOf(addr: String, version: Long): Option[String] =
+    store.slice(keyIs(addr), driverRowBound, asOf = Some(version)) match {
+      case Some(rows) => KVIndex.winner(rows)
+      case None =>
+        foldLww(store.readAsOf(version), col("addr") === addr).collect()
+          .headOption.flatMap(r => Option(r.getString(1)))
+    }
 
   /** The store's latest commit version (pair with [[getAsOf]] /
     * [[currentAsOf]] to pin a reproducible read). */
@@ -189,7 +225,7 @@ final class KVIndex(val spark: SparkSession, val dir: String) extends KV {
       .withColumn("tombstone", lit(false))
       .withColumn("useq", lit(0L))
       .select("addr", "value", "tombstone", "useq")
-    store.rewrite(_ => snap)
+    store.rewrite(_ => snap, sortWithin = Seq("addr"))
   }
 
   /** Persisted resume cursor (SetSeq/GetSeq, indexes/index.go:63-70). */
@@ -217,4 +253,27 @@ object KVIndex {
 
   def open(spark: SparkSession, dir: String): KVIndex =
     new KVIndex(spark, dir)
+
+  private val Addr = FilterApi.binaryColumn("addr")
+
+  private def keyIs(addr: String): FilterPredicate =
+    FilterApi.eq(Addr, Binary.fromString(addr))
+
+  /** One on-disk change row `(addr, value, tombstone, useq, _ver)` of a
+    * driver slice, as `(addr, value, tombstone, useq)`. */
+  private def change(r: InternalRow): (String, String, Boolean, Long) =
+    (r.getUTF8String(0).toString,
+      if (r.isNullAt(1)) null else r.getUTF8String(1).toString,
+      r.getBoolean(2), r.getLong(3))
+
+  /** Last-write-wins over one key's change rows, as the window in
+    * `foldLww` orders them: highest `(_ver, useq)`; a tombstone or a
+    * NULL value reads as unset. */
+  private def winner(rows: Seq[InternalRow]): Option[String] =
+    if (rows.isEmpty) None
+    else {
+      val w = rows.maxBy(r => (r.getLong(4), r.getLong(3)))
+      if (w.getBoolean(2) || w.isNullAt(1)) None
+      else Some(w.getUTF8String(1).toString)
+    }
 }

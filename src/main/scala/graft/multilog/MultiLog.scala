@@ -1,12 +1,16 @@
 package graft.multilog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core._
-import graft.storage.TableStore
+import graft.storage.{SliceRead, TableStore}
 
 /** Virtual sublogs — the reference's roaring-bitmap multilog
   * (multilog/multilog.go:21-31, multilog/roaring/) re-expressed as an
@@ -14,22 +18,35 @@ import graft.storage.TableStore
   *
   *   - `Sublog.Append(parentSeq)` = append an `(addr, seq)` row; bitmap
   *     `Set` idempotence = dedup on (addr, seq)
-  *   - `Sublog.Get(rank)` (bitmap Select, roaring/sublog.go:55) =
-  *     `row_number() over (partition by addr order by seq)`
-  *   - `List()` = `select distinct addr`; cardinality = `count(*)`
+  *   - `Sublog.Get(rank)` (bitmap Select, roaring/sublog.go:55) = the
+  *     rank-th of the sublog's distinct seqs in ascending order
+  *   - `List()` = `select distinct addr`; cardinality = distinct count
   *   - `Delete(addr)` = copy-on-write rewrite dropping the addr;
   *     open handles are poisoned (ErrSublogDeleted, matching
   *     multilog/roaring/multilog.go:166-178)
   *
-  * Scale: the table is partition-friendly (hash on addr); a sublog read
-  * is a pushed `addr = X` predicate; sublog→parent-value resolution is
+  * Scale: segment files are sorted by `(bucket, addr, seq)`, so one
+  * sublog's rows sit in a few pages that the footer statistics and
+  * page indexes find. `has`, `Sublog.get`/`seq`/`query` and the size
+  * probe of `resolve` read those pages ON THE DRIVER
+  * ([[graft.storage.TableStore.slice]]) and dedup and rank the seqs in
+  * memory — no Spark job — while the pruned slice holds at most
+  * `driverRowBound` rows; a bigger sublog runs the pushed
+  * `bucket = h(addr) AND addr = X` scan plus `dropDuplicates` and a
+  * `row_number` window as jobs. Sublog→parent-value resolution is
   * `idx.join(log, "seq")` and broadcasts when the sublog is small.
   * Roaring-bitmap compressed storage is an optional fidelity path
   * (RoaringBitmap ships in Spark's jars) deferred to a later round —
   * plain parquet columns already encode sorted seq runs efficiently.
   */
-final class MultiLog(val spark: SparkSession, val dir: String)
-    extends MultiLogApi {
+final class MultiLog private[graft] (
+    val spark: SparkSession,
+    val dir: String,
+    driverRowBound: Long
+) extends MultiLogApi {
+
+  def this(spark: SparkSession, dir: String) =
+    this(spark, dir, SliceRead.MaxRows)
 
   private val store = TableStore.open(spark, dir, MultiLog.schema)
 
@@ -61,6 +78,29 @@ final class MultiLog(val spark: SparkSession, val dir: String)
       .select("addr", "seq")
       .dropDuplicates("addr", "seq")
 
+  /** One sublog's distinct parent seqs in ascending order (index =
+    * rank), read on the driver from its bucket- and addr-pruned pages;
+    * None when the slice exceeds the row bound, for the job path. */
+  private[multilog] def ranked(addr: String): Option[Array[Long]] =
+    store.slice(
+      FilterApi.and(
+        FilterApi.eq(FilterApi.intColumn("bucket"),
+          Integer.valueOf(bucketOf(addr))),
+        FilterApi.eq(FilterApi.binaryColumn("addr"),
+          Binary.fromString(addr))),
+      driverRowBound
+    ).map { rows =>
+      val seqs = rows.iterator.map(_.getLong(1)).toArray
+      java.util.Arrays.sort(seqs)
+      var n = 0
+      var i = 0
+      while (i < seqs.length) {
+        if (n == 0 || seqs(i) != seqs(n - 1)) { seqs(n) = seqs(i); n += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(seqs, n)
+    }
+
   /** Fan a batch of `(addr, seq)` rows into the index. Idempotent by
     * construction (dedup on read), so replays from a resumed sink are
     * harmless — strictly stronger than the reference's at-most-once
@@ -82,8 +122,8 @@ final class MultiLog(val spark: SparkSession, val dir: String)
       routed
         .repartition(col("bucket"))
         .distinct()
-        .sortWithinPartitions("bucket", "addr", "seq")
-        .select("addr", "seq", "bucket")
+        .select("addr", "seq", "bucket"),
+      sortWithin = MultiLog.Layout
     )
     epoch.incrementAndGet()
     (): Unit
@@ -102,12 +142,14 @@ final class MultiLog(val spark: SparkSession, val dir: String)
   def list(): DataFrame = table.select("addr").distinct()
 
   def has(addr: String): Boolean =
-    tableFor(addr).limit(1).count() > 0
+    ranked(addr).map(_.nonEmpty)
+      .getOrElse(tableFor(addr).limit(1).count() > 0)
 
   /** Drop a sublog and poison open handles
     * (multilog/roaring/multilog.go:166-178). */
   def delete(addr: String): Unit = synchronized {
-    store.rewrite(df => df.where(col("addr") =!= addr))
+    store.rewrite(df => df.where(col("addr") =!= addr),
+      sortWithin = MultiLog.Layout)
     deletedEpoch.put(addr, epoch.get())
     epoch.incrementAndGet()
     (): Unit
@@ -156,10 +198,8 @@ final class MultiLog(val spark: SparkSession, val dir: String)
     * the dedup-on-read in [[table]] a no-op until the next append. */
   def compact(): Unit = synchronized {
     store.rewrite(
-      _.dropDuplicates("addr", "seq")
-        .repartition(col("bucket"))
-        .sortWithinPartitions("bucket", "addr", "seq")
-    )
+      _.dropDuplicates("addr", "seq").repartition(col("bucket")),
+      sortWithin = MultiLog.Layout)
     epoch.incrementAndGet()
     (): Unit
   }
@@ -168,6 +208,16 @@ final class MultiLog(val spark: SparkSession, val dir: String)
 object MultiLog {
   /** 64-way addr-hash bucketing of the index segments (see tableFor). */
   val NumBuckets = 64
+
+  /** The sort order inside every segment file. */
+  private val Layout = Seq("bucket", "addr", "seq")
+
+  /** Columns of a sublog frame (`Sublog.toDF`): rank, parent seq,
+    * nulled. */
+  private[multilog] val SublogSchema: StructType = StructType(Seq(
+    StructField("seq", LongType, nullable = false),
+    StructField("value", LongType, nullable = true),
+    StructField("nulled", BooleanType, nullable = false)))
 
   val schema: StructType = StructType(
     Seq(
@@ -211,8 +261,9 @@ final class Sublog(
       throw GraftErrors.ErrSublogDeleted(addr)
 
   /** `(seq, value)` rows where seq = rank (0-based) and value = parent
-    * log seq. The window is per-addr after a pushed addr filter, so
-    * the shuffle is one narrow partition at scale. */
+    * log seq — a lazy job-path frame. The window is per-addr after a
+    * pushed addr filter, so the shuffle is one narrow partition at
+    * scale. */
   def toDF: DataFrame = {
     guard()
     val w = Window.partitionBy("addr").orderBy(col("seq").asc)
@@ -227,28 +278,44 @@ final class Sublog(
   }
 
   /** Cardinality - 1, or SeqEmpty (-1) for an empty/unknown sublog.
-    * A plain bucket-pruned count — the rank window in [[toDF]] would
-    * add a needless shuffle for a cardinality question. */
+    * Counted on the driver; above the row bound, a plain
+    * bucket-pruned count job (the rank window in [[toDF]] would add a
+    * needless shuffle for a cardinality question). */
   def seq: Long = {
     guard()
-    parent.tableFor(addr).count() - 1
+    parent.ranked(addr).map(_.length.toLong)
+      .getOrElse(parent.tableFor(addr).count()) - 1
   }
 
   /** Rank → parent seq (bitmap Select). */
   def get(rank: Long): Long = {
     guard()
-    val rows = toDF.where(col("seq") === rank).collect()
-    if (rows.isEmpty) throw GraftErrors.ErrOutOfBounds(rank)
-    rows.head.getLong(1)
+    parent.ranked(addr) match {
+      case Some(seqs) =>
+        if (rank < 0 || rank >= seqs.length)
+          throw GraftErrors.ErrOutOfBounds(rank)
+        seqs(rank.toInt)
+      case None =>
+        val rows = toDF.where(col("seq") === rank).collect()
+        if (rows.isEmpty) throw GraftErrors.ErrOutOfBounds(rank)
+        rows.head.getLong(1)
+    }
   }
 
-  /** QuerySpec query over ranks. Live sublog tailing goes through the
-    * streaming layer (filtered stream on addr). */
+  /** QuerySpec query over ranks. Within the row bound the plan's
+    * bounds, direction, limit and seqWrap are applied on the driver
+    * to the ranked seqs read at call time, and the answer is a local
+    * frame (collecting it runs no job); above it, the [[toDF]] plan
+    * through [[graft.query.QueryBuilder]]. Live sublog tailing goes
+    * through the streaming layer (filtered stream on addr). */
   def query(specs: QuerySpec*): DataFrame = {
     guard()
     val plan = QueryPlan.of(specs: _*)
     require(!plan.live, "live sublog queries go through LiveTail")
-    graft.query.QueryBuilder.build(toDF, plan)
+    parent.ranked(addr) match {
+      case Some(seqs) => Sublog.local(parent.spark, seqs, plan)
+      case None => graft.query.QueryBuilder.build(toDF, plan)
+    }
   }
 
   /** Resolve this sublog's entries back to parent-log values — the
@@ -256,8 +323,9 @@ final class Sublog(
     * `sublog seq → parent Get(seq)`, SURVEY §2.6). Returns
     * `(rank, seq, value)`.
     *
-    * The sublog side broadcasts ONLY when its (cheap, bucket-pruned)
-    * row count fits under `spark.sql.autoBroadcastJoinThreshold` — a
+    * The sublog side broadcasts ONLY when its row count (counted on
+    * the driver within the row bound, else a bucket-pruned count job)
+    * fits under `spark.sql.autoBroadcastJoinThreshold` — a
     * hot addr holding 20% of a 100 TB log must not be forced through
     * the driver; it falls back to a shuffle join that AQE can still
     * re-plan. */
@@ -280,11 +348,42 @@ final class Sublog(
       else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(rawThreshold)
     // ~24 bytes per (rank, seq) row of broadcast hash-table payload
     val fits = threshold > 0 &&
-      parent.tableFor(addr).count() * 24L <= threshold
+      parent.ranked(addr).map(_.length.toLong)
+        .getOrElse(parent.tableFor(addr).count()) * 24L <= threshold
     val right =
       if (fits) org.apache.spark.sql.functions.broadcast(sub) else sub
     log.toDF
       .join(right, Seq("seq"))
       .select("rank", "seq", "value", "nulled")
+  }
+}
+
+object Sublog {
+
+  /** [[graft.query.QueryBuilder.build]] over `seqs` (index = rank) on
+    * the driver: rank bounds, direction, limit and the seqWrap
+    * projection, as a local frame. */
+  private[multilog] def local(
+      spark: SparkSession,
+      seqs: Array[Long],
+      plan: QueryPlan
+  ): DataFrame = {
+    val n = seqs.length.toLong
+    val lo = math.max(0L, plan.lower.getOrElse(0L))
+    val hi = math.min(n, plan.upper.getOrElse(n))
+    val inRange =
+      if (lo >= hi) Iterator.empty
+      else if (plan.reverse) Iterator.iterate(hi - 1)(_ - 1).take((hi - lo).toInt)
+      else Iterator.iterate(lo)(_ + 1).take((hi - lo).toInt)
+    val ranks =
+      if (plan.limit >= 0) inRange.take(math.min(plan.limit, Int.MaxValue).toInt)
+      else inRange
+    val rows = ranks.map { r =>
+      if (plan.seqWrap) Row(r, seqs(r.toInt), false) else Row(seqs(r.toInt), false)
+    }.toSeq
+    val schema =
+      if (plan.seqWrap) MultiLog.SublogSchema
+      else StructType(MultiLog.SublogSchema.fields.drop(1))
+    spark.createDataFrame(rows.asJava, schema)
   }
 }

@@ -189,13 +189,9 @@ final class GraftTableScan(
     manifestSnapshot.getOrElse(Manifest.load(dir))
 
   /** Snapshot (time-travel) reads: `versionAsOf = v` serves exactly
-    * the segments of commit versions `1..v`, pruned at PLANNING time
-    * (statistics and partitions both see the snapshot). Commit
-    * versions are dense, so the snapshot is reconstructable iff every
-    * version `<= v` is still retained — a `rewrite` folds history
-    * into one new version, after which earlier snapshots are GONE and
-    * must fail loudly: a raw `_ver <= v` filter would silently return
-    * a wrong (empty or partial) table instead. */
+    * the segments of commit versions `1..v` ([[Manifest.asOf]], which
+    * refuses a snapshot a rewrite folded away), pruned at PLANNING
+    * time (statistics and partitions both see the snapshot). */
   private def segments: List[graft.storage.Segment] = {
     val m = manifest match {
       case Some(m) => m
@@ -203,15 +199,7 @@ final class GraftTableScan(
     }
     versionAsOf match {
       case None => m.segments
-      case Some(v) =>
-        require(v >= 0, s"versionAsOf must be >= 0 (got $v)")
-        require(v <= m.version,
-          s"versionAsOf $v does not exist yet (latest commit: ${m.version})")
-        val floor = m.foldedBelow.getOrElse(0L)
-        require(v >= floor,
-          s"snapshot at version $v is unavailable: history below version " +
-            s"$floor was folded by a rewrite (compact/delete)")
-        m.segments.filter(_.minSeq <= v)
+      case Some(v) => m.asOf(v)
     }
   }
 

@@ -10,7 +10,7 @@ import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.internal.column.columnindex.OffsetIndex
-import org.apache.parquet.internal.filter2.columnindex.RowRanges
+import org.apache.parquet.internal.filter2.columnindex.{ColumnIndexStore, RowRanges}
 import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.Row
@@ -37,7 +37,9 @@ import org.apache.spark.sql.types._
   */
 private[graft] object DirectRead {
 
-  private final class SegReader(val file: String) {
+  /** One open segment: reader, parsed footer and its lazily read page
+    * indexes. Not thread-safe — every use holds its monitor. */
+  private[storage] final class SegReader(val file: String) {
     val reader: ParquetFileReader = ParquetFileReader.open(
       FileIO.forPath(file).inputFile(file),
       ParquetReadOptions.builder().build()
@@ -52,6 +54,7 @@ private[graft] object DirectRead {
     val firstRows: Array[Long] =
       blocks.scanLeft(0L)(_ + _.getRowCount).toArray
     private val offsetIndexes = new Array[OffsetIndex](blocks.size)
+    private val indexStores = new Array[ColumnIndexStore](blocks.size)
 
     def offsetIndexOf(block: Int): OffsetIndex = {
       if (offsetIndexes(block) == null)
@@ -60,10 +63,18 @@ private[graft] object DirectRead {
       offsetIndexes(block)
     }
 
+    /** Column + offset indexes of one row group, for page pruning
+      * ([[SliceRead]]); read once per open file. */
+    def columnIndexStoreOf(block: Int): ColumnIndexStore = {
+      if (indexStores(block) == null)
+        indexStores(block) = reader.getColumnIndexStore(block)
+      indexStores(block)
+    }
+
     def close(): Unit = try reader.close() catch { case _: Exception => () }
   }
 
-  private val MaxCached = 64
+  private[storage] val MaxCached = 64
   private val cache =
     new JLinkedHashMap[String, SegReader](MaxCached, 0.75f, true) {
       override def removeEldestEntry(e: JMap.Entry[String, SegReader]): Boolean = {
@@ -73,11 +84,17 @@ private[graft] object DirectRead {
       }
     }
 
-  private def cached(file: String): SegReader = cache.synchronized {
+  /** The open reader of `file`, from the LRU shared by point reads
+    * and [[SliceRead]] slices. */
+  private[storage] def cached(file: String): SegReader = cache.synchronized {
     var r = cache.get(file)
     if (r == null) { r = new SegReader(file); cache.put(file, r) }
     r
   }
+
+  /** True while a reader of `file` is open in the LRU. */
+  private[graft] def isCached(file: String): Boolean =
+    cache.synchronized(cache.containsKey(file))
 
   /** Drop (and close) the cached reader for a segment file that is
     * about to be deleted — rewrite/compact/fsck call this BEFORE the

@@ -163,15 +163,20 @@ private[graft] object FileIO {
   def isHidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
 
-  /** Load a java-properties pin/marker file; None when absent. */
+  /** Load a java-properties pin/marker file; None when absent. One
+    * read, no exists-then-read pair: a file deleted between the two
+    * reads None, not FileNotFoundException. */
   def loadProps(path: String): Option[java.util.Properties] = {
-    val io = forPath(path)
-    if (!io.exists(path)) None
-    else {
+    val bytes =
+      try Some(forPath(path).readBytes(path))
+      catch {
+        case _: java.io.FileNotFoundException => None
+        case _: java.nio.file.NoSuchFileException => None
+      }
+    bytes.map { b =>
       val p = new java.util.Properties()
-      val in = new java.io.ByteArrayInputStream(io.readBytes(path))
-      p.load(in)
-      Some(p)
+      p.load(new java.io.ByteArrayInputStream(b))
+      p
     }
   }
 
@@ -439,17 +444,16 @@ private[graft] object HadoopFileIO extends FileIO {
     }
   }
 
+  // The ONE opened stream is read to EOF: its length is never taken
+  // from a separate getFileStatus, which a concurrent writeAtomic can
+  // answer for the OTHER version (a truncated prefix or an EOF). The
+  // open handle stays on one version on every backend (rename(2) keeps
+  // the old inode; an object GET streams one object generation).
   override def readBytes(path: String): Array[Byte] = {
     val hp = new HPath(path)
-    val f = fs(hp)
-    val in = f.open(hp)
-    try {
-      val len = f.getFileStatus(hp).getLen
-      require(len <= Int.MaxValue, s"metadata file too large: $path ($len bytes)")
-      val buf = new Array[Byte](len.toInt)
-      in.readFully(0L, buf)
-      buf
-    } finally in.close()
+    val in = fs(hp).open(hp)
+    try in.readAllBytes()
+    finally in.close()
   }
 
   override def writeAtomic(

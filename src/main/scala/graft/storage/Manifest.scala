@@ -65,7 +65,27 @@ final case class Manifest(
     // this are unreconstructable and refused loudly; absent = never
     // folded (old manifests parse compatibly).
     foldedBelow: Option[Long] = None
-)
+) {
+
+  /** TableStore snapshot: the segments holding commit versions
+    * `1..v`. Commit versions are dense, so the snapshot is
+    * reconstructable iff every version `<= v` is still retained — a
+    * `rewrite` folds history into one new version, after which
+    * earlier snapshots are GONE and are refused loudly (a raw
+    * `_ver <= v` filter would silently return a wrong table). A
+    * minor-folded segment whose version range straddles `v` is
+    * included; its readers cut `_ver <= v` inside it. */
+  def asOf(v: Long): List[Segment] = {
+    require(v >= 0, s"versionAsOf must be >= 0 (got $v)")
+    require(v <= version,
+      s"versionAsOf $v does not exist yet (latest commit: $version)")
+    val floor = foldedBelow.getOrElse(0L)
+    require(v >= floor,
+      s"snapshot at version $v is unavailable: history below version " +
+        s"$floor was folded by a rewrite (compact/delete)")
+    segments.filter(_.minSeq <= v)
+  }
+}
 
 object Manifest {
   private implicit val fmts: Formats = DefaultFormats

@@ -872,12 +872,14 @@ object ParquetLog {
     value,
     StructField("nulled", BooleanType, nullable = false)))
 
-  /** Parquet writer options of every segment write, job or driver:
-    * small pages (row-count-bounded) make the column index precise —
-    * a point read decodes ONE ~1k-row page instead of a whole 20k-row
-    * default page. The log is a point-read-optimized store and pays a
-    * negligible scan/size cost for it. */
-  private val SegmentWriteOptions: Map[String, String] =
+  /** Parquet writer options of every segment write, job or driver,
+    * log or [[TableStore]]: small pages (row-count-bounded) make the
+    * column and offset indexes precise — a point read decodes ONE
+    * ~1k-row page instead of a whole 20k-row default page, and a
+    * [[SliceRead]] prunes a key's rows to the pages that hold it. Both
+    * stores are point-read-optimized and pay a negligible scan/size
+    * cost for it. */
+  private[storage] val SegmentWriteOptions: Map[String, String] =
     Map("parquet.page.row.count.limit" -> "1024")
 
   /** The rows of `src` when it is already resident on the driver:

@@ -2,7 +2,9 @@ package graft.storage
 
 import java.util.UUID
 
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
@@ -92,8 +94,12 @@ final class TableStore private (
     manifest.version
   }
 
-  /** Append one batch as a new segment; returns the commit version. */
-  def append(df: DataFrame): Long = synchronized {
+  /** Append one batch as a new segment; returns the commit version.
+    * `sortWithin` columns sort the rows inside each written file (a
+    * key layout whose page indexes let [[slice]] prune to the key's
+    * pages); the sort runs after the small-append cut, so a coalesced
+    * micro-batch lands as ONE file sorted end to end. */
+  def append(df: DataFrame, sortWithin: Seq[String] = Nil): Long = synchronized {
     val ver = manifest.version + 1
     val out = df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
       .withColumn("_ver", lit(ver))
@@ -128,7 +134,7 @@ final class TableStore private (
           est <= BigInt(segmentTargetFileBytes)) out.coalesce(1)
         else out
       }
-    val segs = writeSegmentFiles(shaped, ver)
+    val segs = writeSegmentFiles(sorted(shaped, sortWithin), ver)
     FaultPoints.reach("table.append.preCommit")
     commitOrCleanup(
       manifest.copy(version = ver, segments = manifest.segments ++ segs),
@@ -168,14 +174,18 @@ final class TableStore private (
       .load(dir)
 
   /** Copy-on-write rewrite of the whole table (delete / compact).
-    * The rewritten table becomes a single new version. */
-  def rewrite(f: DataFrame => DataFrame): Unit = synchronized {
+    * The rewritten table becomes a single new version. `sortWithin`
+    * as in [[append]]. */
+  def rewrite(
+      f: DataFrame => DataFrame,
+      sortWithin: Seq[String] = Nil
+  ): Unit = synchronized {
     val cur = read
     val ver = manifest.version + 1
     val out = f(cur)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       .withColumn("_ver", lit(ver))
-    val segs = writeSegmentFiles(out, ver)
+    val segs = writeSegmentFiles(sorted(out, sortWithin), ver)
     val old = manifest.segments
     FaultPoints.reach("table.rewrite.preCommit")
     commitOrCleanup(
@@ -183,7 +193,55 @@ final class TableStore private (
         foldedBelow = Some(ver)),
       segs)
     FaultPoints.reach("table.rewrite.preDelete")
-    old.foreach(s => io.delete(FileIO.join(dir, s.path)))
+    old.foreach(s => dropFile(FileIO.join(dir, s.path)))
+  }
+
+  private def sorted(df: DataFrame, cols: Seq[String]): DataFrame =
+    if (cols.isEmpty) df else df.sortWithinPartitions(cols.map(col): _*)
+
+  /** Delete a segment file, first dropping its shared open reader
+    * ([[DirectRead.invalidate]]) so the LRU neither pins the dead
+    * file's disk space nor fills with readers no manifest lists. */
+  private def dropFile(path: String): Unit = {
+    DirectRead.invalidate(path)
+    io.delete(path)
+  }
+
+  /** The committed rows matching `filter` — a parquet predicate over
+    * the on-disk columns, `_ver` included — read on the DRIVER by
+    * [[SliceRead]] from this handle's manifest, as [[read]] and
+    * [[readVersioned]] plan them: no Spark job. Rows are laid out as
+    * the logical columns followed by `_ver`.
+    *
+    * `asOf = Some(v)` reads the snapshot of commit `v`, as
+    * [[readAsOf]] does (the same refusal below a rewrite's fold, from
+    * [[Manifest.asOf]]); a `v` past this handle's version is left to
+    * [[readAsOf]], which reads the on-disk manifest. `version =
+    * Some(v)` reads only the rows commit `v` wrote.
+    *
+    * None when the page-pruned slice exceeds `maxRows` rows or a file
+    * cannot be read on the driver: the caller then runs its job
+    * path. */
+  private[graft] def slice(
+      filter: FilterPredicate,
+      maxRows: Long,
+      asOf: Option[Long] = None,
+      version: Option[Long] = None
+  ): Option[Vector[InternalRow]] = {
+    val m = manifest
+    if (asOf.exists(_ > m.version)) return None
+    val snap = asOf.fold(m.segments)(m.asOf)
+    val segs = version.fold(snap)(v =>
+      snap.filter(s => s.minSeq <= v && v <= s.maxSeq))
+    val ver = FilterApi.longColumn("_ver")
+    // typed as FilterPredicate: the inferred common supertype of the
+    // two operators is a parquet package-private class
+    val cut = Seq[Option[FilterPredicate]](
+      asOf.map(v => FilterApi.ltEq(ver, java.lang.Long.valueOf(v))),
+      version.map(v => FilterApi.eq(ver, java.lang.Long.valueOf(v)))
+    ).flatten.foldLeft(filter)(FilterApi.and)
+    SliceRead.rows(segs.map(s => FileIO.join(dir, s.path)), diskSchema,
+      cut, maxRows)
   }
 
   /** MINOR compaction: fold only the SMALL segments (staged bytes
@@ -237,7 +295,7 @@ final class TableStore private (
         segments = (big ++ segs).sortBy(s => (s.minSeq, s.maxSeq, s.path))),
       segs)
     FaultPoints.reach("table.rewrite.preDelete")
-    small.foreach(s => io.delete(FileIO.join(dir, s.path)))
+    small.foreach(s => dropFile(FileIO.join(dir, s.path)))
     true
   }
 
@@ -304,7 +362,7 @@ final class TableStore private (
       .foreach { f =>
         issues += s"orphan segment data/${f.name}"
         if (doRepair && FsckSweep.oldEnough(f.mtimeMs, minAgeMs))
-          io.delete(f.path)
+          dropFile(f.path)
       }
     committed.segments
       .filterNot(s => io.exists(FileIO.join(dir, s.path)))
@@ -323,7 +381,8 @@ final class TableStore private (
       content: Option[(Long, Long)] = None
   ): List[Segment] = {
     val tmp = FileIO.join(dir, s"tmp-${UUID.randomUUID()}")
-    out.write.mode(SaveMode.Overwrite).parquet(tmp)
+    out.write.options(ParquetLog.SegmentWriteOptions)
+      .mode(SaveMode.Overwrite).parquet(tmp)
     // Small-append coalescing: a batch that arrives with N partitions
     // writes N files regardless of size (the write boundary is often
     // narrow, so AQE never coalesces it), and a store advanced by
@@ -362,7 +421,8 @@ final class TableStore private (
           } else
             spark.read.schema(diskSchema).parquet(tmp)
               .coalesce(target.toInt)
-              .write.mode(SaveMode.Overwrite).parquet(tmp2)
+              .write.options(ParquetLog.SegmentWriteOptions)
+              .mode(SaveMode.Overwrite).parquet(tmp2)
           FsckSweep.deleteRecursively(tmp)
           tmp2
         }
@@ -407,7 +467,7 @@ final class TableStore private (
     try Manifest.commit(dir, next)
     catch {
       case e: Throwable =>
-        segs.foreach(s => io.delete(FileIO.join(dir, s.path)))
+        segs.foreach(s => dropFile(FileIO.join(dir, s.path)))
         throw e
     }
     manifest = next
