@@ -80,15 +80,24 @@ final class MultiLog private[graft] (
 
   /** One sublog's distinct parent seqs in ascending order (index =
     * rank), read on the driver from its bucket- and addr-pruned pages;
-    * None when the slice exceeds the row bound, for the job path. */
-  private[multilog] def ranked(addr: String): Option[Array[Long]] =
+    * None when the slice exceeds the row bound, for the job path.
+    *
+    * `firstRanks = Some(k)` returns only the first `k` ranks: each row
+    * group holds the sublog's seqs in ascending order (the
+    * `(bucket, addr, seq)` layout), so its first `k` distinct seqs
+    * are all it can add to them and its decode stops there. */
+  private[multilog] def ranked(
+      addr: String,
+      firstRanks: Option[Int] = None
+  ): Option[Array[Long]] =
     store.slice(
       FilterApi.and(
         FilterApi.eq(FilterApi.intColumn("bucket"),
           Integer.valueOf(bucketOf(addr))),
         FilterApi.eq(FilterApi.binaryColumn("addr"),
           Binary.fromString(addr))),
-      driverRowBound
+      driverRowBound,
+      firstPerGroup = firstRanks.map(SliceRead.FirstPerGroup(_, "seq"))
     ).map { rows =>
       val seqs = rows.iterator.map(_.getLong(1)).toArray
       java.util.Arrays.sort(seqs)
@@ -98,7 +107,7 @@ final class MultiLog private[graft] (
         if (n == 0 || seqs(i) != seqs(n - 1)) { seqs(n) = seqs(i); n += 1 }
         i += 1
       }
-      java.util.Arrays.copyOf(seqs, n)
+      java.util.Arrays.copyOf(seqs, firstRanks.fold(n)(math.min(n, _)))
     }
 
   /** Fan a batch of `(addr, seq)` rows into the index. Idempotent by
@@ -305,14 +314,16 @@ final class Sublog(
   /** QuerySpec query over ranks. Within the row bound the plan's
     * bounds, direction, limit and seqWrap are applied on the driver
     * to the ranked seqs read at call time, and the answer is a local
-    * frame (collecting it runs no job); above it, the [[toDF]] plan
+    * frame (collecting it runs no job); a forward plan whose answer
+    * lies within the first ranks decodes only those
+    * ([[Sublog.firstRanks]]). Above the bound, the [[toDF]] plan
     * through [[graft.query.QueryBuilder]]. Live sublog tailing goes
     * through the streaming layer (filtered stream on addr). */
   def query(specs: QuerySpec*): DataFrame = {
     guard()
     val plan = QueryPlan.of(specs: _*)
     require(!plan.live, "live sublog queries go through LiveTail")
-    parent.ranked(addr) match {
+    parent.ranked(addr, Sublog.firstRanks(plan)) match {
       case Some(seqs) => Sublog.local(parent.spark, seqs, plan)
       case None => graft.query.QueryBuilder.build(toDF, plan)
     }
@@ -359,6 +370,22 @@ final class Sublog(
 }
 
 object Sublog {
+
+  /** The ranks a forward plan's answer lies within, `[0, k)`: `k` is
+    * the exclusive upper bound, or the lower bound plus the limit,
+    * whichever is smaller. None for a reverse plan (its answer starts
+    * at the last rank) or an unbounded forward one. */
+  private[multilog] def firstRanks(plan: QueryPlan): Option[Int] =
+    if (plan.reverse) None
+    else {
+      val lo = math.max(0L, plan.lower.getOrElse(0L))
+      val byLimit =
+        if (plan.limit < 0) None
+        else Some(if (plan.limit > Long.MaxValue - lo) Long.MaxValue
+          else lo + plan.limit)
+      (plan.upper.toList ++ byLimit).minOption
+        .filter(_ < Int.MaxValue).map(k => math.max(0L, k).toInt)
+    }
 
   /** [[graft.query.QueryBuilder.build]] over `seqs` (index = rank) on
     * the driver: rank bounds, direction, limit and the seqWrap

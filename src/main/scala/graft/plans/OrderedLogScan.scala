@@ -5,16 +5,18 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, Ascending, AttributeReference, Descending, ExprId, SortOrder
+  Alias, Ascending, Attribute, AttributeReference, Descending, ExprId,
+  SortOrder, UnsafeProjection
 }
 import org.apache.spark.sql.catalyst.plans.logical.{
-  Filter, LogicalPlan, Project, Sort
+  Filter, LogicalPlan, Project, ReturnAnswer, Sort
 }
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.{
-  SortExec, SparkPlan, SparkStrategy, UnaryExecNode
+  SQLExecution, SortExec, SparkPlan, SparkStrategy, UnaryExecNode
 }
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 
 import graft.sources.GraftLogScan
 
@@ -51,8 +53,44 @@ import graft.sources.GraftLogScan
   *     locally sorted desc (spillable [[SortExec]], no Exchange) —
   *     global descending order without moving a row between
   *     executors.
+  *
+  * A second case answers SMALL collects on the driver: at the plan
+  * root (`ReturnAnswer`), a graft-log scan under projections of its
+  * own columns and at most one sort by its `seq` — the shapes
+  * [[graft.query.QueryBuilder]] builds — whose exact row count
+  * ([[GraftLogScan.exactRows]], from the planning snapshot's dense
+  * seq ranges) is within [[DriverCollectMaxRows]] is wrapped in a
+  * [[DriverLogCollectExec]]. Its `collect`/`take` read the surviving
+  * segments on the driver with no Spark job, the in-process bounded
+  * `Query` of offset2/qry.go:86-189; the wrapped plan is the one
+  * Spark plans without it.
   */
 object OrderedLogScan extends SparkStrategy {
+
+  /** Row cut of the driver collect: the most rows a root collect of a
+    * graft-log scan reads on the driver instead of in a job. Measured
+    * on 4 cores (local[4]) over a 200k-row log of the bench's event
+    * struct `(event_id, ts_ns, user_id, event_type, amount, props)` in
+    * one page-indexed segment: median of 7 after 3 warm-ups, ms, the
+    * driver read against the same plan's job (`child.executeCollect`)
+    * for a forward range `Gt(37000), Lt(37001 + n), Limit(n)` and a
+    * tail `Reverse, Limit(n)`:
+    *
+    * {{{
+    *     rows   range driver / job   reverse driver / job
+    *      100        2.0 /  31.6          2.4 / 163.2
+    *    1,000        2.8 /  27.8          2.9 / 153.7
+    *   10,000        9.5 /  30.4         10.2 / 157.4
+    *   50,000       42.9 /  51.9         44.7 / 174.1
+    *   65,536       56.4 /  60.5         57.5 / 186.0
+    *  100,000       84.7 /  75.3         87.7 / 195.4
+    * }}}
+    *
+    * The forward range crosses over between 65,536 and 100,000 rows
+    * (the reversed job path decodes its whole packed run row by row,
+    * so the tail read never does here); the cut sits at the last
+    * measured point below it, under [[graft.storage.SliceRead.MaxRows]]. */
+  private[graft] val DriverCollectMaxRows: Long = 1L << 16
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Sort(Seq(so @ SortOrder(attr: AttributeReference, direction, _, _)),
@@ -64,8 +102,38 @@ object OrderedLogScan extends SparkStrategy {
           SortExec(so :: Nil, global = false,
             child = ReversePartitionsExec(planLater(child))) :: Nil
       }
+    case ReturnAnswer(root) =>
+      rootLogScan(root, sorted = false).filter(_._1.exactRows <=
+        DriverCollectMaxRows).map { case (scan, r, reverse) =>
+        DriverLogCollectExec(planLater(root), scan, r.output, reverse,
+          DriverCollectMaxRows)
+      }.toList
     case _ => Nil
   }
+
+  /** The graft-log row scan (not a manifest-answered aggregate) under
+    * `plan`, its relation, and whether the answer is in descending seq
+    * order, when `plan` is that scan under projections of its own
+    * columns and at most one global sort by its `seq`. */
+  private def rootLogScan(
+      plan: LogicalPlan,
+      sorted: Boolean
+  ): Option[(GraftLogScan, DataSourceV2ScanRelation, Boolean)] =
+    plan match {
+      case r: DataSourceV2ScanRelation =>
+        r.scan match {
+          case s: GraftLogScan => Some((s, r, false))
+          case _ => None
+        }
+      case Project(list, child)
+          if list.forall(_.isInstanceOf[AttributeReference]) =>
+        rootLogScan(child, sorted)
+      case Sort(Seq(SortOrder(a: AttributeReference, dir, _, _)), true, child, _)
+          if !sorted && seqOfLogScan(a.exprId, child) =>
+        rootLogScan(child, sorted = true)
+          .map { case (s, r, _) => (s, r, dir == Descending) }
+      case _ => None
+    }
 
   /** Does `id` resolve to the `seq` output of a single ascending
     * graft-log scan under an order-preserving Project/Filter chain? */
@@ -110,6 +178,78 @@ object OrderedLogScan extends SparkStrategy {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ OrderedLogScan
   }
+}
+
+/** The root of a small graft-log collect (see [[OrderedLogScan]]).
+  * `child` is the plan Spark would run without this node — the
+  * `BatchScanExec`, under its projection or ordered drain when there
+  * is one — and `doExecute` is the child's, so `toRdd`, `df.rdd` and
+  * anything built on them run the job path unchanged.
+  *
+  * `executeCollect`/`executeTake` answer on the driver instead:
+  * [[GraftLogScan.driverRows]] reads the scan's planning snapshot
+  * with page pruning, the rows are reversed for a descending sort
+  * (`reverse`) and projected from `scanOutput` (the relation's
+  * columns) to this node's output. When the driver
+  * read refuses (a type it does not convert, more rows than `cut` or
+  * too many files, a planned file gone under a concurrent rewrite, a
+  * read error) the child's own collect answers, as a job.
+  *
+  * Metrics: rows decoded on the driver, segment files it read, and
+  * whether the job path answered instead (0/1). */
+final case class DriverLogCollectExec(
+    child: SparkPlan,
+    scan: GraftLogScan,
+    scanOutput: Seq[Attribute],
+    reverse: Boolean,
+    cut: Long
+) extends UnaryExecNode {
+
+  override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "driverRows" -> SQLMetrics.createMetric(sparkContext,
+      "rows decoded on the driver"),
+    "driverFiles" -> SQLMetrics.createMetric(sparkContext,
+      "segment files read on the driver"),
+    "fallback" -> SQLMetrics.createMetric(sparkContext,
+      "job path taken"))
+
+  override protected def doExecute(): RDD[InternalRow] = child.execute()
+
+  override def executeCollect(): Array[InternalRow] =
+    answer(Int.MaxValue, child.executeCollect())
+
+  override def executeTake(n: Int): Array[InternalRow] =
+    answer(n, child.executeTake(n))
+
+  /** The first `n` rows read on the driver, else `viaJob`. */
+  private def answer(n: Int, viaJob: => Array[InternalRow])
+      : Array[InternalRow] = {
+    val got = scan.driverRows(cut)
+    got match {
+      case Some(rows) =>
+        metrics("driverRows") += rows.size
+        metrics("driverFiles") += scan.segmentFiles
+      case None => metrics("fallback") += 1
+    }
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
+      metrics.values.toSeq)
+    got.fold(viaJob) { rows =>
+      val project = UnsafeProjection.create(output, scanOutput)
+      (if (reverse) rows.reverseIterator else rows.iterator)
+        .take(n).map(r => project(r).copy()).toArray
+    }
+  }
+
+  override def simpleString(maxFields: Int): String =
+    s"DriverLogCollect cut=$cut rows"
+
+  override protected def withNewChildInternal(c: SparkPlan): SparkPlan =
+    copy(child = c)
 }
 
 /** Ascending ordered drain: pass the child through unchanged, but

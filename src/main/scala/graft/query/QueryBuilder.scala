@@ -9,19 +9,34 @@ import graft.core.QueryPlan
   *
   * The reference applies its specs imperatively per-`Next`
   * (offset2/qry.go:101-189); here each spec becomes a declarative
-  * relational operator and Catalyst does the physical work:
+  * relational operator and Catalyst does the physical work. Over a
+  * `graft-log` frame ([[graft.storage.ParquetLog.toDF]]):
   *
-  *   - seq bounds → `filter` → parquet row-group pruning (the pushed
-  *     predicates show up in the scan's `PushedFilters`), same effect
-  *     as the reference's cursor seek (offset2/qry.go:35-69)
-  *   - limit → `LocalLimit`/`GlobalLimit` short-circuit
-  *     (offset2/qry.go:105-108)
-  *   - reverse+limit → `TakeOrderedAndProjectExec` top-k, no full sort
-  *     (offset2/qry.go:86-99); note we implement the CORRECT
-  *     reverse-with-bounds composition (the reference has a known bug
-  *     here, test/simple.go:198-213 / issue #6)
+  *   - seq bounds → `filter` → exact seq bounds in the scan
+  *     (`PushedFilters`): whole segments are pruned from the manifest
+  *     and the reader cuts the boundary ones, with no residual filter
+  *     — the reference's cursor seek (offset2/qry.go:35-69)
+  *   - order + limit → top-N by seq, folded by
+  *     [[graft.sources.GraftLogScanBuilder.pushTopN]] into the seq
+  *     bounds themselves: dense seqs make the first (or, reversed, the
+  *     last) `n` rows of a range a smaller range, so the plan keeps no
+  *     Sort and no Limit, and a reverse scan emits its partitions and
+  *     rows in descending order (offset2/qry.go:86-108); note we
+  *     implement the CORRECT reverse-with-bounds composition (the
+  *     reference has a known bug here, test/simple.go:198-213 /
+  *     issue #6)
+  *   - order without a limit → a shuffle-free ordered drain
+  *     ([[graft.plans.OrderedLogScan]])
   *   - seqWrap → projection: keep `(seq, value)` vs `value` only
   *     (seqwrap.go:8-34)
+  *
+  * The scan's row count is then exact before any IO. Collecting a
+  * query of at most [[graft.plans.OrderedLogScan.DriverCollectMaxRows]]
+  * rows runs no Spark job: the segment pages that hold the range are
+  * read on the driver ([[graft.plans.DriverLogCollectExec]]), the
+  * in-process pull of offset2/qry.go. Other backends (a [[graft
+  * .storage.MemLog]], a sublog's rank frame) run the same operators
+  * through Spark's own planning.
   *
   * Nulled entries flow through queries as rows with
   * `nulled = true, value = null` — the reference's "error as a value"

@@ -4,6 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -27,7 +28,9 @@ import org.apache.spark.sql.sources.{
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.storage.{Manifest, ParquetLog, SegmentBatches, SegmentRecords}
+import graft.storage.{
+  FileIO, Manifest, ParquetLog, SegmentBatches, SegmentRecords, SliceRead
+}
 
 /** DataSourceV2 connector for engine logs:
   * {{{ spark.read.format("graft-log").load(dir) }}}
@@ -770,6 +773,45 @@ final class GraftLogScan(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftLogReaderFactory(scanSchema, columnar = ColumnarOpt.enabled)
+
+  /** The surviving segments that hold rows of `[lower, upper]`, in
+    * seq order, with the seq range `[lo, hi]` of each that this scan
+    * emits. */
+  private lazy val cuts: List[(graft.storage.Segment, Long, Long)] =
+    surviving.sortBy(_.minSeq)
+      .map(s => (s, math.max(lower, s.minSeq), math.min(upper, s.maxSeq)))
+      .filter { case (_, lo, hi) => lo <= hi }
+
+  /** Rows this scan emits, exactly: dense seqs make each segment's
+    * share its cut's width. From the planning snapshot, no IO. */
+  def exactRows: Long = cuts.map { case (_, lo, hi) => hi - lo + 1 }.sum
+
+  /** Segment files a [[driverRows]] read opens. */
+  def segmentFiles: Int = cuts.size
+
+  /** This scan's rows read ON THE DRIVER, in scan order (seq
+    * descending for a reversed top-N), laid out as [[readSchema]]: the
+    * planning snapshot's files through [[graft.storage.SliceRead]],
+    * with a `seq >= lo AND seq <= hi` predicate so footer statistics
+    * and column indexes prune row groups and pages. The pages kept
+    * may hold more rows than the cut (the partial pages at its ends;
+    * whole row groups of a file without page indexes): up to twice
+    * `maxRows` are decoded. None when the scan emits more than
+    * `maxRows` rows, or when `SliceRead` refuses: more pages than
+    * that, a type it does not convert, too many files, a planned file
+    * gone under a concurrent rewrite, a read error. The caller then
+    * runs the scan as a job. */
+  def driverRows(maxRows: Long): Option[Vector[InternalRow]] = {
+    if (exactRows > maxRows) return None
+    if (cuts.isEmpty) return Some(Vector.empty)
+    val seq = FilterApi.longColumn("seq")
+    SliceRead.rows(cuts.map(c => FileIO.join(dir, c._1.path)), scanSchema,
+      FilterApi.and(
+        FilterApi.gtEq(seq, java.lang.Long.valueOf(cuts.head._2)),
+        FilterApi.ltEq(seq, java.lang.Long.valueOf(cuts.last._3))),
+      2 * maxRows
+    ).map(rows => if (descending) rows.reverse else rows)
+  }
 
   override def description(): String =
     s"graft-log $dir seq∈[${if (lower == Long.MinValue) "-∞" else lower}, " +

@@ -51,7 +51,14 @@ trait Log {
     append(spark.createDataset(values).toDF("value"))
 
   /** Batch query per the QuerySpec algebra — shared across backends
-    * (the algebra lowers onto the `toDF` view identically). */
+    * (the algebra lowers onto the `toDF` view identically, see
+    * [[graft.query.QueryBuilder]]). The frame is lazy. On a
+    * [[ParquetLog]] its bounds, order and limit become exact seq
+    * bounds of the `graft-log` scan, so a bounded query reads only the
+    * segments that hold its range, and collecting one of at most
+    * [[graft.plans.OrderedLogScan.DriverCollectMaxRows]] rows runs no
+    * Spark job: the rows are read on the driver from the planned
+    * segments' pages. */
   def query(specs: QuerySpec*): DataFrame = {
     val plan = QueryPlan.of(specs: _*)
     require(!plan.live, "use liveQuery for Live specs")

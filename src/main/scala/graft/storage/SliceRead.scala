@@ -33,7 +33,13 @@ import org.apache.spark.sql.types.StructType
   * page, and the caller runs its Spark job instead. Surviving rows
   * are decoded through parquet's record filter (only records that
   * satisfy the predicate are converted) by
-  * [[DirectRead.convertInternalRow]].
+  * [[DirectRead.convertInternalRow]]. A caller that needs only the
+  * first matching keys of each row group ([[FirstPerGroup]]) stops
+  * that group's decode there.
+  *
+  * Callers: the derived-view reads ([[TableStore.slice]]) and small
+  * root collects of graft-log scans
+  * ([[graft.sources.GraftLogScan.driverRows]]).
   */
 private[graft] object SliceRead {
 
@@ -52,8 +58,21 @@ private[graft] object SliceRead {
     * last fold) runs the job path. */
   private val MaxFiles: Int = DirectRead.MaxCached / 2
 
+  /** Decode cap per row group: stop a group after the matching rows
+    * that carry its first `k` distinct values of the long `column`.
+    * Sound where the rows the predicate admits are sorted by `column`
+    * within each row group (one addr's slice under a
+    * `(bucket, addr, seq)` layout, capped on `seq`): a group's unread
+    * rows then hold only larger values, or repeats of the last one
+    * read. Per row group, not per file: a `ParquetConcat`-merged file
+    * is sorted only within each of its row groups. Distinct values,
+    * not rows: a rewrite that does not deduplicate leaves equal
+    * values side by side in one group. */
+  final case class FirstPerGroup(k: Int, column: String)
+
   /** Rows of `files` that satisfy `filter`, laid out as `schema`, in
-    * file order; None when the page-pruned row ranges hold more than
+    * file order; with `firstPerGroup`, only each row group's rows up
+    * to its cap. None when the page-pruned row ranges hold more than
     * `maxRows` rows, when there are more than [[MaxFiles]] files, when
     * `schema` holds a type the converter does not support, or when a
     * file cannot be read on the driver. */
@@ -61,7 +80,8 @@ private[graft] object SliceRead {
       files: Seq[String],
       schema: StructType,
       filter: FilterPredicate,
-      maxRows: Long
+      maxRows: Long,
+      firstPerGroup: Option[FirstPerGroup] = None
   ): Option[Vector[InternalRow]] = {
     if (files.length > MaxFiles || !DirectRead.supported(schema)) return None
     val compat = FilterCompat.get(filter)
@@ -72,9 +92,10 @@ private[graft] object SliceRead {
       }
       if (planned.iterator.flatMap(_._2).map(_._2.rowCount).sum > maxRows)
         return None
+      val cap = firstPerGroup.map(c => (c.k, schema.fieldIndex(c.column)))
       val out = Vector.newBuilder[InternalRow]
       planned.foreach { case (seg, groups) =>
-        decode(seg, groups, schema, compat, out += _)
+        decode(seg, groups, schema, compat, cap, out += _)
       }
       Some(out.result())
     } catch {
@@ -104,8 +125,10 @@ private[graft] object SliceRead {
       groups: Seq[(Int, RowRanges)],
       schema: StructType,
       filter: FilterCompat.Filter,
+      cap: Option[(Int, Int)],
       emit: InternalRow => Unit
   ): Unit = seg.synchronized {
+    val (k, capIdx) = cap.getOrElse((Int.MaxValue, -1))
     groups.foreach { case (b, ranges) =>
       val pages =
         if (ranges.rowCount == seg.blocks(b).getRowCount)
@@ -114,11 +137,19 @@ private[graft] object SliceRead {
       val rr = seg.columnIO.getRecordReader(pages,
         new GroupRecordConverter(seg.schema), filter)
       var n = pages.getRowCount
-      while (n > 0) {
+      var seen = 0 // distinct cap-column values read in this group
+      var last = 0L
+      while (n > 0 && seen <= k) {
         val g = rr.read()
         // null = a record the predicate rejected
-        if (g != null)
-          emit(DirectRead.convertInternalRow(g, schema, seg.int96Mode))
+        if (g != null) {
+          val row = DirectRead.convertInternalRow(g, schema, seg.int96Mode)
+          if (capIdx >= 0 && (seen == 0 || row.getLong(capIdx) != last)) {
+            seen += 1
+            last = row.getLong(capIdx)
+          }
+          if (seen <= k) emit(row)
+        }
         n -= 1
       }
     }

@@ -219,6 +219,9 @@ final class TableStore private (
     * [[readAsOf]], which reads the on-disk manifest. `version =
     * Some(v)` reads only the rows commit `v` wrote.
     *
+    * `firstPerGroup` caps each row group's decode
+    * ([[SliceRead.FirstPerGroup]]).
+    *
     * None when the page-pruned slice exceeds `maxRows` rows or a file
     * cannot be read on the driver: the caller then runs its job
     * path. */
@@ -226,7 +229,8 @@ final class TableStore private (
       filter: FilterPredicate,
       maxRows: Long,
       asOf: Option[Long] = None,
-      version: Option[Long] = None
+      version: Option[Long] = None,
+      firstPerGroup: Option[SliceRead.FirstPerGroup] = None
   ): Option[Vector[InternalRow]] = {
     val m = manifest
     if (asOf.exists(_ > m.version)) return None
@@ -241,7 +245,7 @@ final class TableStore private (
       version.map(v => FilterApi.eq(ver, java.lang.Long.valueOf(v)))
     ).flatten.foldLeft(filter)(FilterApi.and)
     SliceRead.rows(segs.map(s => FileIO.join(dir, s.path)), diskSchema,
-      cut, maxRows)
+      cut, maxRows, firstPerGroup)
   }
 
   /** MINOR compaction: fold only the SMALL segments (staged bytes

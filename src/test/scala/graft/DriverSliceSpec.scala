@@ -2,6 +2,7 @@ package graft
 
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
 import graft.core.GraftErrors
 import graft.core.QuerySpec
@@ -211,6 +212,62 @@ class DriverSliceSpec extends SparkSpec {
       job.sublog("even").query(Limit(3)).schema)
     assert(jobsDuring(job.sublog("even").seq) > 0)
     assert(jobsDuring(rows(job.sublog("even").query(Limit(2)))) > 0)
+  }
+
+  test("a forward sublog limit decodes only each row group's first " +
+    "ranks and stays exact over cross-file duplicates, a concat-merged " +
+    "file and a rewrite that keeps duplicates") {
+    val dir = tmpDir("ds-ml-cap-")
+    val mem = new MemMultiLog(spark)
+    // one commit staged as three sorted files (one per `part`) and
+    // concat-merged into one segment of three row groups: the seqs of
+    // sublogs "a" and "b" interleave across the groups, so no
+    // file-wide prefix holds their first ranks; sublog "d" sits in
+    // one group with every seq written twice, side by side
+    val first = (0L until 60L).map(s => ("a", s * 3, s % 3)) ++
+      (0L until 20L).map(s => ("b", s, s % 3)) ++
+      (0L until 40L).flatMap(s => Seq(("d", s, 0L), ("d", s, 0L)))
+    spark.conf.set("spark.graft.smallAppendCoalesceMaxBytes", "0")
+    try TableStore.open(spark, dir, MultiLog.schema).append(
+      first.map { case (a, s, p) => (a, s, MultiLog.bucketOf(a), p) }
+        .toDF("addr", "seq", "bucket", "part")
+        .repartitionByRange(3, col("part")),
+      sortWithin = Seq("bucket", "addr", "seq"))
+    finally spark.conf.unset("spark.graft.smallAppendCoalesceMaxBytes")
+    mem.appendBatch(first.map(r => (r._1, r._2)).toDF("addr", "seq"))
+    val merged = files(dir)
+    assert(merged.length == 1 && !hasPageIndex(merged.head))
+    val r = ParquetFileReader.open(
+      FileIO.forPath(merged.head).inputFile(merged.head))
+    try assert(r.getRowGroups.size == 3) finally r.close()
+    val ml = MultiLog.open(spark, dir)
+    // a second file: duplicates of the first commit and new low seqs
+    val second = (0L until 30L).map(s => ("a", s * 3)) ++
+      Seq("a" -> 1L, "a" -> 4L, "b" -> 3L, "b" -> 100L)
+    ml.appendBatch(second.toDF("addr", "seq"))
+    mem.appendBatch(second.toDF("addr", "seq"))
+
+    val limited: Seq[Seq[QuerySpec]] = Seq(
+      Seq(Limit(5)), Seq(Gt(3), Limit(7)), Seq(Gte(10), Lt(14)), Seq(Lt(4)),
+      Seq(Limit(0)), Seq(Gte(58), Limit(10)), Seq(Gte(200), Limit(3)),
+      Seq(Lte(2), Limit(100)))
+    def check(): Unit = {
+      val job = new MultiLog(spark, dir, 0L)
+      val driver = MultiLog.open(spark, dir)
+      for (addr <- Seq("a", "b", "d"); base <- limited;
+           wrap <- Seq(false, true)) {
+        val specs = if (wrap) base :+ SeqWrap(true) else base
+        var d = Seq.empty[Row]
+        assert(jobsDuring { d = rows(driver.sublog(addr).query(specs: _*)) } == 0)
+        assert(d == rows(mem.sublog(addr).query(specs: _*)), s"$addr $specs")
+        assert(d == rows(job.sublog(addr).query(specs: _*)), s"$addr $specs")
+      }
+    }
+    check()
+    // the rewrite of a delete keeps duplicates too
+    ml.delete("b")
+    mem.delete("b")
+    check()
   }
 
   test("compact and delete drop the shared readers of the files they " +
