@@ -97,7 +97,7 @@ final class MultiLog private[graft] (
         FilterApi.eq(FilterApi.binaryColumn("addr"),
           Binary.fromString(addr))),
       driverRowBound,
-      firstPerGroup = firstRanks.map(SliceRead.FirstPerGroup(_, "seq"))
+      firstSeqsPerGroup = firstRanks
     ).map { rows =>
       val seqs = rows.iterator.map(_.getLong(1)).toArray
       java.util.Arrays.sort(seqs)

@@ -105,16 +105,16 @@ object OrderedLogScan extends SparkStrategy {
     case ReturnAnswer(root) =>
       rootLogScan(root, sorted = false).filter(_._1.exactRows <=
         DriverCollectMaxRows).map { case (scan, r, reverse) =>
-        DriverLogCollectExec(planLater(root), scan, r.output, reverse,
-          DriverCollectMaxRows)
+        DriverLogCollectExec(planLater(root), scan, r.output, reverse)
       }.toList
     case _ => Nil
   }
 
   /** The graft-log row scan (not a manifest-answered aggregate) under
     * `plan`, its relation, and whether the answer is in descending seq
-    * order, when `plan` is that scan under projections of its own
-    * columns and at most one global sort by its `seq`. */
+    * order (the sort's direction, else the scan's own), when `plan` is
+    * that scan under projections of its own columns and at most one
+    * global sort by its `seq`. */
   private def rootLogScan(
       plan: LogicalPlan,
       sorted: Boolean
@@ -122,7 +122,7 @@ object OrderedLogScan extends SparkStrategy {
     plan match {
       case r: DataSourceV2ScanRelation =>
         r.scan match {
-          case s: GraftLogScan => Some((s, r, false))
+          case s: GraftLogScan => Some((s, r, s.isDescending))
           case _ => None
         }
       case Project(list, child)
@@ -188,12 +188,13 @@ object OrderedLogScan extends SparkStrategy {
   *
   * `executeCollect`/`executeTake` answer on the driver instead:
   * [[GraftLogScan.driverRows]] reads the scan's planning snapshot
-  * with page pruning, the rows are reversed for a descending sort
-  * (`reverse`) and projected from `scanOutput` (the relation's
-  * columns) to this node's output. When the driver
-  * read refuses (a type it does not convert, more rows than `cut` or
-  * too many files, a planned file gone under a concurrent rewrite, a
-  * read error) the child's own collect answers, as a job.
+  * with page pruning in ascending seq order, the rows are reversed
+  * for a descending answer (`reverse`) and projected from
+  * `scanOutput` (the relation's columns) to this node's output. When
+  * the driver read refuses (a type it does not convert, more pages
+  * than twice [[OrderedLogScan.DriverCollectMaxRows]] rows or too
+  * many files, a planned file gone under a concurrent rewrite, a read
+  * error) the child's own collect answers, as a job.
   *
   * Metrics: rows decoded on the driver, segment files it read, and
   * whether the job path answered instead (0/1). */
@@ -201,8 +202,7 @@ final case class DriverLogCollectExec(
     child: SparkPlan,
     scan: GraftLogScan,
     scanOutput: Seq[Attribute],
-    reverse: Boolean,
-    cut: Long
+    reverse: Boolean
 ) extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
@@ -228,7 +228,7 @@ final case class DriverLogCollectExec(
   /** The first `n` rows read on the driver, else `viaJob`. */
   private def answer(n: Int, viaJob: => Array[InternalRow])
       : Array[InternalRow] = {
-    val got = scan.driverRows(cut)
+    val got = scan.driverRows(OrderedLogScan.DriverCollectMaxRows)
     got match {
       case Some(rows) =>
         metrics("driverRows") += rows.size
@@ -246,7 +246,7 @@ final case class DriverLogCollectExec(
   }
 
   override def simpleString(maxFields: Int): String =
-    s"DriverLogCollect cut=$cut rows"
+    s"DriverLogCollect cut=${OrderedLogScan.DriverCollectMaxRows} rows"
 
   override protected def withNewChildInternal(c: SparkPlan): SparkPlan =
     copy(child = c)

@@ -789,28 +789,25 @@ final class GraftLogScan(
   /** Segment files a [[driverRows]] read opens. */
   def segmentFiles: Int = cuts.size
 
-  /** This scan's rows read ON THE DRIVER, in scan order (seq
-    * descending for a reversed top-N), laid out as [[readSchema]]: the
-    * planning snapshot's files through [[graft.storage.SliceRead]],
-    * with a `seq >= lo AND seq <= hi` predicate so footer statistics
-    * and column indexes prune row groups and pages. The pages kept
-    * may hold more rows than the cut (the partial pages at its ends;
-    * whole row groups of a file without page indexes): up to twice
-    * `maxRows` are decoded. None when the scan emits more than
-    * `maxRows` rows, or when `SliceRead` refuses: more pages than
-    * that, a type it does not convert, too many files, a planned file
-    * gone under a concurrent rewrite, a read error. The caller then
-    * runs the scan as a job. */
+  /** This scan's rows read ON THE DRIVER, in ascending seq order,
+    * laid out as [[readSchema]]: the planning snapshot's files through
+    * [[graft.storage.SliceRead]], with a `seq >= lo AND seq <= hi`
+    * predicate so footer statistics and column indexes prune row
+    * groups and pages. For a scan whose [[exactRows]] is at most
+    * `maxRows`: the pages kept may hold more rows than the cut (the
+    * partial pages at its ends; whole row groups of a file without
+    * page indexes), so up to twice `maxRows` are decoded. None when
+    * `SliceRead` refuses: more pages than that, a type it does not
+    * convert, too many files, a planned file gone under a concurrent
+    * rewrite, a read error. The caller then runs the scan as a job. */
   def driverRows(maxRows: Long): Option[Vector[InternalRow]] = {
-    if (exactRows > maxRows) return None
     if (cuts.isEmpty) return Some(Vector.empty)
     val seq = FilterApi.longColumn("seq")
     SliceRead.rows(cuts.map(c => FileIO.join(dir, c._1.path)), scanSchema,
       FilterApi.and(
         FilterApi.gtEq(seq, java.lang.Long.valueOf(cuts.head._2)),
         FilterApi.ltEq(seq, java.lang.Long.valueOf(cuts.last._3))),
-      2 * maxRows
-    ).map(rows => if (descending) rows.reverse else rows)
+      2 * maxRows)
   }
 
   override def description(): String =

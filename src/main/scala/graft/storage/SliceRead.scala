@@ -34,8 +34,8 @@ import org.apache.spark.sql.types.StructType
   * are decoded through parquet's record filter (only records that
   * satisfy the predicate are converted) by
   * [[DirectRead.convertInternalRow]]. A caller that needs only the
-  * first matching keys of each row group ([[FirstPerGroup]]) stops
-  * that group's decode there.
+  * smallest matching seqs of each row group (`firstSeqsPerGroup` of
+  * [[rows]]) stops that group's decode there.
   *
   * Callers: the derived-view reads ([[TableStore.slice]]) and small
   * root collects of graft-log scans
@@ -58,30 +58,30 @@ private[graft] object SliceRead {
     * last fold) runs the job path. */
   private val MaxFiles: Int = DirectRead.MaxCached / 2
 
-  /** Decode cap per row group: stop a group after the matching rows
-    * that carry its first `k` distinct values of the long `column`.
-    * Sound where the rows the predicate admits are sorted by `column`
-    * within each row group (one addr's slice under a
-    * `(bucket, addr, seq)` layout, capped on `seq`): a group's unread
-    * rows then hold only larger values, or repeats of the last one
-    * read. Per row group, not per file: a `ParquetConcat`-merged file
-    * is sorted only within each of its row groups. Distinct values,
-    * not rows: a rewrite that does not deduplicate leaves equal
-    * values side by side in one group. */
-  final case class FirstPerGroup(k: Int, column: String)
-
   /** Rows of `files` that satisfy `filter`, laid out as `schema`, in
-    * file order; with `firstPerGroup`, only each row group's rows up
-    * to its cap. None when the page-pruned row ranges hold more than
+    * file order. None when the page-pruned row ranges hold more than
     * `maxRows` rows, when there are more than [[MaxFiles]] files, when
     * `schema` holds a type the converter does not support, or when a
-    * file cannot be read on the driver. */
+    * file cannot be read on the driver.
+    *
+    * `firstSeqsPerGroup = Some(k)` stops each row group's decode after
+    * the matching rows that carry its first `k` distinct values of the
+    * long `seq` column. Sound only where the rows the predicate admits
+    * are sorted by `seq` within each row group — one addr's slice of a
+    * [[TableStore]] written with a `(bucket, addr, seq)` `sortWithin`
+    * layout, which every write path keeps per row group (the
+    * row-group concat copies sorted groups; the coalesce fallback
+    * sorts again): a group's unread rows then hold only larger seqs,
+    * or repeats of the last one read. Per row group, not per file: a
+    * `ParquetConcat`-merged file is sorted only within each of its row
+    * groups. Distinct values, not rows: a rewrite that does not
+    * deduplicate leaves equal seqs side by side in one group. */
   def rows(
       files: Seq[String],
       schema: StructType,
       filter: FilterPredicate,
       maxRows: Long,
-      firstPerGroup: Option[FirstPerGroup] = None
+      firstSeqsPerGroup: Option[Int] = None
   ): Option[Vector[InternalRow]] = {
     if (files.length > MaxFiles || !DirectRead.supported(schema)) return None
     val compat = FilterCompat.get(filter)
@@ -92,7 +92,7 @@ private[graft] object SliceRead {
       }
       if (planned.iterator.flatMap(_._2).map(_._2.rowCount).sum > maxRows)
         return None
-      val cap = firstPerGroup.map(c => (c.k, schema.fieldIndex(c.column)))
+      val cap = firstSeqsPerGroup.map(k => (k, schema.fieldIndex("seq")))
       val out = Vector.newBuilder[InternalRow]
       planned.foreach { case (seg, groups) =>
         decode(seg, groups, schema, compat, cap, out += _)

@@ -134,7 +134,7 @@ final class TableStore private (
           est <= BigInt(segmentTargetFileBytes)) out.coalesce(1)
         else out
       }
-    val segs = writeSegmentFiles(sorted(shaped, sortWithin), ver)
+    val segs = writeSegmentFiles(shaped, ver, sortWithin)
     FaultPoints.reach("table.append.preCommit")
     commitOrCleanup(
       manifest.copy(version = ver, segments = manifest.segments ++ segs),
@@ -185,7 +185,7 @@ final class TableStore private (
     val out = f(cur)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       .withColumn("_ver", lit(ver))
-    val segs = writeSegmentFiles(sorted(out, sortWithin), ver)
+    val segs = writeSegmentFiles(out, ver, sortWithin)
     val old = manifest.segments
     FaultPoints.reach("table.rewrite.preCommit")
     commitOrCleanup(
@@ -219,8 +219,8 @@ final class TableStore private (
     * [[readAsOf]], which reads the on-disk manifest. `version =
     * Some(v)` reads only the rows commit `v` wrote.
     *
-    * `firstPerGroup` caps each row group's decode
-    * ([[SliceRead.FirstPerGroup]]).
+    * `firstSeqsPerGroup` caps each row group's decode
+    * ([[SliceRead.rows]]).
     *
     * None when the page-pruned slice exceeds `maxRows` rows or a file
     * cannot be read on the driver: the caller then runs its job
@@ -230,7 +230,7 @@ final class TableStore private (
       maxRows: Long,
       asOf: Option[Long] = None,
       version: Option[Long] = None,
-      firstPerGroup: Option[SliceRead.FirstPerGroup] = None
+      firstSeqsPerGroup: Option[Int] = None
   ): Option[Vector[InternalRow]] = {
     val m = manifest
     if (asOf.exists(_ > m.version)) return None
@@ -245,7 +245,7 @@ final class TableStore private (
       version.map(v => FilterApi.eq(ver, java.lang.Long.valueOf(v)))
     ).flatten.foldLeft(filter)(FilterApi.and)
     SliceRead.rows(segs.map(s => FileIO.join(dir, s.path)), diskSchema,
-      cut, maxRows, firstPerGroup)
+      cut, maxRows, firstSeqsPerGroup)
   }
 
   /** MINOR compaction: fold only the SMALL segments (staged bytes
@@ -291,8 +291,8 @@ final class TableStore private (
     val out = spark.read.schema(diskSchema)
       .parquet(small.map(s => FileIO.join(dir, s.path)): _*)
       .repartitionByRange(targetPartitions, layout.map(col): _*)
-      .sortWithinPartitions(layout.map(col): _*)
-    val segs = writeSegmentFiles(out, ver, content = Some((cMin, cMax)))
+    val segs = writeSegmentFiles(out, ver, sortWithin = layout,
+      content = Some((cMin, cMax)))
     FaultPoints.reach("table.rewrite.preCommit")
     commitOrCleanup(
       manifest.copy(version = ver,
@@ -375,17 +375,23 @@ final class TableStore private (
   }
 
   /** Write `out` as new segment files under data/ and return their
-    * manifest entries (not yet committed). `content` overrides the
-    * per-file `[minSeq, maxSeq]` entry range — a MINOR fold's merged
-    * files carry the folded inputs' version range instead of the
-    * fold's own commit version. */
+    * manifest entries (not yet committed). `sortWithin` sorts the rows
+    * of each written file, and every row group of a published file
+    * keeps that order (the sublog limit read relies on it): the
+    * row-group concat copies sorted groups whole, and the coalesce
+    * fallback, which runs several staged files into one output file
+    * (and one row group), sorts again after the coalesce. `content`
+    * overrides the per-file `[minSeq, maxSeq]` entry range — a MINOR
+    * fold's merged files carry the folded inputs' version range
+    * instead of the fold's own commit version. */
   private def writeSegmentFiles(
       out: DataFrame,
       ver: Long,
+      sortWithin: Seq[String],
       content: Option[(Long, Long)] = None
   ): List[Segment] = {
     val tmp = FileIO.join(dir, s"tmp-${UUID.randomUUID()}")
-    out.write.options(ParquetLog.SegmentWriteOptions)
+    sorted(out, sortWithin).write.options(ParquetLog.SegmentWriteOptions)
       .mode(SaveMode.Overwrite).parquet(tmp)
     // Small-append coalescing: a batch that arrives with N partitions
     // writes N files regardless of size (the write boundary is often
@@ -423,8 +429,8 @@ final class TableStore private (
                   FileIO.join(tmp2, f"part-$i%05d.parquet"))
               }
           } else
-            spark.read.schema(diskSchema).parquet(tmp)
-              .coalesce(target.toInt)
+            sorted(spark.read.schema(diskSchema).parquet(tmp)
+              .coalesce(target.toInt), sortWithin)
               .write.options(ParquetLog.SegmentWriteOptions)
               .mode(SaveMode.Overwrite).parquet(tmp2)
           FsckSweep.deleteRecursively(tmp)

@@ -247,27 +247,84 @@ class DriverSliceSpec extends SparkSpec {
     ml.appendBatch(second.toDF("addr", "seq"))
     mem.appendBatch(second.toDF("addr", "seq"))
 
-    val limited: Seq[Seq[QuerySpec]] = Seq(
-      Seq(Limit(5)), Seq(Gt(3), Limit(7)), Seq(Gte(10), Lt(14)), Seq(Lt(4)),
-      Seq(Limit(0)), Seq(Gte(58), Limit(10)), Seq(Gte(200), Limit(3)),
-      Seq(Lte(2), Limit(100)))
-    def check(): Unit = {
-      val job = new MultiLog(spark, dir, 0L)
-      val driver = MultiLog.open(spark, dir)
-      for (addr <- Seq("a", "b", "d"); base <- limited;
-           wrap <- Seq(false, true)) {
-        val specs = if (wrap) base :+ SeqWrap(true) else base
-        var d = Seq.empty[Row]
-        assert(jobsDuring { d = rows(driver.sublog(addr).query(specs: _*)) } == 0)
-        assert(d == rows(mem.sublog(addr).query(specs: _*)), s"$addr $specs")
-        assert(d == rows(job.sublog(addr).query(specs: _*)), s"$addr $specs")
-      }
-    }
-    check()
+    checkLimits(dir, mem, Seq("a", "b", "d"))
     // the rewrite of a delete keeps duplicates too
     ml.delete("b")
     mem.delete("b")
-    check()
+    checkLimits(dir, mem, Seq("a", "b", "d"))
+  }
+
+  test("a forward sublog limit stays exact over the coalesce fallback " +
+    "of an append, a delete rewrite and a minor fold, each of which " +
+    "runs several sorted staged files into one row group") {
+    val dir = tmpDir("ds-ml-fallback-")
+    val mem = new MemMultiLog(spark)
+    // every staged merge takes the Spark coalesce fallback
+    spark.conf.set("spark.graft.segmentMergeDriverMaxBytes", "0")
+    try {
+      // three staged files of falling size (one per `part`): sublog
+      // "a"'s highest seqs in the largest, its lowest in the smallest,
+      // so a concatenation in name or in size order puts them out of
+      // seq order
+      val first = (50L until 300L).map(s => ("a", s, 0L)) ++
+        (20L until 50L).flatMap(s => Seq(("a", s, 1L), ("b", s, 1L))) ++
+        (0L until 20L).map(s => ("a", s, 2L))
+      spark.conf.set("spark.graft.smallAppendCoalesceMaxBytes", "0")
+      try TableStore.open(spark, dir, MultiLog.schema).append(
+        first.map { case (a, s, p) => (a, s, MultiLog.bucketOf(a), p) }
+          .toDF("addr", "seq", "bucket", "part")
+          .repartitionByRange(3, col("part")),
+        sortWithin = Seq("bucket", "addr", "seq"))
+      finally spark.conf.unset("spark.graft.smallAppendCoalesceMaxBytes")
+      mem.appendBatch(first.map(r => (r._1, r._2)).toDF("addr", "seq"))
+      // one published file, written by Spark (the concat drops page
+      // indexes), so the fallback ran
+      def oneSparkFile(): Unit = {
+        val fs = files(dir)
+        assert(fs.length == 1 && hasPageIndex(fs.head), fs)
+      }
+      oneSparkFile()
+      checkLimits(dir, mem, Seq("a", "b"))
+
+      val ml = MultiLog.open(spark, dir)
+      val low = Seq("a" -> 1L, "a" -> 400L, "b" -> 3L, "c" -> 7L)
+      ml.appendBatch(low.toDF("addr", "seq"))
+      mem.appendBatch(low.toDF("addr", "seq"))
+      // the delete rewrite reads both files back as two staged files
+      ml.delete("c")
+      mem.delete("c")
+      oneSparkFile()
+      checkLimits(dir, mem, Seq("a", "b", "c"))
+
+      // a minor fold range-partitions several small segments
+      val more = (300L until 310L).map(s => "a" -> s) :+ ("b" -> 0L)
+      ml.appendBatch(more.toDF("addr", "seq"))
+      mem.appendBatch(more.toDF("addr", "seq"))
+      assert(TableStore.open(spark, dir, MultiLog.schema)
+        .compactSmall(Seq("bucket", "addr", "seq"), targetPartitions = 4))
+      oneSparkFile()
+      checkLimits(dir, mem, Seq("a", "b"))
+    } finally spark.conf.unset("spark.graft.segmentMergeDriverMaxBytes")
+  }
+
+  private val limited: Seq[Seq[QuerySpec]] = Seq(
+    Seq(Limit(5)), Seq(Gt(3), Limit(7)), Seq(Gte(10), Lt(14)), Seq(Lt(4)),
+    Seq(Limit(0)), Seq(Gte(58), Limit(10)), Seq(Gte(200), Limit(3)),
+    Seq(Lte(2), Limit(100)))
+
+  /** Forward and limited sublog queries on a fresh driver handle (no
+    * job) agree with `mem` and with the job path of a bound-0 handle. */
+  private def checkLimits(dir: String, mem: MemMultiLog,
+      addrs: Seq[String]): Unit = {
+    val job = new MultiLog(spark, dir, 0L)
+    val driver = MultiLog.open(spark, dir)
+    for (addr <- addrs; base <- limited; wrap <- Seq(false, true)) {
+      val specs = if (wrap) base :+ SeqWrap(true) else base
+      var d = Seq.empty[Row]
+      assert(jobsDuring { d = rows(driver.sublog(addr).query(specs: _*)) } == 0)
+      assert(d == rows(mem.sublog(addr).query(specs: _*)), s"$addr $specs")
+      assert(d == rows(job.sublog(addr).query(specs: _*)), s"$addr $specs")
+    }
   }
 
   test("compact and delete drop the shared readers of the files they " +
