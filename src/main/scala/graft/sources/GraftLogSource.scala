@@ -41,10 +41,12 @@ import graft.storage.{
   * seq < b` prunes whole segments at PLANNING time from the
   * manifest's [minSeq, maxSeq] ranges — no file listing, no footer
   * reads for skipped segments. Surviving segments are PACKED into
-  * input partitions of up to `maxPartitionBytes` (scan option, else
-  * `spark.sql.files.maxPartitionBytes`) adjacent file bytes — file-
-  * source-style packing, so a log of many small per-batch segments
-  * doesn't become one task per file — and an OVERSIZED segment is
+  * contiguous runs of adjacent files, one run per core's even share of
+  * the scan's real file bytes (at least `openCostInBytes`, at most
+  * `maxPartitionBytes` — scan option, else
+  * `spark.sql.files.maxPartitionBytes`), balanced by byte midpoint: a
+  * log of many small per-batch segments doesn't become one task per
+  * file, and a mid-size scan fills every core. An OVERSIZED segment is
   * SPLIT into row-group-aligned byte ranges (a multi-GB compacted
   * segment is parallel work, not one straggler task; see
   * [[SegmentPacking.pack]]); each partition reads its immutable
@@ -174,6 +176,17 @@ object GraftLogSource {
       StructField("nulled", BooleanType, nullable = false)
     ))
   }
+
+  /** The columns a scan reads: the table's fields that Spark's
+    * `requiredSchema` names, in table order, each with the type Spark
+    * pruned it to — `select("value.user_id")` reads
+    * `value: struct<user_id>` (Spark's nested schema pruning keeps the
+    * table's order inside structs, arrays and maps). */
+  private[sources] def readColumns(
+      table: StructType,
+      required: StructType
+  ): StructType =
+    StructType(table.fields.flatMap(f => required.find(_.name == f.name)))
 }
 
 /** Write leg: `df.write.format("graft-log").mode("append").save(dir)`
@@ -343,19 +356,18 @@ final class GraftLogScanBuilder(
       case None => false
     }
 
-  /** Column pruning reaches the parquet page reads: the pruned schema
-    * flows through [[GraftLogReaderFactory]] into
-    * [[graft.storage.SegmentRecords.iterator]]'s requested-schema
-    * projection, so `select(seq)` over a log with fat values never
-    * fetches the value column chunks. With exact bound pushdown, a
-    * bounded `select(value)` scan reads ONLY the value chunks — the
-    * row reader re-reads `seq` internally for its range check, the
-    * vectorized reader cuts positionally and never needs it. */
+  /** Column pruning reaches the parquet page reads, nested fields
+    * included: the pruned schema ([[GraftLogSource.readColumns]])
+    * flows through [[GraftLogReaderFactory]] into the readers'
+    * requested-schema clip ([[graft.storage.SegmentRecords.clip]]), so
+    * `select(seq)` over a log with fat values never fetches the value
+    * column chunks and `sum(value.amount)` decodes one leaf of the
+    * value struct. With exact bound pushdown, a bounded `select(value)`
+    * scan reads ONLY the value chunks — the row reader re-reads `seq`
+    * internally for its range check, the vectorized reader cuts
+    * positionally and never needs it. */
   override def pruneColumns(requiredSchema: StructType): Unit =
-    // preserve the table's field order (parquet projection builds the
-    // read schema from these fields; order must match the file)
-    pruned = StructType(
-      schema.fields.filter(f => requiredSchema.fieldNames.contains(f.name)))
+    pruned = GraftLogSource.readColumns(schema, requiredSchema)
 
   override def build(): Scan = {
     // ONE manifest snapshot for the whole scan: the top-N cut below,
@@ -430,10 +442,11 @@ final class GraftLogAggScan(
 final case class AggRowPartition(values: Seq[Any]) extends InputPartition
 
 /** One input partition = a PACKED run of adjacent segments (their
-  * dense seq ranges are contiguous) whose file bytes fit
-  * `maxPartitionBytes` — the same packing logic Spark's file source
-  * applies, so a streaming-ingested log with thousands of tiny
-  * per-batch segments doesn't explode into thousands of tasks.
+  * dense seq ranges are contiguous) of about one core's share of the
+  * scan's bytes, never over `maxPartitionBytes`
+  * ([[SegmentPacking.pack]]), so a streaming-ingested log with
+  * thousands of tiny per-batch segments doesn't explode into
+  * thousands of tasks.
   * `loSeq`/`hiSeq` bound the rows the READER emits (inclusive) and
   * are the ONLY enforcement of pushed seq bounds (no residual filter
   * is planned): the batch path cuts boundary partitions to the exact
@@ -479,36 +492,33 @@ private[sources] object ColumnarOpt {
 }
 
 private[sources] object SegmentPacking {
-  /** Resolve the effective packing threshold. An explicit scan
-    * option wins VERBATIM (the test/off-switch lever). Otherwise the
-    * same heuristic Spark's file source applies
-    * (`FilePartition.maxSplitBytes`):
-    * `min(maxPartitionBytes, max(openCostInBytes, totalBytes/cores))`
-    * — so a mid-size scan fans out to the session's parallelism
-    * instead of a handful of 128 MB packs, while at 100 TB the
-    * `maxPartitionBytes` cap dominates exactly as it does for the
-    * file source. Unlike Spark we do NOT pad each file with the open
-    * cost during accumulation — adjacent tiny segments packing into
-    * one partition is this connector's contract (spec-pinned); the
-    * open-cost floor on the TARGET alone keeps tiny scans from
-    * exploding into per-row-group confetti. */
-  def maxBytes(
-      option: Option[String],
-      dir: String,
-      segments: Seq[graft.storage.Segment]
-  ): Long =
-    option.map(_.toLong).getOrElse {
-      val conf = org.apache.spark.sql.internal.SQLConf.get
-      val cap = conf.filesMaxPartitionBytes
-      val openCost = conf.filesOpenCostInBytes
-      val cores: Int = conf.filesMinPartitionNum.getOrElse(
-        try org.apache.spark.sql.SparkSession.active
-          .sparkContext.defaultParallelism
-        catch { case _: Exception => 1 })
-      val totalBytes =
-        segments.map(segmentSize(dir, _) + openCost).sum
-      math.min(cap, math.max(openCost, totalBytes / math.max(cores, 1)))
-    }
+  /** The byte budget of one scan's partitions, `(cap, target)`, from
+    * the REAL file bytes of the segments it plans (`totalBytes`):
+    *   - `cap` is a hard ceiling per partition: the `maxPartitionBytes`
+    *     scan option when given (the test and off-switch lever), else
+    *     `spark.sql.files.maxPartitionBytes`;
+    *   - `target` is one core's even share,
+    *     `min(cap, max(openCostInBytes, ⌈totalBytes / cores⌉))`, with
+    *     cores = `spark.sql.files.minPartitionNum`, else the session's
+    *     default parallelism.
+    * [[pack]] plans `⌈totalBytes / target⌉` partitions: a mid-size scan
+    * fills every core once, a scan under the open cost stays one
+    * partition, and at 100 TB the cap sets the partition size. Spark's
+    * file source pads every file with the open cost when it sizes its
+    * packs; this rule does not, so adjacent tiny segments still pack
+    * into one partition (spec-pinned). */
+  private def budget(option: Option[String], totalBytes: Long): (Long, Long) = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val cap = option.map(_.toLong).getOrElse(conf.filesMaxPartitionBytes)
+    val cores: Int = conf.filesMinPartitionNum.getOrElse(
+      try org.apache.spark.sql.SparkSession.active
+        .sparkContext.defaultParallelism
+      catch { case _: Exception => 1 })
+    val share = ceilDiv(totalBytes, math.max(cores, 1).toLong)
+    (cap, math.max(1L, math.min(cap, math.max(conf.filesOpenCostInBytes, share))))
+  }
+
+  private def ceilDiv(a: Long, b: Long): Long = if (a <= 0) 0L else (a - 1) / b + 1
 
   /** Assumed bytes/row when a segment file can't be stat'd (vanished
     * under a concurrent rewrite): sizing falls back to the manifest's
@@ -542,22 +552,29 @@ private[sources] object SegmentPacking {
     * are the filter-column bounds this partition is responsible
     * for — for log splits they are EXACT per-row-group footer stats,
     * which is what keeps the concurrent-rewrite fallback
-    * duplicate-and-gap-free across sibling splits. */
+    * duplicate-and-gap-free across sibling splits. `bytes` is the
+    * file bytes (a split: its row groups' compressed bytes) the
+    * partition reads. */
   final case class PackedGroup(
       paths: Seq[String],
       minSeq: Long,
       maxSeq: Long,
+      bytes: Long,
       splitStart: Long = 0L,
       splitEnd: Long = Long.MaxValue
   )
 
-  /** Pack seq-ordered adjacent segments into groups of <= maxBytes
-    * file bytes; a single oversized segment (a compacted multi-GB
-    * file — at 100 TB the norm, and otherwise one straggler task) is
-    * SPLIT into row-group-aligned byte ranges of <= maxBytes, the
-    * same parallelism the parquet file source gets from blind byte
-    * splits, but with exact per-split seq bounds so the rewrite
-    * fallback stays exact.
+  /** Plan the partitions of a scan over `segments` under [[budget]]:
+    * the seq-ordered segments are cut into contiguous groups of about
+    * `target` bytes each, balanced by byte midpoint (see [[balanced]]),
+    * so n equal segments on c cores become min(n, c) partitions whose
+    * segment counts differ by at most one. A segment over `target` (a
+    * compacted multi-GB file — at 100 TB the norm, and otherwise one
+    * straggler task) is SPLIT into row-group-aligned byte ranges
+    * balanced the same way, the parallelism the parquet file source
+    * gets from blind byte splits, but with exact per-split seq bounds
+    * so the rewrite fallback stays exact. No group of several files
+    * passes `cap`.
     *
     * Split preconditions, checked from the segment's own footer
     * (driver-side, read only for oversized files): every row group
@@ -571,35 +588,66 @@ private[sources] object SegmentPacking {
     * via `sharedRangeSplits` and each split carries the whole
     * segment's bounds. Anything else stays one whole-file group. */
   def pack(
+      option: Option[String],
       dir: String,
       segments: Seq[graft.storage.Segment],
-      maxBytes: Long,
       filterCol: String = "seq",
       sharedRangeSplits: Boolean = false
   ): Seq[PackedGroup] = {
-    val sorted = segments.sortBy(_.minSeq)
+    val sized = segments.sortBy(_.minSeq).map(s => s -> segmentSize(dir, s))
+    val (cap, target) = budget(option, sized.map(_._2).sum)
     val groups = scala.collection.mutable.ListBuffer.empty[PackedGroup]
-    var cur = scala.collection.mutable.ListBuffer.empty[graft.storage.Segment]
-    var curBytes = 0L
-    def size(s: graft.storage.Segment): Long = segmentSize(dir, s)
-    def flush(): Unit = if (cur.nonEmpty) {
-      groups += PackedGroup(
-        cur.map(s => graft.storage.FileIO.join(dir, s.path)).toSeq,
-        cur.head.minSeq, cur.last.maxSeq)
-      cur.clear(); curBytes = 0L
-    }
-    sorted.foreach { s =>
-      val b = size(s)
-      if (b > maxBytes) {
-        flush()
-        groups ++= splitSegment(dir, s, maxBytes, filterCol, sharedRangeSplits)
-      } else {
-        if (cur.nonEmpty && curBytes + b > maxBytes) flush()
-        cur += s; curBytes += b
+    val run = scala.collection.mutable.ListBuffer.empty[(graft.storage.Segment, Long)]
+    // a run of adjacent segments under the target, cut into groups
+    def flush(): Unit = if (run.nonEmpty) {
+      groups ++= balanced(run.toList, (s: (graft.storage.Segment, Long)) => s._2,
+        target, cap).map { g =>
+        PackedGroup(g.map(s => graft.storage.FileIO.join(dir, s._1.path)),
+          g.head._1.minSeq, g.last._1.maxSeq, g.map(_._2).sum)
       }
+      run.clear()
+    }
+    sized.foreach { case (s, b) =>
+      if (b > target) {
+        flush()
+        groups ++= splitSegment(dir, s, b, target, cap, filterCol,
+          sharedRangeSplits)
+      } else run += (s -> b)
     }
     flush()
     groups.toSeq
+  }
+
+  /** Cut `items` (in order) into ⌈total / target⌉ contiguous groups
+    * balanced by byte midpoint — the rule parquet splits use for row
+    * groups: an item of `size` b starting at byte offset o belongs to
+    * group ⌊(o + b/2) · k / total⌋. Equal items therefore spread over
+    * the k groups with counts that differ by at most one. A group that
+    * would pass `cap` is closed early. */
+  private def balanced[A](
+      items: List[A],
+      size: A => Long,
+      target: Long,
+      cap: Long
+  ): List[List[A]] = {
+    val total = items.map(size).sum
+    val k = BigInt(math.max(1L, ceilDiv(total, target)))
+    val twiceTotal = BigInt(math.max(total, 1L)) * 2
+    val groups = scala.collection.mutable.ListBuffer.empty[List[A]]
+    val cur = scala.collection.mutable.ListBuffer.empty[A]
+    var curIdx = BigInt(0)
+    var curBytes = 0L
+    var offset = 0L
+    items.foreach { a =>
+      val b = size(a)
+      val idx = (BigInt(offset) * 2 + b) * k / twiceTotal
+      if (cur.nonEmpty && (idx != curIdx || curBytes + b > cap)) {
+        groups += cur.toList; cur.clear(); curBytes = 0L
+      }
+      cur += a; curBytes += b; curIdx = idx; offset += b
+    }
+    if (cur.nonEmpty) groups += cur.toList
+    groups.toList
   }
 
   /** Row-group stats of one segment file, footer order:
@@ -633,32 +681,23 @@ private[sources] object SegmentPacking {
   private def splitSegment(
       dir: String,
       s: graft.storage.Segment,
-      maxBytes: Long,
+      bytes: Long,
+      target: Long,
+      cap: Long,
       filterCol: String,
       sharedRangeSplits: Boolean
   ): Seq[PackedGroup] = {
     val path = graft.storage.FileIO.join(dir, s.path)
-    val whole = Seq(PackedGroup(Seq(path), s.minSeq, s.maxSeq))
+    val whole = Seq(PackedGroup(Seq(path), s.minSeq, s.maxSeq, bytes))
     blockStats(path, filterCol) match {
       case Some(blocks) if blocks.length > 1 =>
         val ordered = blocks.lazyZip(blocks.tail).forall(_._4 < _._3)
         if (!ordered && !sharedRangeSplits) whole
         else {
-          // chunk row groups into runs of <= maxBytes compressed bytes
-          val runs = scala.collection.mutable
-            .ListBuffer.empty[List[(Long, Long, Long, Long)]]
-          var run = scala.collection.mutable
-            .ListBuffer.empty[(Long, Long, Long, Long)]
-          var runBytes = 0L
-          blocks.foreach { b =>
-            if (run.nonEmpty && runBytes + b._2 > maxBytes) {
-              runs += run.toList; run.clear(); runBytes = 0L
-            }
-            run += b; runBytes += b._2
-          }
-          if (run.nonEmpty) runs += run.toList
+          val runs = balanced(blocks, (b: (Long, Long, Long, Long)) => b._2,
+            target, cap).toVector
           if (runs.length <= 1) whole
-          else runs.toList.zipWithIndex.map { case (r, i) =>
+          else runs.zipWithIndex.map { case (r, i) =>
             // ranges tile [0, ∞): boundaries at each later run's first
             // row-group offset, so every row group of ANY layout lands
             // in exactly one sibling
@@ -669,12 +708,17 @@ private[sources] object SegmentPacking {
             val (lo, hi) =
               if (ordered) (r.head._3, r.last._4)
               else (s.minSeq, s.maxSeq)
-            PackedGroup(Seq(path), lo, hi, start, end)
+            PackedGroup(Seq(path), lo, hi, r.map(_._2).sum, start, end)
           }
         }
       case _ => whole
     }
   }
+
+  /** `explain` text of a packed scan: its partition count and the
+    * largest partition's bytes. */
+  def describe(groups: Seq[PackedGroup]): String =
+    s" partitions=${groups.size} largest=${groups.map(_.bytes).maxOption.getOrElse(0L)}B"
 }
 
 final class GraftLogScan(
@@ -749,13 +793,16 @@ final class GraftLogScan(
     }
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val segs = surviving
-    val parts = SegmentPacking
-      .pack(dir, segs, SegmentPacking.maxBytes(maxPartitionBytesOpt, dir, segs))
+  /** The surviving segments packed into partitions, once per scan:
+    * [[planInputPartitions]] and [[description]] share it. */
+  private lazy val packed: Seq[SegmentPacking.PackedGroup] =
+    SegmentPacking.pack(maxPartitionBytesOpt, dir, surviving)
       // splits carry exact per-run seq bounds, so pushed seq bounds
       // prune them the same way they pruned whole segments above
       .filter(g => g.maxSeq >= lower && g.minSeq <= upper)
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val parts = packed
       .map { g =>
         // exact pushdown: only BOUNDARY partitions carry a row cut;
         // interior ones stay wide open (and columnar-eligible without
@@ -813,13 +860,20 @@ final class GraftLogScan(
   override def description(): String =
     s"graft-log $dir seq∈[${if (lower == Long.MinValue) "-∞" else lower}, " +
       s"${if (upper == Long.MaxValue) "∞" else upper}]" +
-      (if (descending) " order=seq DESC" else "")
+      (if (descending) " order=seq DESC" else "") +
+      (if (streaming) "" else SegmentPacking.describe(packed))
+
+  // a stream packs each micro-batch itself, so the explain text of a
+  // streaming scan shows no batch packing (and never computes one)
+  @volatile private var streaming = false
 
   override def toMicroBatchStream(
       checkpointLocation: String
-  ): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+  ): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    streaming = true
     new GraftLogMicroBatchStream(dir, scanSchema, maxPartitionBytesOpt,
       maxSeqsPerTrigger, maxBytesPerTrigger, maxSegmentsPerTrigger)
+  }
 }
 
 /** Streaming leg: offsets are manifest seq high-water marks, NOT file
@@ -960,7 +1014,7 @@ final class GraftLogMicroBatchStream(
     val m = Manifest.load(dir).getOrElse(return Array.empty)
     val segs = m.segments.filter(s => s.maxSeq > lo && s.minSeq <= hi)
     SegmentPacking
-      .pack(dir, segs, SegmentPacking.maxBytes(maxPartitionBytesOpt, dir, segs))
+      .pack(maxPartitionBytesOpt, dir, segs)
       .filter(g => g.maxSeq > lo && g.minSeq <= hi) // prune out-of-batch splits
       .map { g =>
         LogSegmentPartition(dir, g.paths, g.minSeq, g.maxSeq,

@@ -144,8 +144,7 @@ final class GraftTableScanBuilder(
     }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
-    pruned = StructType(
-      schema.fields.filter(f => requiredSchema.fieldNames.contains(f.name)))
+    pruned = GraftLogSource.readColumns(schema, requiredSchema)
 
   override def build(): Scan = {
     aggKinds.foreach { kinds =>
@@ -219,6 +218,12 @@ final class GraftTableScan(
     }
   }
 
+  /** The snapshot's segments packed into partitions, once per scan:
+    * [[planInputPartitions]] and [[description]] share it. */
+  private lazy val packed: Seq[SegmentPacking.PackedGroup] =
+    SegmentPacking.pack(maxPartitionBytesOpt, dir, segments,
+      filterCol = "_ver", sharedRangeSplits = true)
+
   override def planInputPartitions(): Array[InputPartition] = {
     val segs = segments
     // a snapshot that cuts INSIDE a minor-folded (version-spanning)
@@ -228,9 +233,7 @@ final class GraftTableScan(
     // selected segments all lie fully below the cut — and all
     // current-table reads — keep the uncut columnar fast path.
     val vCut = versionAsOf.filter(v => segs.exists(_.maxSeq > v))
-    SegmentPacking
-      .pack(dir, segs, SegmentPacking.maxBytes(maxPartitionBytesOpt, dir, segs),
-        filterCol = "_ver", sharedRangeSplits = true)
+    packed
       .map { g =>
         LogSegmentPartition(dir, g.paths, g.minSeq, g.maxSeq,
           hiSeq = vCut.getOrElse(Long.MaxValue),
@@ -242,11 +245,17 @@ final class GraftTableScan(
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftLogReaderFactory(scanSchema, filterCol = "_ver", columnar = ColumnarOpt.enabled)
 
-  override def description(): String = s"graft-table $dir"
+  override def description(): String =
+    s"graft-table $dir" +
+      (if (streaming) "" else SegmentPacking.describe(packed))
+
+  // a stream packs each micro-batch itself (see GraftLogScan)
+  @volatile private var streaming = false
 
   override def toMicroBatchStream(
       checkpointLocation: String
   ): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    streaming = true
     require(versionAsOf.isEmpty,
       "versionAsOf is a batch snapshot option; a stream follows the live " +
         "table (bound its catch-up with maxSegments/maxBytesPerTrigger)")
@@ -421,8 +430,8 @@ final class GraftTableMicroBatchStream(
     // always scopes the vanished-file re-resolution fallback.
     val implied = segs.forall(s => s.minSeq > lo && s.maxSeq <= hi)
     SegmentPacking
-      .pack(dir, segs, SegmentPacking.maxBytes(maxPartitionBytesOpt, dir, segs),
-        filterCol = "_ver", sharedRangeSplits = true)
+      .pack(maxPartitionBytesOpt, dir, segs, filterCol = "_ver",
+        sharedRangeSplits = true)
       .map { g =>
         LogSegmentPartition(dir, g.paths, g.minSeq, g.maxSeq,
           loSeq = lo + 1, hiSeq = hi,

@@ -173,16 +173,20 @@ private[graft] object DirectRead {
     }
   }
 
-  private[storage] def supported(dt: DataType): Boolean = dt match {
+  private[storage] def supported(dt: DataType): Boolean = refused(dt).isEmpty
+
+  /** The first type inside `dt` that the converters do not convert
+    * (an interval, a variant, a UDT, ...), if any. */
+  private[storage] def refused(dt: DataType): Option[DataType] = dt match {
     case LongType | IntegerType | ShortType | ByteType | DoubleType |
         FloatType | BooleanType | StringType | BinaryType | DateType |
         TimestampType | TimestampNTZType =>
-      true
-    case _: DecimalType  => true
-    case st: StructType  => st.fields.forall(f => supported(f.dataType))
-    case ArrayType(e, _) => supported(e)
-    case MapType(k, v, _) => supported(k) && supported(v)
-    case _               => false
+      None
+    case _: DecimalType  => None
+    case st: StructType  => st.fields.iterator.flatMap(f => refused(f.dataType)).nextOption()
+    case ArrayType(e, _) => refused(e)
+    case MapType(k, v, _) => refused(k).orElse(refused(v))
+    case other           => Some(other)
   }
 
   /** INT96 rebase mode for a file, resolved from its footer the way

@@ -201,6 +201,7 @@ final class ParquetLog private (
       manifest.segments.isEmpty || vType == valueType,
       s"value type $vType does not match log's $valueType"
     )
+    if (manifest.segments.isEmpty) ParquetLog.requireReadable(dir, vType)
     val src0 = values.select(col(vCol).as("value"))
     // tiny-batch cut (see smallAppendCoalesceMaxBytes): a tiny batch
     // whose rows are on the driver takes the driver path; any other
@@ -916,14 +917,27 @@ object ParquetLog {
     * join a seq frame instead of building an O(k) literal plan. */
   val MaxInLiteralSeqs: Int = 1000
 
+  /** A log holds only value types its readers convert
+    * ([[DirectRead.supported]]): an interval, variant or UDT value
+    * would append fine and then fail every read, so `open` and the
+    * first append refuse it up front. */
+  private def requireReadable(dir: String, valueType: DataType): Unit =
+    DirectRead.refused(valueType).foreach { t =>
+      throw new IllegalArgumentException(
+        s"log $dir cannot hold values of type ${valueType.sql}: no log " +
+          s"reader converts ${t.sql}")
+    }
+
   /** Open an existing log, or create an empty one (value type fixed on
     * first append; `valueType` seeds the schema for an empty log so
-    * reads/streams work before any data arrives). */
+    * reads/streams work before any data arrives). A `valueType` no
+    * reader converts is refused. */
   def open(
       spark: SparkSession,
       dir: String,
       valueType: DataType = StringType
   ): ParquetLog = {
+    requireReadable(dir, valueType)
     // session contract (like Tables.load's UTC timezone): opening a
     // log installs the engine's ordered-drain planner strategy —
     // idempotent, additive, a pure physical-plan optimization

@@ -137,13 +137,7 @@ private[graft] object SegmentBatches {
         guardDatetimeEncoding(
           pr.getFooter.getFileMetaData.getKeyValueMetaData, file)
       val fileSchema = pr.getFooter.getFileMetaData.getSchema
-      val projected =
-        if (schema.fields.length == fileSchema.getFieldCount) fileSchema
-        else
-          new org.apache.parquet.schema.MessageType(
-            fileSchema.getName,
-            schema.fields.map(f =>
-              fileSchema.getType(fileSchema.getFieldIndex(f.name))): _*)
+      val projected = SegmentRecords.clip(fileSchema, schema)
       pr.setRequestedSchema(projected)
       val totalRows = pr.getRowGroups.asScala.map(_.getRowCount).sum
       // the 2-arg constructor pins int96RebaseMode=LEGACY; resolve it

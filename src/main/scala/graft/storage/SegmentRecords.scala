@@ -49,6 +49,20 @@ private[graft] object SegmentRecords {
       reader, columnIO, projected, schema, int96Mode)
   }
 
+  /** The parquet columns a read of `schema` fetches: `fileSchema`
+    * clipped to `schema` by Spark's own parquet read support, nested
+    * fields included (a pruned `value: struct<user_id>` requests one
+    * leaf of the value group). Both readers request this, and the
+    * record converter resolves fields by name, so it reads the clipped
+    * layout unchanged. */
+  private[storage] def clip(
+      fileSchema: org.apache.parquet.schema.MessageType,
+      schema: StructType
+  ): org.apache.parquet.schema.MessageType =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+      .clipParquetSchema(fileSchema, schema, caseSensitive = true,
+        useFieldId = false, returnNullStructIfAllFieldsMissing = false)
+
   private def open(
       file: String,
       schema: StructType,
@@ -61,15 +75,7 @@ private[graft] object SegmentRecords {
       case None => ParquetReadOptions.builder().build()
     }
     val reader = ParquetFileReader.open(FileIO.forPath(file).inputFile(file), opts)
-    val fileSchema = reader.getFooter.getFileMetaData.getSchema
-    val projected =
-      if (schema.fields.length == fileSchema.getFieldCount) fileSchema
-      else
-        new org.apache.parquet.schema.MessageType(
-          fileSchema.getName,
-          schema.fields
-            .map(f => fileSchema.getType(fileSchema.getFieldIndex(f.name))): _*
-        )
+    val projected = clip(reader.getFooter.getFileMetaData.getSchema, schema)
     reader.setRequestedSchema(projected)
     val columnIO = new ColumnIOFactory().getColumnIO(projected)
     // INT96 decode mode is a property of the FILE (footer provenance),

@@ -17,7 +17,8 @@ import graft.storage.{FileIO, Manifest, ParquetLog}
   *     `df.rdd.collect()` (the same plan's `doExecute`, a job) agree
   *     for every value type the driver converter admits, over the
   *     QuerySpec algebra, redacted rows, and segments with and without
-  *     page indexes; a type it refuses falls back to the job;
+  *     page indexes; a type no reader converts is refused at open
+  *     and at the first append;
   *   - refusals: a planned file gone under a concurrent rewrite, more
   *     rows than the cut, more files than `SliceRead` opens — each
   *     runs the job path and gets the job path's answer;
@@ -133,18 +134,28 @@ class DriverScanSpec extends SparkSpec {
     }
   }
 
-  test("a value type the driver refuses falls back to the job path") {
-    // no graft-log reader converts a day-time interval: the job's
-    // error, raised after the driver's refusal, is the answer
-    val log = mkLog("make_dt_interval(0, cast(id as int), 0, 0)")
-    val q = log.query(Gt(4), Lt(25), Limit(100), SeqWrap(true))
-    var got: Either[String, Seq[Any]] = null
-    def attempt(f: => Array[Row]): Either[String, Seq[Any]] =
-      try Right(f.toSeq.map(norm))
-      catch { case e: Exception => Left(e.getClass.getName) }
-    assert(jobsDuring { got = attempt(q.collect()) } > 0)
-    assert(metric(q, "fallback") == 1 && metric(q, "driverRows") == 0)
-    assert(got.isLeft && got == attempt(q.rdd.collect()))
+  test("a value type no log reader converts is refused at open and " +
+    "at the first append") {
+    // no reader, on the driver or in a job, converts a day-time
+    // interval; the other refusal cases here cover the fallback to the
+    // job path
+    val interval = spark.range(3).select(
+      expr("make_dt_interval(0, cast(id as int), 0, 0)").as("value"))
+    val dt = interval.schema.head.dataType
+    val nested = interval.select(
+      org.apache.spark.sql.functions.struct(col("value").as("d")).as("value"))
+    val refused = tmpDir("dscan-") + "/log"
+    val e1 = intercept[IllegalArgumentException](
+      ParquetLog.open(spark, refused, nested.schema.head.dataType))
+    assert(e1.getMessage.contains(dt.sql), e1.getMessage)
+    assert(!FileIO.forPath(refused).exists(refused))
+    val dir = tmpDir("dscan-") + "/log"
+    val log = ParquetLog.open(spark, dir)
+    for (values <- Seq(interval, nested)) {
+      val e2 = intercept[IllegalArgumentException](log.append(values))
+      assert(e2.getMessage.contains(dt.sql), e2.getMessage)
+    }
+    assert(log.seq == -1 && Manifest.load(dir).get.segments.isEmpty)
   }
 
   private def combos: Seq[Seq[QuerySpec]] = {

@@ -479,11 +479,12 @@ class GraftLogSourceSpec extends SparkSpec {
   }
 
   test("default packing targets session parallelism like the file source") {
-    // no maxPartitionBytes option: the packing target is
-    // min(maxPartitionBytes, max(openCost, totalBytes/cores)) — the
-    // file source's own heuristic — so a mid-size scan fans out
-    // instead of planning one fat pack (shrinking openCost below
-    // totalBytes/cores makes the 250 KB fixture "mid-size" here)
+    // no maxPartitionBytes option: the packing target is one core's
+    // share of the real file bytes, min(maxPartitionBytes,
+    // max(openCost, totalBytes/cores)), with no open-cost padding per
+    // file — so a mid-size scan fans out instead of planning one fat
+    // pack (shrinking openCost below totalBytes/cores makes the 250 KB
+    // fixture "mid-size" here)
     val dir = tmpDir("dsv2par") + "/log"
     mkOversized(dir)
     spark.conf.set("spark.sql.files.openCostInBytes", "1024")
