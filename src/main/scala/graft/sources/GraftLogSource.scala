@@ -28,6 +28,7 @@ import org.apache.spark.sql.sources.{
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.core.GraftConf
 import graft.storage.{
   FileIO, Manifest, ParquetLog, SegmentBatches, SegmentRecords, SliceRead
 }
@@ -220,9 +221,9 @@ final class GraftLogTable(dir: String, tableSchema: StructType)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftLogScanBuilder(dir, tableSchema,
       Option(options.get("maxPartitionBytes")),
-      Option(options.get("maxSeqsPerTrigger")).map(_.toLong),
-      Option(options.get("maxBytesPerTrigger")).map(_.toLong),
-      Option(options.get("maxSegmentsPerTrigger")).map(_.toInt))
+      GraftConf.longOption(options, "maxSeqsPerTrigger"),
+      GraftConf.longOption(options, "maxBytesPerTrigger"),
+      GraftConf.intOption(options, "maxSegmentsPerTrigger"))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -488,7 +489,7 @@ final case class LogSegmentPartition(
   * the row reader — the A/B lever for benches and a safety valve. */
 private[sources] object ColumnarOpt {
   def enabled: Boolean =
-    graft.core.GraftConf.boolean("spark.graft.columnar.enabled", true)
+    GraftConf.boolean("spark.graft.columnar.enabled", true)
 }
 
 private[sources] object SegmentPacking {
@@ -509,7 +510,8 @@ private[sources] object SegmentPacking {
     * into one partition (spec-pinned). */
   private def budget(option: Option[String], totalBytes: Long): (Long, Long) = {
     val conf = org.apache.spark.sql.internal.SQLConf.get
-    val cap = option.map(_.toLong).getOrElse(conf.filesMaxPartitionBytes)
+    val cap = GraftConf.longOption("maxPartitionBytes", option)
+      .getOrElse(conf.filesMaxPartitionBytes)
     val cores: Int = conf.filesMinPartitionNum.getOrElse(
       try org.apache.spark.sql.SparkSession.active
         .sparkContext.defaultParallelism

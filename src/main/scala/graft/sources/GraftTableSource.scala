@@ -14,6 +14,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.core.GraftConf
 import graft.storage.Manifest
 
 /** DataSourceV2 connector for manifest-committed CHANGE TABLES
@@ -83,9 +84,9 @@ final class GraftTableTable(dir: String, tableSchema: StructType)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftTableScanBuilder(dir, tableSchema,
       Option(options.get("maxPartitionBytes")),
-      Option(options.get("maxBytesPerTrigger")).map(_.toLong),
-      Option(options.get("maxSegmentsPerTrigger")).map(_.toInt),
-      Option(options.get("versionAsOf")).map(_.toLong))
+      GraftConf.longOption(options, "maxBytesPerTrigger"),
+      GraftConf.intOption(options, "maxSegmentsPerTrigger"),
+      GraftConf.longOption(options, "versionAsOf"))
 }
 
 final class GraftTableScanBuilder(

@@ -21,6 +21,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.compat.Offset2
+import graft.core.GraftConf
 
 /** DataSourceV2 READ connector for the reference's `offset2` on-disk
   * format — the migration path IN:
@@ -75,8 +76,8 @@ final class Offset2Table(dir: String) extends Table with SupportsRead {
       TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new Offset2ScanBuilder(dir, Option(options.get("maxPartitionBytes")),
-      Option(options.get("maxEntriesPerTrigger")).map(_.toLong),
-      Option(options.get("maxBytesPerTrigger")).map(_.toLong))
+      GraftConf.longOption(options, "maxEntriesPerTrigger"),
+      GraftConf.longOption(options, "maxBytesPerTrigger"))
 }
 
 final class Offset2ScanBuilder(
@@ -236,7 +237,8 @@ final class Offset2Scan(
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val target = maxPartitionBytesOpt.map(_.toLong).getOrElse {
+    val target = GraftConf.longOption("maxPartitionBytes",
+      maxPartitionBytesOpt).getOrElse {
       val conf = org.apache.spark.sql.internal.SQLConf.get
       val cores: Int = conf.filesMinPartitionNum.getOrElse(
         try org.apache.spark.sql.SparkSession.active
@@ -401,7 +403,8 @@ final class Offset2MicroBatchStream(
     val lo = start.asInstanceOf[EntryOffset].lastSeq // exclusive
     val hi = end.asInstanceOf[EntryOffset].lastSeq // inclusive
     if (hi <= lo) return Array.empty
-    val target = maxPartitionBytesOpt.map(_.toLong).getOrElse(
+    val target = GraftConf.longOption("maxPartitionBytes",
+      maxPartitionBytesOpt).getOrElse(
       org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes)
     Offset2.planRangesBetween(dir, lo + 1, hi + 1, target)
       .map(r => Offset2Partition(dir, r.startSeq, r.endSeq,

@@ -1,9 +1,6 @@
 package graft.storage
 
-import java.util.UUID
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -52,34 +49,9 @@ final class ParquetLog private (
 
   private val io: FileIO = FileIO.forPath(dir)
 
-  // target on-disk bytes per segment file for the small-append merge
-  // in [[writeSegments]] — same knob and default as
-  // [[TableStore]]'s (`spark.graft.segmentTargetFileBytes`)
-  private val segmentTargetFileBytes: Long =
-    GraftConf.long(spark, "spark.graft.segmentTargetFileBytes", 32L << 20)
-
-  // staged-bytes ceiling for the DRIVER-SIDE row-group-copy merge
-  // (same knob and default as [[TableStore]]'s): under it the
-  // small-append fold is a driver-side parquet row-group byte copy —
-  // no second Spark job per commit; above it the range-repartition
-  // rewrite is worth its scheduling cost and the driver never
-  // streams large byte volumes through itself (guide §5)
-  private val segmentMergeDriverMaxBytes: Long =
-    GraftConf.long(spark, "spark.graft.segmentMergeDriverMaxBytes", 128L << 20)
-
-  // plan-estimate ceiling under which an append is coalesced to one
-  // task BEFORE its count and write jobs (same knob and max-node
-  // semantics as [[TableStore]]'s small-append task-floor cut): a
-  // small batch then pays 1+1 tasks instead of 2×N and stages ONE
-  // file (no post-write merge, no per-file footer reads). A small
-  // batch already on the driver skips both jobs (the driver path).
-  // The LOG's default is 8 MB where the table store's is 1 MB: a log
-  // append's post-shuffle work is a per-byte-cheap sort-merge +
-  // encode (50 ms single-task at this ceiling), while the table
-  // stores commit pump AGGREGATIONS whose serialized compute is the
-  // regression the 1 MB default exists to avoid.
-  private val smallAppendCoalesceMaxBytes: Long =
-    GraftConf.long(spark, "spark.graft.smallAppendCoalesceMaxBytes", 8L << 20)
+  // every segment write, log layout: dense seq ranges, seq-sorted
+  private val writer = new SegmentWriter(spark, dir, "log",
+    SegmentWriter.LogSmallAppendMaxBytes)
 
   private def dataDir: String = FileIO.join(dir, "data")
 
@@ -183,7 +155,7 @@ final class ParquetLog private (
     * outside its query). The next streaming write binds fresh. */
   def releaseStreamBinding(): Unit = synchronized {
     if (manifest.streamBatch.isDefined || manifest.streamQuery.isDefined)
-      commitOrCleanup(
+      manifest = writer.commit(
         manifest.copy(version = manifest.version + 1,
           streamBatch = None, streamQuery = None),
         Nil)
@@ -203,70 +175,37 @@ final class ParquetLog private (
     )
     if (manifest.segments.isEmpty) ParquetLog.requireReadable(dir, vType)
     val src0 = values.select(col(vCol).as("value"))
-    // tiny-batch cut (see smallAppendCoalesceMaxBytes): a tiny batch
-    // whose rows are on the driver takes the driver path; any other
-    // is coalesced to one partition before its count and write jobs
-    val small = {
-      // analyzed-plan MAX-node stats, not optimizedPlan — see the
-      // TableStore append gate: an optimizer pass per append is real
-      // per-commit cost, and the max-node estimate keeps the cut off
-      // any append computed FROM something big
-      lazy val est = TableStore.maxPlanEstimate(src0)
-      // tiny AND justifying a single target file (a deliberately tiny
-      // per-file target means "never fold" — honor it here too)
-      segmentTargetFileBytes > 0 && smallAppendCoalesceMaxBytes > 0 &&
-        est <= BigInt(smallAppendCoalesceMaxBytes) &&
-        est <= BigInt(segmentTargetFileBytes)
-    }
+    // the small-append cut: a tiny batch whose rows are on the driver
+    // takes the driver path; any other is coalesced to one partition
+    // before its count and write jobs (1+1 tasks instead of 2×N, and
+    // one staged file)
+    val small = writer.small(src0)
     // DRIVER PATH: a small batch that already sits on the driver is
     // stamped and staged here, with no Spark job (see append)
     val driverRows = if (small) ParquetLog.driverResident(src0) else None
     val (segs, acc) = driverRows match {
       case Some(rows) =>
-        val stampedSchema = stampedLayout(src0.schema.head)
         val stamped = rows.iterator.zipWithIndex.map { case (row, i) =>
           InternalRow(base + i, row.get(0, vType), false)
         }
-        (publishSegments(stageOnDriver(stamped, stampedSchema),
-          stampedSchema), rows.length.toLong)
+        (writer.writeOnDriver(stamped, stampedLayout(src0.schema.head),
+          SegmentWriter.DenseSeq), rows.length.toLong)
       case None =>
         val (df, n) =
           stampByJob(if (small) src0.coalesce(1) else src0, base, vType)
-        (writeSegments(df), n)
+        (writer.write(df, SegmentWriter.DenseSeq), n)
     }
-    // DENSE-SEQ INTEGRITY GATE (pre-commit, driver-side arithmetic
-    // over footer stats publishSegments already read): the job path
-    // assumes its write job sees the rows its count job counted, per
-    // partition — the assumption rdd.zipWithIndex made, but here it
-    // is VERIFIED instead of trusted. If a leaf the write job re-reads
-    // changed under it (source re-listed under a concurrent writer,
-    // a nondeterministic input), offsets no longer match partition
-    // counts and seqs would collide or gap — this refuses the append
-    // LOUDLY before the manifest commit, so the positional point-read
-    // math and the fsck density check can never be silently
-    // corrupted. The driver path's footers pass the same gate: its
-    // stamp is checked, not trusted.
-    locally {
-      val sorted = segs.sortBy(_.minSeq)
-      var expect = base
-      var total = 0L
-      val dense = sorted.forall { s =>
-        val ok = s.minSeq == expect && s.rows == s.maxSeq - s.minSeq + 1
-        expect = s.maxSeq + 1
-        total += s.rows
-        ok
-      }
-      if (!dense || total != acc) {
-        segs.foreach(s => io.delete(FileIO.join(dir, s.path)))
-        throw new IllegalStateException(
-          s"append to $dir produced a non-dense seq range (expected " +
-            s"[$base, ${base + acc - 1}], got ${sorted.map(s =>
-              s"[${s.minSeq},${s.maxSeq}]x${s.rows}").mkString(" ")}): " +
-            "the input's partitioning diverged between the count and " +
-            "write passes (nondeterministic source?); nothing was " +
-            "committed — retry the append with a deterministic input")
-      }
-    }
+    // the job path assumes its write job sees the rows its count job
+    // counted, per partition — the assumption rdd.zipWithIndex made,
+    // VERIFIED here instead of trusted. If a leaf the write job
+    // re-reads changed under it (source re-listed under a concurrent
+    // writer, a nondeterministic input), offsets no longer match
+    // partition counts and seqs would collide or gap. The driver
+    // path's footers pass the same gate: its stamp is checked too.
+    requireDense(base, acc, segs, segs,
+      s"append to $dir", "the input's partitioning diverged between the " +
+        "count and write passes (nondeterministic source?); retry the " +
+        "append with a deterministic input")
     if (segs.isEmpty && batchId.isEmpty) return base // nothing to commit
     // an empty STREAMING batch still commits: the batch id must
     // advance or a replay after restart could double-apply a later
@@ -284,9 +223,24 @@ final class ParquetLog private (
       streamQuery = queryId.orElse(manifest.streamQuery)
     )
     FaultPoints.reach("log.append.preCommit")
-    commitOrCleanup(next, segs)
+    manifest = writer.commit(next, segs)
     base
   }
+
+  /** The DENSE-SEQ INTEGRITY GATE of every commit that writes seqs
+    * ([[denseProblem]] over the footer stats the writer already read):
+    * `segs` must tile `[first, first + rows - 1]` exactly, or the
+    * `fresh` files are dropped and `what` fails LOUDLY before the
+    * manifest commit — so the positional point-read math and the fsck
+    * density check are never silently corrupted. */
+  private def requireDense(first: Long, rows: Long, segs: Seq[Segment],
+      fresh: Seq[Segment], what: String, hint: String): Unit =
+    denseProblem(first, rows, segs).foreach { got =>
+      fresh.foreach(s => writer.drop(FileIO.join(dir, s.path)))
+      throw new IllegalStateException(
+        s"$what produced a non-dense seq range ($got): $hint; nothing " +
+          "was committed")
+    }
 
   /** JOB PATH stamping: `(seq, value, nulled)` rows of `src1` stamped
     * `base …` in its write job, plus the row count its count job saw.
@@ -333,179 +287,6 @@ final class ParquetLog private (
     // nullability, exactly as a driver-path segment does
     (org.apache.spark.sql.graftshim.InternalRows.toDF(spark, stampedRdd,
       stampedLayout(src1.schema.head)), acc0)
-  }
-
-  /** Commit then publish: the in-memory manifest only advances after
-    * the disk commit succeeds, so a stale handle that loses the CAS
-    * (ConcurrentWriteException) never serves uncommitted segments; its
-    * just-written files are swept instead. */
-  private def commitOrCleanup(next: Manifest, fresh: List[Segment]): Unit = {
-    try Manifest.commit(dir, next)
-    catch {
-      case e: Throwable =>
-        fresh.foreach(s => io.delete(FileIO.join(dir, s.path)))
-        throw e
-    }
-    manifest = next
-  }
-
-  /** Write `(seq,value,nulled)` rows into new segment files under
-    * data/, sorted by seq, and return their manifest entries.
-    * Per-file seq ranges come from the parquet FOOTERS (driver-side
-    * metadata read — the stats the writer already computed), not an
-    * extra Spark job over the data. */
-  private def writeSegments(df: DataFrame): List[Segment] = {
-    val tmp = FileIO.join(dir, s"tmp-${UUID.randomUUID()}")
-    df.sortWithinPartitions("seq")
-      .write
-      .options(SegmentWriteOptions)
-      .mode(SaveMode.Overwrite)
-      .parquet(tmp)
-    publishSegments(tmp, df.schema)
-  }
-
-  /** The driver path's staging half: `rows` (already seq-stamped, in
-    * seq order, laid out as `schema`) written as ONE parquet file into
-    * a fresh `tmp-<uuid>` staging dir, and the dir returned. The file
-    * comes from Spark's own parquet output-writer factory, on the
-    * driver: the write support, codec, footer metadata
-    * (`org.apache.spark.sql.parquet.row.metadata`, writer version),
-    * [[SegmentWriteOptions]] and `part-` file name of a write job over
-    * the same rows, with no job. */
-  private def stageOnDriver(
-      rows: Iterator[InternalRow],
-      schema: StructType
-  ): String = {
-    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
-    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.internal.SQLConf
-    val tmp = FileIO.join(dir, s"tmp-${UUID.randomUUID()}")
-    val state = spark.sessionState
-    // the writer reads session settings (rebase modes, timestamp
-    // type) through SQLConf.get; a task sees the submitting session's
-    // conf, so the driver pins the same one
-    try SQLConf.withExistingConf(state.conf) {
-      val job = Job.getInstance(
-        state.newHadoopConfWithOptions(SegmentWriteOptions))
-      job.setOutputKeyClass(classOf[Void])
-      job.setOutputValueClass(classOf[InternalRow])
-      val factory = new ParquetFileFormat()
-        .prepareWrite(spark, job, SegmentWriteOptions, schema)
-      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-        new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
-      val out = factory.newInstance(
-        FileIO.join(tmp, s"part-00000-${UUID.randomUUID()}" +
-          factory.getFileExtension(ctx)),
-        schema, ctx)
-      try rows.foreach(out.write)
-      finally out.close()
-    } catch {
-      case e: Throwable => FsckSweep.deleteRecursively(tmp); throw e
-    }
-    tmp
-  }
-
-  /** The publish half of every segment write: fold the part files
-    * staged under `tmp` (laid out as `schema`) when the staged bytes
-    * justify fewer files, move them into data/ under their seq-range
-    * names, and return their manifest entries. */
-  private def publishSegments(tmp: String, schema: StructType): List[Segment] = {
-    // Small-append coalescing (the TableStore.writeSegmentFiles
-    // discipline): a small batch arriving with N partitions writes N
-    // tiny seq-range files, and a log advanced by thousands of small
-    // streaming commits pays O(files) listing/footer cost at every
-    // plan. When the staged bytes justify fewer files, fold them —
-    // repartitionByRange on `seq` keeps every output file a dense
-    // contiguous seq range (each range-partition holds exactly the
-    // seqs in its bounds), which the positional point-read math and
-    // the fsck density check both require.
-    val staged0 = io.list(tmp)
-      .filter(f => f.name.endsWith(".parquet") && !FileIO.isHidden(f.name))
-    // segmentTargetFileBytes <= 0 = merge-free mode (latency-critical
-    // logs keep one file per input partition; documented knob — the
-    // old code divided by it and crashed)
-    val merged =
-      if (staged0.length <= 1 || segmentTargetFileBytes <= 0) tmp
-      else {
-        val sizes = staged0.map(f => f.path -> io.size(f.path)).toMap
-        val totalBytes = sizes.valuesIterator.sum
-        val target = math.max(1L,
-          (totalBytes + segmentTargetFileBytes - 1) / segmentTargetFileBytes)
-        if (target >= staged0.length) tmp
-        else {
-          val tmp2 = FileIO.join(dir, s"tmp-${UUID.randomUUID()}")
-          // DRIVER-SIDE row-group copy when the staged bytes are small
-          // (the TableStore.writeSegmentFiles discipline, extended to
-          // the log): no decode, no re-encode, and no second Spark job
-          // per micro-batch commit. The log's extra obligation is the
-          // DENSE-SEQ layout — every merged file must hold a dense,
-          // seq-sorted range — so inputs are ordered by their FOOTER
-          // seq stats and the copy only proceeds when they tile
-          // contiguously (each staged file is one partition's dense
-          // range, so they always do for an append; a rewrite whose
-          // scan split order interleaved falls back to the range job).
-          // Page-level offset indexes are dropped by the row-group
-          // copy; DirectRead point reads fall back to decoding the ONE
-          // containing row group (staged row groups are micro-batch-
-          // sized), and the next compact() restores the indexes.
-          var footerErr = false
-          val stats = staged0.flatMap(f =>
-            try ParquetLog.seqStatsFromFooter(io.inputFile(f.path))
-              .map(st => (f, st._1, st._2, st._3))
-            catch { case _: Exception => footerErr = true; None })
-          // zero-row staged files (empty input partitions) carry no
-          // rows and are simply left out of the copy; an unreadable
-          // footer falls back to the range job instead
-          val ordered = stats.sortBy(_._2)
-          val contiguous = !footerErr && ordered.nonEmpty &&
-            ordered.sliding(2).forall {
-              case Seq((_, _, hi, _), (_, lo2, _, _)) => lo2 == hi + 1
-              case _ => true
-            } &&
-            ordered.forall { case (_, lo, hi, n) => n == hi - lo + 1 }
-          if (totalBytes <= segmentMergeDriverMaxBytes && contiguous) {
-            io.mkdirs(tmp2)
-            ParquetConcat
-              .packGroups(ordered.map(_._1), sizes, target.toInt)
-              .zipWithIndex.foreach { case (group, i) =>
-                ParquetConcat.concat(io, group.map(_.path),
-                  FileIO.join(tmp2, f"part-$i%05d.parquet"))
-              }
-          } else
-            spark.read.schema(schema).parquet(tmp)
-              .repartitionByRange(target.toInt, col("seq"))
-              .sortWithinPartitions("seq")
-              .write
-              .options(SegmentWriteOptions)
-              .mode(SaveMode.Overwrite)
-              .parquet(tmp2)
-          FsckSweep.deleteRecursively(tmp)
-          tmp2
-        }
-      }
-    FaultPoints.reach("log.segments.tmpWritten")
-    val files = io.list(merged)
-      .filter(f => f.name.endsWith(".parquet") && !FileIO.isHidden(f.name))
-    io.mkdirs(dataDir)
-    val segs = files.flatMap { src =>
-      ParquetLog.seqStatsFromFooter(io.inputFile(src.path)).map {
-        case (minSeq, maxSeq, rows) =>
-          val name = f"seg-$minSeq%012d-${UUID.randomUUID().toString.take(8)}.parquet"
-          // on-disk size recorded at commit so planning never stats
-          // the file again (statistics / packing / admission)
-          val fbytes = try Some(io.size(src.path)) catch {
-            case _: Exception => None
-          }
-          FaultPoints.reach("log.segments.beforeMove")
-          io.rename(src.path, FileIO.join(dataDir, name))
-          FaultPoints.reach("log.segments.moved")
-          Segment(s"data/$name", minSeq, maxSeq, rows, fbytes)
-      } // zero-row part files are skipped (and cleaned with tmp)
-    }
-    FaultPoints.reach("log.segments.allMoved")
-    FsckSweep.deleteRecursively(merged)
-    segs.sortBy(_.minSeq)
   }
 
   /** Point read. Throws ErrOutOfBounds past the end, ErrNulled for
@@ -686,18 +467,19 @@ final class ParquetLog private (
         .getOrElse(throw GraftErrors.ErrOutOfBounds(seqNo))
       val df =
         spark.read.schema(rowSchema).parquet(FileIO.join(dir, seg.path))
-      val rewritten = f(df)
-      val newSegs = writeSegments(rewritten)
+      val newSegs = writer.write(f(df), SegmentWriter.DenseSeq)
+      // the rewrite re-tiles exactly the segment's own seqs
+      requireDense(seg.minSeq, seg.maxSeq - seg.minSeq + 1, newSegs, newSegs,
+        s"rewrite of ${seg.path}", "the segment's rows changed under the rewrite")
       val next = manifest.copy(
         version = manifest.version + 1,
         segments =
           (manifest.segments.filterNot(_ == seg) ++ newSegs).sortBy(_.minSeq)
       )
       FaultPoints.reach("log.rewrite.preCommit")
-      commitOrCleanup(next, newSegs)
+      manifest = writer.commit(next, newSegs)
       FaultPoints.reach("log.rewrite.preDelete")
-      DirectRead.invalidate(FileIO.join(dir, seg.path))
-      io.delete(FileIO.join(dir, seg.path))
+      writer.drop(FileIO.join(dir, seg.path))
     }
 
   /** Merge small adjacent segments into larger ones (copy-on-write;
@@ -721,32 +503,35 @@ final class ParquetLog private (
     if (cur.nonEmpty) groups += cur.toList
     // nothing to do if no group merges more than one file
     if (!groups.exists(_.length > 1)) return
-    val newSegs = groups.toList.flatMap { g =>
-      if (g.length == 1) g
+    val written = groups.toList.map { g =>
+      if (g.length == 1) (g, g)
       else {
         val df = spark.read
           .schema(rowSchema)
           .parquet(g.map(s => FileIO.join(dir, s.path)): _*)
           .repartitionByRange(1, col("seq"))
-        writeSegments(df)
+        (g, writer.write(df, SegmentWriter.DenseSeq))
       }
     }
+    val newSegs = written.flatMap(_._2)
     val old = manifest.segments
     val merged = newSegs.filterNot(s => old.contains(s))
+    // each merged group re-tiles exactly the seqs of the segments it
+    // replaces
+    written.foreach { case (g, w) =>
+      requireDense(g.head.minSeq, g.map(_.rows).sum, w, merged,
+        s"compaction of $dir", "a segment's rows changed under the compaction")
+    }
     val next = manifest.copy(
       version = manifest.version + 1,
       segments = newSegs.sortBy(_.minSeq)
     )
     FaultPoints.reach("log.compact.preCommit")
-    commitOrCleanup(next, merged)
+    manifest = writer.commit(next, merged)
     FaultPoints.reach("log.compact.preDelete")
     val kept = newSegs.map(_.path).toSet
     old.filterNot(s => kept.contains(s.path))
-      .foreach { s =>
-        val p = FileIO.join(dir, s.path)
-        DirectRead.invalidate(p)
-        io.delete(p)
-      }
+      .foreach(s => writer.drop(FileIO.join(dir, s.path)))
   }
 
   /** Fsck: every manifest segment exists; seq ranges are dense and
@@ -826,11 +611,7 @@ final class ParquetLog private (
         Manifest.commit(dir, next)
         manifest = next
         trusted = next
-        dropped.foreach { s =>
-          val dp = FileIO.join(dir, s.path)
-          DirectRead.invalidate(dp)
-          io.delete(dp)
-        }
+        dropped.foreach(s => writer.drop(FileIO.join(dir, s.path)))
         problems += s"repaired: truncated to maxSeq ${next.maxSeq}, dropped ${dropped.length} segment(s)"
       }
     } else if (onDisk.isDefined && committed.version > manifest.version) {
@@ -873,15 +654,24 @@ object ParquetLog {
     value,
     StructField("nulled", BooleanType, nullable = false)))
 
-  /** Parquet writer options of every segment write, job or driver,
-    * log or [[TableStore]]: small pages (row-count-bounded) make the
-    * column and offset indexes precise — a point read decodes ONE
-    * ~1k-row page instead of a whole 20k-row default page, and a
-    * [[SliceRead]] prunes a key's rows to the pages that hold it. Both
-    * stores are point-read-optimized and pay a negligible scan/size
-    * cost for it. */
-  private[storage] val SegmentWriteOptions: Map[String, String] =
-    Map("parquet.page.row.count.limit" -> "1024")
+  /** The DENSE-SEQ GATE as a pure check: None when `segs` tile
+    * `[first, first + rows - 1]` exactly — every file a dense range
+    * (`rows == maxSeq - minSeq + 1`), the files contiguous from
+    * `first`, their rows summing to `rows` — else the expected and
+    * found ranges, for the error. */
+  private[graft] def denseProblem(first: Long, rows: Long,
+      segs: Seq[Segment]): Option[String] = {
+    val sorted = segs.sortBy(_.minSeq)
+    var expect = first
+    val tiles = sorted.forall { s =>
+      val ok = s.minSeq == expect && s.rows == s.maxSeq - s.minSeq + 1
+      expect = s.maxSeq + 1
+      ok
+    }
+    if (tiles && sorted.map(_.rows).sum == rows) None
+    else Some(s"expected [$first, ${first + rows - 1}], got " +
+      sorted.map(s => s"[${s.minSeq},${s.maxSeq}]x${s.rows}").mkString(" "))
+  }
 
   /** The rows of `src` when it is already resident on the driver:
     * every leaf of its analyzed plan is a (non-streaming) local
@@ -957,40 +747,4 @@ object ParquetLog {
     new ParquetLog(spark, dir, m)
   }
 
-
-  /** (min seq, max seq, row count) of one segment file, read from its
-    * parquet footer — driver-side, no executor involvement. Segments
-    * are seq-sorted, so the column min/max statistics are exact.
-    * None for zero-row files. */
-  private[storage] def seqStatsFromFooter(
-      inputFile: org.apache.parquet.io.InputFile): Option[(Long, Long, Long)] = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(inputFile)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      if (blocks.isEmpty) return None
-      var minSeq = Long.MaxValue
-      var maxSeq = Long.MinValue
-      var rows = 0L
-      blocks.foreach { b =>
-        rows += b.getRowCount
-        val seqCol = b.getColumns.asScala
-          .find(_.getPath.toDotString == "seq")
-          .getOrElse(throw new IllegalStateException(s"no seq column in $inputFile"))
-        val stats = seqCol.getStatistics
-        require(
-          stats != null && stats.hasNonNullValue,
-          s"missing seq statistics in $inputFile"
-        )
-        minSeq = math.min(
-          minSeq,
-          stats.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-        )
-        maxSeq = math.max(
-          maxSeq,
-          stats.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-        )
-      }
-      Some((minSeq, maxSeq, rows))
-    } finally reader.close()
-  }
 }

@@ -1,14 +1,10 @@
 package graft.storage
 
-import java.util.UUID
-
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
-
-import graft.core.GraftConf
 
 /** A small manifest-committed parquet table: append-only segments with
   * atomic visibility and copy-on-write rewrite. The shared storage
@@ -37,35 +33,9 @@ final class TableStore private (
 
   private val io: FileIO = FileIO.forPath(dir)
 
-  // target on-disk bytes per segment file for the small-append merge
-  // in [[writeSegmentFiles]] — session-tunable; the default keeps a
-  // micro-batch commit at 1–2 files while leaving any append whose
-  // staged bytes already justify its file count untouched
-  private val segmentTargetFileBytes: Long =
-    GraftConf.long(spark, "spark.graft.segmentTargetFileBytes", 32L << 20)
-
-  // staged-bytes ceiling for the DRIVER-SIDE row-group-copy merge: a
-  // merge under it skips the read-back Spark job entirely (the
-  // per-micro-batch floor); above it — many mid-size files, a rare
-  // shape for a "small" append — the parallel coalesce rewrite is
-  // worth its scheduling cost and the driver never streams large
-  // byte volumes through itself (guide §5: the driver does no data
-  // work)
-  private val segmentMergeDriverMaxBytes: Long =
-    GraftConf.long(spark, "spark.graft.segmentMergeDriverMaxBytes", 128L << 20)
-
-  // PLAN-ESTIMATE ceiling under which an append's write job is
-  // coalesced to one task (the small-append task-floor cut in
-  // [[append]]). Judged as the MAX estimate over every plan node —
-  // not the output estimate — so an aggregation's INPUT counts:
-  // coalesce collapses the whole post-shuffle stage, and a pump's
-  // "small" change table computed from a big scan must keep its
-  // parallelism (an 8 MB output-only gate serialized the KV/multilog
-  // pump aggregations and cost 40-100% on those builds). 1 MB of
-  // in-memory estimate ≈ a few thousand rows — the micro-commit
-  // shape and nothing else.
-  private val smallAppendCoalesceMaxBytes: Long =
-    GraftConf.long(spark, "spark.graft.smallAppendCoalesceMaxBytes", 1L << 20)
+  // every segment write, table layout: one entry range per write
+  private val writer = new SegmentWriter(spark, dir, "table",
+    SegmentWriter.TableSmallAppendMaxBytes)
 
   /** On-disk schema: the logical columns plus the physical `_ver`. */
   private val diskSchema: StructType =
@@ -103,40 +73,14 @@ final class TableStore private (
     val ver = manifest.version + 1
     val out = df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
       .withColumn("_ver", lit(ver))
-    // SMALL-APPEND TASK-FLOOR CUT: a micro-batch that arrives with N
-    // partitions schedules N write tasks (then the post-write merge
-    // folds the N tiny files anyway) — pure per-commit scheduling
-    // overhead at any scale (guide §2.6/§6). Judge the batch by the
-    // optimizer's size estimate (plan stats over-estimate on-disk
-    // parquet, so the gate errs toward NOT narrowing) and coalesce
-    // the write job to ONE task. coalesce is a narrow dependency:
-    // upstream stages keep their parallelism past any exchange; only
-    // the post-shuffle final stage narrows — which is also why the
-    // gate must stay TINY: any real per-row work left in that final
-    // stage (a distinct, a sort) serializes with it, so only batches
-    // whose estimate says "trivial" qualify. Scale-adaptive by
-    // construction — a big append's estimate leaves it untouched;
-    // merge-free mode (target <= 0) skips the cut too.
-    val shaped =
-      if (segmentTargetFileBytes <= 0 || smallAppendCoalesceMaxBytes <= 0) out
-      else {
-        // stats over the ANALYZED plan (already materialized — Datasets
-        // analyze eagerly at creation), NOT optimizedPlan: forcing the
-        // optimizer here would run a full rule pass per append on top
-        // of the one the write itself plans (measured +60% on
-        // kvindex_build). The un-optimized estimate is only coarser
-        // upward, which errs toward not narrowing — the safe side.
-        val est = TableStore.maxPlanEstimate(out)
-        // only when the batch is tiny AND its bytes justify a single
-        // target file (a deliberately tiny per-file target means
-        // "never fold" — honor it here too)
-        if (est <= BigInt(smallAppendCoalesceMaxBytes) &&
-          est <= BigInt(segmentTargetFileBytes)) out.coalesce(1)
-        else out
-      }
-    val segs = writeSegmentFiles(shaped, ver, sortWithin)
+    // the small-append cut: a tiny batch's write job runs as ONE task.
+    // coalesce is a narrow dependency — upstream stages keep their
+    // parallelism past any exchange; only the post-shuffle final stage
+    // narrows, which is why the cut stays tiny
+    val shaped = if (writer.small(out)) out.coalesce(1) else out
+    val segs = writer.write(shaped, SegmentWriter.Ranged(ver, ver, sortWithin))
     FaultPoints.reach("table.append.preCommit")
-    commitOrCleanup(
+    manifest = writer.commit(
       manifest.copy(version = ver, segments = manifest.segments ++ segs),
       segs
     )
@@ -185,26 +129,15 @@ final class TableStore private (
     val out = f(cur)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       .withColumn("_ver", lit(ver))
-    val segs = writeSegmentFiles(out, ver, sortWithin)
+    val segs = writer.write(out, SegmentWriter.Ranged(ver, ver, sortWithin))
     val old = manifest.segments
     FaultPoints.reach("table.rewrite.preCommit")
-    commitOrCleanup(
+    manifest = writer.commit(
       manifest.copy(version = ver, segments = segs,
         foldedBelow = Some(ver)),
       segs)
     FaultPoints.reach("table.rewrite.preDelete")
-    old.foreach(s => dropFile(FileIO.join(dir, s.path)))
-  }
-
-  private def sorted(df: DataFrame, cols: Seq[String]): DataFrame =
-    if (cols.isEmpty) df else df.sortWithinPartitions(cols.map(col): _*)
-
-  /** Delete a segment file, first dropping its shared open reader
-    * ([[DirectRead.invalidate]]) so the LRU neither pins the dead
-    * file's disk space nor fills with readers no manifest lists. */
-  private def dropFile(path: String): Unit = {
-    DirectRead.invalidate(path)
-    io.delete(path)
+    old.foreach(s => writer.drop(FileIO.join(dir, s.path)))
   }
 
   /** The committed rows matching `filter` — a parquet predicate over
@@ -291,15 +224,16 @@ final class TableStore private (
     val out = spark.read.schema(diskSchema)
       .parquet(small.map(s => FileIO.join(dir, s.path)): _*)
       .repartitionByRange(targetPartitions, layout.map(col): _*)
-    val segs = writeSegmentFiles(out, ver, sortWithin = layout,
-      content = Some((cMin, cMax)))
+    // merged files carry the folded inputs' content version range,
+    // not the fold's own commit version
+    val segs = writer.write(out, SegmentWriter.Ranged(cMin, cMax, layout))
     FaultPoints.reach("table.rewrite.preCommit")
-    commitOrCleanup(
+    manifest = writer.commit(
       manifest.copy(version = ver,
         segments = (big ++ segs).sortBy(s => (s.minSeq, s.maxSeq, s.path))),
       segs)
     FaultPoints.reach("table.rewrite.preDelete")
-    small.foreach(s => dropFile(FileIO.join(dir, s.path)))
+    small.foreach(s => writer.drop(FileIO.join(dir, s.path)))
     true
   }
 
@@ -319,7 +253,7 @@ final class TableStore private (
   /** Crash-consistency sweep, the table-store face of ParquetLog's
     * fsck (reference discipline: journal cross-check,
     * offset2/log.go:217-302): a crash mid-append leaves an orphan
-    * `tmp-*` spill dir and/or moved `data/` files the manifest never
+    * staging dir and/or moved `data/` files the manifest never
     * committed; a crash mid-`rewrite` (after commit, before delete)
     * leaves the folded-away files behind. All are INVISIBLE to
     * readers (the manifest is the source of truth) but leak disk.
@@ -366,139 +300,16 @@ final class TableStore private (
       .foreach { f =>
         issues += s"orphan segment data/${f.name}"
         if (doRepair && FsckSweep.oldEnough(f.mtimeMs, minAgeMs))
-          dropFile(f.path)
+          writer.drop(f.path)
       }
     committed.segments
       .filterNot(s => io.exists(FileIO.join(dir, s.path)))
       .foreach(s => issues += s"MISSING committed segment ${s.path}")
     issues.toList
   }
-
-  /** Write `out` as new segment files under data/ and return their
-    * manifest entries (not yet committed). `sortWithin` sorts the rows
-    * of each written file, and every row group of a published file
-    * keeps that order (the sublog limit read relies on it): the
-    * row-group concat copies sorted groups whole, and the coalesce
-    * fallback, which runs several staged files into one output file
-    * (and one row group), sorts again after the coalesce. `content`
-    * overrides the per-file `[minSeq, maxSeq]` entry range — a MINOR
-    * fold's merged files carry the folded inputs' version range
-    * instead of the fold's own commit version. */
-  private def writeSegmentFiles(
-      out: DataFrame,
-      ver: Long,
-      sortWithin: Seq[String],
-      content: Option[(Long, Long)] = None
-  ): List[Segment] = {
-    val tmp = FileIO.join(dir, s"tmp-${UUID.randomUUID()}")
-    sorted(out, sortWithin).write.options(ParquetLog.SegmentWriteOptions)
-      .mode(SaveMode.Overwrite).parquet(tmp)
-    // Small-append coalescing: a batch that arrives with N partitions
-    // writes N files regardless of size (the write boundary is often
-    // narrow, so AQE never coalesces it), and a store advanced by
-    // thousands of small commits — the streaming-daemon shape — then
-    // pays O(files) listing/footer cost at EVERY plan. Judge staged
-    // bytes (real sizes, not a row guess) and fold a tiny multi-file
-    // stage into ceil(bytes/target) files before publishing — by
-    // DRIVER-SIDE row-group copy ([[ParquetConcat]]), not a read-back
-    // coalesce job: the bytes moved are bounded by the small-append
-    // threshold, and skipping the second Spark job removes its fixed
-    // scheduling cost from every micro-batch commit. Large appends
-    // untouched.
-    val staged = io.list(tmp)
-      .filter(f => f.name.endsWith(".parquet") && !FileIO.isHidden(f.name))
-    val merged =
-      if (staged.length <= 1 || segmentTargetFileBytes <= 0) tmp
-      else {
-        val sizes = staged.map(f => f.path -> io.size(f.path)).toMap
-        val totalBytes = sizes.valuesIterator.sum
-        val target = math.max(1L,
-          (totalBytes + segmentTargetFileBytes - 1) / segmentTargetFileBytes)
-        if (target >= staged.length) tmp
-        else {
-          val tmp2 = FileIO.join(dir, s"tmp-${UUID.randomUUID()}")
-          if (totalBytes <= segmentMergeDriverMaxBytes) {
-            io.mkdirs(tmp2)
-            // name order = the write job's partition order, so the
-            // merged content order matches what the coalesce
-            // read-back produced
-            ParquetConcat
-              .packGroups(staged.sortBy(_.name), sizes, target.toInt)
-              .zipWithIndex.foreach { case (group, i) =>
-                ParquetConcat.concat(io, group.map(_.path),
-                  FileIO.join(tmp2, f"part-$i%05d.parquet"))
-              }
-          } else
-            sorted(spark.read.schema(diskSchema).parquet(tmp)
-              .coalesce(target.toInt), sortWithin)
-              .write.options(ParquetLog.SegmentWriteOptions)
-              .mode(SaveMode.Overwrite).parquet(tmp2)
-          FsckSweep.deleteRecursively(tmp)
-          tmp2
-        }
-      }
-    FaultPoints.reach("table.segments.tmpWritten")
-    val files = io.list(merged)
-      .filter(f => f.name.endsWith(".parquet") && !FileIO.isHidden(f.name))
-    val dataDir = FileIO.join(dir, "data")
-    io.mkdirs(dataDir)
-    val segs = files.map { f =>
-      val name = f"seg-$ver%08d-${UUID.randomUUID().toString.take(8)}.parquet"
-      // exact row count from the parquet footer (one cheap metadata
-      // read of a file we just wrote) — feeds the connector's
-      // statistics and byte/row admission control
-      val rows =
-        try {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            io.inputFile(f.path))
-          try r.getRecordCount finally r.close()
-        } catch { case _: Exception => 0L }
-      // on-disk size recorded at commit: planning (statistics,
-      // packing, compactSmall, admission) reads it from the manifest
-      // instead of stat-ing every segment on every plan
-      val fbytes = try Some(io.size(f.path)) catch {
-        case _: Exception => None
-      }
-      FaultPoints.reach("table.segments.beforeMove")
-      io.rename(f.path, FileIO.join(dataDir, name))
-      FaultPoints.reach("table.segments.moved")
-      val (lo, hi) = content.getOrElse((ver, ver))
-      Segment(s"data/$name", lo, hi, rows, fbytes)
-    }
-    FsckSweep.deleteRecursively(merged)
-    segs
-  }
-
-  /** Commit the manifest, then publish it to this handle. On a commit
-    * failure (stale handle, ConcurrentWriteException) the just-written
-    * segment files are removed and the in-memory view stays at the last
-    * COMMITTED state — a stale handle never serves uncommitted data. */
-  private def commitOrCleanup(next: Manifest, segs: List[Segment]): Unit = {
-    try Manifest.commit(dir, next)
-    catch {
-      case e: Throwable =>
-        segs.foreach(s => dropFile(FileIO.join(dir, s.path)))
-        throw e
-    }
-    manifest = next
-  }
-
 }
 
 object TableStore {
-
-  /** Size estimate for the small-append gate: the MAX analyzed-plan
-    * node estimate, so the cut only fires when everything the write
-    * stage would serialize — scans, aggregate inputs, join sides —
-    * is itself tiny. Shared with [[ParquetLog]]'s append gate. */
-  private[storage] def maxPlanEstimate(df: DataFrame): BigInt = {
-    var m = BigInt(0)
-    df.queryExecution.analyzed.foreach { p =>
-      val s = p.stats.sizeInBytes
-      if (s > m) m = s
-    }
-    m
-  }
 
   def open(spark: SparkSession, dir: String, schema: StructType): TableStore = {
     // data/ exists from open so `stream` can subscribe before the

@@ -91,7 +91,7 @@ abstract class KillPointContract extends SparkSpec {
       .map(_.name).sorted
 
   // ---------------------------------------------------------------
-  // append: every side-effect boundary of writeSegments + the commit
+  // append: every side-effect boundary of the segment writer + the commit
   // ---------------------------------------------------------------
   private val appendKills = Seq(
     ("log.segments.tmpWritten", 1), // spill written, nothing moved
@@ -325,6 +325,8 @@ abstract class KillPointContract extends SparkSpec {
     ("table.segments.tmpWritten", 1),
     ("table.segments.beforeMove", 1),
     ("table.segments.moved", 1),
+    ("table.segments.beforeMove", 2), // PARTIAL move of a 2-file stage
+    ("table.segments.allMoved", 1), // all moved, staging not yet swept
     ("table.append.preCommit", 1),
     ("manifest.tmpWritten", 1)
   )
@@ -417,7 +419,7 @@ abstract class KillPointContract extends SparkSpec {
     log.appendValues(0 until 5)
     val filesBefore = dataFiles(dir)
 
-    // manifest.tmpWritten sits INSIDE commitOrCleanup's guard: the
+    // manifest.tmpWritten sits INSIDE the writer's commit guard: the
     // in-memory handle survives, cleans its fresh files, and stays
     // serviceable at the committed state
     killAt("manifest.tmpWritten")
