@@ -32,17 +32,13 @@ import graft.storage.{FileIO, Manifest, ParquetLog, Segment, TableStore}
   *     behind, and a clean fsck.
   */
 class WriterShapeSpec extends SparkSpec {
+  import WriterShapeSpec.Shape
   import spark.implicits._
 
   private val inputSchema = StructType(Seq(
     StructField("k", StringType, nullable = false),
     StructField("id", LongType, nullable = false)))
   private val tableSort = Seq("k", "id")
-
-  /** A named input over a parquet source of `(k, id)` rows; `exact`
-    * false for a shape whose rows Spark may pick differently per run. */
-  private final case class Shape(name: String, build: DataFrame => DataFrame,
-      exact: Boolean = true)
 
   /** Source rows and the `repartition(n)` width, drawn once. */
   private val (sourceRows, parts) = Gen.zip(Gen.choose(1500, 2500),
@@ -210,4 +206,12 @@ class WriterShapeSpec extends SparkSpec {
         withClue(s"[${shape.name}] ")(run(conf)(shape))
       }
     }
+}
+
+object WriterShapeSpec {
+
+  /** A named input over a parquet source of `(k, id)` rows; `exact`
+    * false for a shape whose rows Spark may pick differently per run. */
+  final case class Shape(name: String, build: DataFrame => DataFrame,
+      exact: Boolean = true)
 }
