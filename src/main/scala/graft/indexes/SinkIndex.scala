@@ -1,10 +1,13 @@
 package graft.indexes
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.QuerySpec._
 import graft.multilog.MultiLogApi
+import graft.plans.OrderedLogScan
 import graft.storage.ParquetLog
 
 /** Derived-view builders: replay the log from a persisted cursor
@@ -27,6 +30,17 @@ import graft.storage.ParquetLog
   * under Structured Streaming via [[graft.live.LiveTail]]; this batch
   * runner gives the synchronous replay/resume semantics the
   * conformance tests exercise.
+  *
+  * A small increment runs no Spark job from log read to index commit,
+  * as the reference's in-process sink does: when `(from, top]` holds
+  * at most [[graft.plans.OrderedLogScan.DriverCollectMaxRows]] entries
+  * and the segments holding them pass the log's small-append cut
+  * ([[graft.storage.ParquetLog.smallSpan]]), the batch is collected on
+  * the driver ([[graft.plans.DriverLogCollectExec]]) and handed to the
+  * transform as a local relation. Spark folds projections and filters
+  * over it on the driver, and the index's [[graft.storage.TableStore]]
+  * commits the folded rows with no write job. A larger increment, or
+  * a transform Spark cannot fold (an aggregate, a join), runs as jobs.
   */
 object SinkIndex {
 
@@ -38,19 +52,20 @@ object SinkIndex {
       log: ParquetLog,
       idx: KV,
       proc: DataFrame => DataFrame
+  ): Long = pump(log, idx, proc, OrderedLogScan.DriverCollectMaxRows)
+
+  /** [[pump]] with the driver path's row bound; 0 forces the lazy
+    * job-path batch. */
+  private[graft] def pump(
+      log: ParquetLog,
+      idx: KV,
+      proc: DataFrame => DataFrame,
+      driverRowBound: Long
   ): Long = {
     val from = idx.getSeq
     val top = log.seq
     if (top <= from) return 0L
-    // Lte(top) pins the batch to EXACTLY (from, top]: the connector
-    // plans from the CURRENT manifest, so without the upper bound an
-    // append racing the pump would be applied now but re-processed
-    // next pump (idempotent, just wasted work) — bounded, the cursor
-    // math and the batch agree by construction
-    val batch = log
-      .query(Gt(from), Lte(top), SeqWrap(true))
-      .where(!col("nulled")) // skip redacted entries
-    val updates = proc(batch)
+    val updates = proc(increment(log, from, top, driverRowBound))
     graft.storage.FaultPoints.reach("sink.pump.preApply")
     if (!updates.isEmpty) idx.applyBatch(updates)
     // CURSOR-AFTER discipline (the reference's SinkIndex,
@@ -61,12 +76,35 @@ object SinkIndex {
     idx.setSeq(top)
     top - from
   }
+
+  /** The live entries `(seq, value, nulled)` of `(from, top]`, nulled
+    * ones skipped. Lte(top) pins the batch to EXACTLY (from, top]: the
+    * connector plans from the CURRENT manifest, so without the upper
+    * bound an append racing the pump would be applied now but
+    * re-processed next pump (idempotent, just wasted work) — bounded,
+    * the cursor math and the batch agree by construction. Within
+    * `driverRowBound` rows and the log's byte cut the entries are
+    * collected on the driver, with no job, into a local relation;
+    * else the lazy scan. */
+  private[indexes] def increment(
+      log: ParquetLog,
+      from: Long,
+      top: Long,
+      driverRowBound: Long
+  ): DataFrame = {
+    val scan = log.query(Gt(from), Lte(top), SeqWrap(true))
+    val batch =
+      if (top - from > driverRowBound || !log.smallSpan(from, top)) scan
+      else log.spark.createDataFrame(scan.collect().toSeq.asJava, scan.schema)
+    batch.where(!col("nulled")) // skip redacted entries
+  }
 }
 
 /** The multilog fan-out sink (multilog/sink.go:20-82): route each log
   * entry into zero or more sublogs. `fanout` maps the new-entries batch
   * `(seq, value, nulled)` to `(addr, seq)` index rows (the set-oriented
-  * form of `multilog.Func`'s generator shape). */
+  * form of `multilog.Func`'s generator shape). A small increment
+  * takes the same job-free driver path as [[SinkIndex]]. */
 object MultiLogSink {
 
   def pump(
@@ -74,14 +112,22 @@ object MultiLogSink {
       mlog: MultiLogApi,
       cursorOwner: KV,
       fanout: DataFrame => DataFrame
+  ): Long = pump(log, mlog, cursorOwner, fanout,
+    OrderedLogScan.DriverCollectMaxRows)
+
+  /** [[pump]] with the driver path's row bound (see
+    * [[SinkIndex.increment]]); 0 forces the lazy job-path batch. */
+  private[graft] def pump(
+      log: ParquetLog,
+      mlog: MultiLogApi,
+      cursorOwner: KV,
+      fanout: DataFrame => DataFrame,
+      driverRowBound: Long
   ): Long = {
     val from = cursorOwner.getSeq
     val top = log.seq
     if (top <= from) return 0L
-    val batch = log
-      .query(Gt(from), Lte(top), SeqWrap(true)) // exactly (from, top]
-      .where(!col("nulled"))
-    val rows = fanout(batch)
+    val rows = fanout(SinkIndex.increment(log, from, top, driverRowBound))
     graft.storage.FaultPoints.reach("mlogsink.pump.preAppend")
     if (!rows.isEmpty) mlog.appendBatch(rows)
     // cursor-after: a crash here replays the batch next pump; the

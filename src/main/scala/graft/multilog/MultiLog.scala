@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core._
-import graft.storage.{SliceRead, TableStore}
+import graft.storage.{SegmentWriter, SliceRead, TableStore}
 
 /** Virtual sublogs — the reference's roaring-bitmap multilog
   * (multilog/multilog.go:21-31, multilog/roaring/) re-expressed as an
@@ -115,25 +115,31 @@ final class MultiLog private[graft] (
     * harmless — strictly stronger than the reference's at-most-once
     * cursor-first discipline (multilog/sink.go:50-57). */
   def appendBatch(df: DataFrame): Unit = synchronized {
-    // ONE exchange, not two: bucket is a function of addr, so hash-
-    // partitioning by bucket co-locates every (addr, seq) duplicate —
-    // a distinct over (addr, seq, bucket) is then satisfied by the
-    // bucket exchange (HashPartitioning(bucket) ⊆ the distinct's
-    // clustering) and plans with NO second shuffle, where the old
-    // dropDuplicates-then-repartition shape shuffled the batch twice
     val routed = df.select(
         col(df.columns(0)).cast(StringType).as("addr"),
         col(df.columns(1)).cast(LongType).as("seq")
       ).where(col("addr").isNotNull) // null route = "don't index"
       .withColumn("bucket",
         pmod(xxhash64(col("addr")), lit(NumBuckets)).cast("int"))
-    store.append(
-      routed
-        .repartition(col("bucket"))
-        .distinct()
-        .select("addr", "seq", "bucket"),
-      sortWithin = MultiLog.Layout
-    )
+    val distinct = SegmentWriter.driverResident(routed) match {
+      // rows already on the driver (bucket evaluated by Spark as the
+      // optimizer folded it): dedup here, and the store commits the
+      // local frame with no job
+      case Some(rows) =>
+        spark.createDataFrame(rows.toSeq.map(r =>
+          Row(r.getUTF8String(0).toString, r.getLong(1), r.getInt(2)))
+          .distinct.asJava, MultiLog.schema)
+      // ONE exchange, not two: bucket is a function of addr, so hash-
+      // partitioning by bucket co-locates every (addr, seq) duplicate —
+      // a distinct over (addr, seq, bucket) is then satisfied by the
+      // bucket exchange (HashPartitioning(bucket) ⊆ the distinct's
+      // clustering) and plans with NO second shuffle, where the old
+      // dropDuplicates-then-repartition shape shuffled the batch twice
+      case None =>
+        routed.repartition(col("bucket")).distinct()
+          .select("addr", "seq", "bucket")
+    }
+    store.append(distinct, sortWithin = MultiLog.Layout)
     epoch.incrementAndGet()
     (): Unit
   }

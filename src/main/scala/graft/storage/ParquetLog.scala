@@ -62,6 +62,19 @@ final class ParquetLog private (
     * (reference: Seq(), offset2/log.go:346-350). */
   def seq: Long = manifest.maxSeq
 
+  /** Whether the committed entries `(from, top]` may be read onto the
+    * driver: every segment holding one of them has its bytes recorded,
+    * and their sum passes this log's small-append cut — the bytes an
+    * append could have staged on the driver. Whole segments bound the
+    * entries' bytes from above, so a log of large values never pulls
+    * its rows onto the driver. */
+  private[graft] def smallSpan(from: Long, top: Long): Boolean = {
+    val spanned =
+      manifest.segments.filter(s => s.maxSeq > from && s.minSeq <= top)
+    spanned.forall(_.bytes.isDefined) &&
+      writer.smallBytes(spanned.flatMap(_.bytes).map(BigInt(_)).sum)
+  }
+
   /** The committed log as a DataFrame `(seq, value, nulled)`.
     * Batch visibility is manifest-scoped: only committed segments.
     *
@@ -182,7 +195,7 @@ final class ParquetLog private (
     val small = writer.small(src0)
     // DRIVER PATH: a small batch that already sits on the driver is
     // stamped and staged here, with no Spark job (see append)
-    val driverRows = if (small) ParquetLog.driverResident(src0) else None
+    val driverRows = if (small) SegmentWriter.driverResident(src0) else None
     val (segs, acc) = driverRows match {
       case Some(rows) =>
         val stamped = rows.iterator.zipWithIndex.map { case (row, i) =>
@@ -671,29 +684,6 @@ object ParquetLog {
     if (tiles && sorted.map(_.rows).sum == rows) None
     else Some(s"expected [$first, ${first + rows - 1}], got " +
       sorted.map(s => s"[${s.minSeq},${s.maxSeq}]x${s.rows}").mkString(" "))
-  }
-
-  /** The rows of `src` when it is already resident on the driver:
-    * every leaf of its analyzed plan is a (non-streaming) local
-    * relation, and the optimizer folded the plan to a bare local table
-    * scan, whose rows come back with no Spark job. Those rows were
-    * evaluated once, as the optimizer folded them (a `limit` or a
-    * seeded `rand` over a local relation included), so stamping them
-    * needs no other check on the plan. None for anything else (file
-    * scans, RDDs, shuffles, streams, or a plan the optimizer could not
-    * fold), which takes the job path. */
-  private def driverResident(src: DataFrame): Option[Array[InternalRow]] = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    import org.apache.spark.sql.execution.LocalTableScanExec
-    val local = src.queryExecution.analyzed.collectLeaves().forall {
-      case l: LocalRelation => !l.isStreaming
-      case _ => false
-    }
-    if (!local) None
-    else src.queryExecution.executedPlan match {
-      case scan: LocalTableScanExec => Some(scan.executeCollect())
-      case _ => None
-    }
   }
 
   /** [[ParquetLog.getMany]] tiering (see BASELINE.md's IN-literal

@@ -74,11 +74,13 @@ private[storage] final class SegmentWriter(
     * computed FROM something big (a pump's aggregation over a big
     * scan) keeps its parallelism; a batch must also justify a single
     * target file (a deliberately tiny target means "never fold"). */
-  def small(df: DataFrame): Boolean =
-    targetFileBytes > 0 && smallAppendMaxBytes > 0 && {
-      val est = maxPlanEstimate(df)
-      est <= BigInt(smallAppendMaxBytes) && est <= BigInt(targetFileBytes)
-    }
+  def small(df: DataFrame): Boolean = smallBytes(maxPlanEstimate(df))
+
+  /** Whether `bytes` pass the small-append cut: within
+    * `smallAppendCoalesceMaxBytes` and one target file. */
+  def smallBytes(bytes: BigInt): Boolean =
+    targetFileBytes > 0 && smallAppendMaxBytes > 0 &&
+      bytes <= BigInt(smallAppendMaxBytes) && bytes <= BigInt(targetFileBytes)
 
   /** Stage `df` with one write job (each partition sorted by the
     * layout's `sortWithin`), fold and publish it; returns the new
@@ -250,7 +252,7 @@ private[storage] final class SegmentWriter(
   }
 }
 
-private[storage] object SegmentWriter {
+private[graft] object SegmentWriter {
 
   /** The small-append cut's default for a log: a log append's
     * post-shuffle work is a per-byte-cheap sort-merge and encode
@@ -289,6 +291,30 @@ private[storage] object SegmentWriter {
       if (s > m) m = s
     }
     m
+  }
+
+  /** The rows of `df` when they are already resident on the driver:
+    * every leaf of its analyzed plan is a (non-streaming) local
+    * relation, and the optimizer folded the plan to a bare local table
+    * scan, whose rows come back with no Spark job, laid out as
+    * `df.schema`. Those rows were evaluated once, as the optimizer
+    * folded them (a `limit` or a seeded `rand` over a local relation
+    * included), so writing them needs no other check on the plan.
+    * None for anything else (file scans, RDDs, shuffles, streams, or
+    * a plan the optimizer could not fold, such as an aggregate or a
+    * join), which takes the job path. */
+  def driverResident(df: DataFrame): Option[Array[InternalRow]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    val local = df.queryExecution.analyzed.collectLeaves().forall {
+      case l: LocalRelation => !l.isStreaming
+      case _ => false
+    }
+    if (!local) None
+    else df.queryExecution.executedPlan match {
+      case scan: LocalTableScanExec => Some(scan.executeCollect())
+      case _ => None
+    }
   }
 
   /** What a staged file's footer says under a [[Layout]]: its

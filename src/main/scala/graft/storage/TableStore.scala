@@ -3,6 +3,7 @@ package graft.storage
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, RowOrdering, SortOrder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
@@ -68,17 +69,32 @@ final class TableStore private (
     * `sortWithin` columns sort the rows inside each written file (a
     * key layout whose page indexes let [[slice]] prune to the key's
     * pages); the sort runs after the small-append cut, so a coalesced
-    * micro-batch lands as ONE file sorted end to end. */
+    * micro-batch lands as ONE file sorted end to end.
+    *
+    * Within the small-append cut (`spark.graft.smallAppendCoalesceMaxBytes`,
+    * `spark.graft.segmentTargetFileBytes`), a batch whose rows are
+    * already on the driver (local relations the optimizer folds to one
+    * local table scan: `KVIndex.set`, `MultiLog.append`, a pump over a
+    * driver-collected increment) is sorted and staged on the driver
+    * with no Spark job, as a small log append is; any other small
+    * batch is written by ONE task. Either way only the manifest commit
+    * is serialized. */
   def append(df: DataFrame, sortWithin: Seq[String] = Nil): Long = synchronized {
     val ver = manifest.version + 1
     val out = df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
       .withColumn("_ver", lit(ver))
+    val layout = SegmentWriter.Ranged(ver, ver, sortWithin)
     // the small-append cut: a tiny batch's write job runs as ONE task.
     // coalesce is a narrow dependency — upstream stages keep their
     // parallelism past any exchange; only the post-shuffle final stage
     // narrows, which is why the cut stays tiny
-    val shaped = if (writer.small(out)) out.coalesce(1) else out
-    val segs = writer.write(shaped, SegmentWriter.Ranged(ver, ver, sortWithin))
+    val small = writer.small(out)
+    val segs = (if (small) SegmentWriter.driverResident(out) else None) match {
+      case Some(rows) =>
+        writer.writeOnDriver(TableStore.sortedOnDriver(rows, out, sortWithin),
+          out.schema, layout)
+      case None => writer.write(if (small) out.coalesce(1) else out, layout)
+    }
     FaultPoints.reach("table.append.preCommit")
     manifest = writer.commit(
       manifest.copy(version = ver, segments = manifest.segments ++ segs),
@@ -310,6 +326,19 @@ final class TableStore private (
 }
 
 object TableStore {
+
+  /** `rows` of `df` in `sortWithin` order, as a write job's
+    * `sortWithinPartitions` leaves them: Spark's own row ordering
+    * (ascending, nulls first) over references bound to `df`'s output.
+    * The sort is stable. */
+  private def sortedOnDriver(rows: Array[InternalRow], df: DataFrame,
+      sortWithin: Seq[String]): Iterator[InternalRow] = {
+    val output = df.queryExecution.analyzed.output
+    val ordering = RowOrdering.create(
+      sortWithin.map(c => SortOrder(output(df.schema.fieldIndex(c)), Ascending)),
+      output)
+    rows.sorted(ordering).iterator
+  }
 
   def open(spark: SparkSession, dir: String, schema: StructType): TableStore = {
     // data/ exists from open so `stream` can subscribe before the

@@ -343,27 +343,76 @@ abstract class KillPointContract extends SparkSpec {
       try expectInjected(t.append(Seq(("c", 3), ("d", 4)).toDF("k", "v")))
       finally FaultPoints.clear()
 
-      val re = noMerge(TableStore.open(spark, dir, tableSchema))
-      assert(re.version == v0, "crashed append advanced the committed version")
-      assert(tableRows(re) == Set(("a", 1), ("b", 2)))
-      // litter is reported against the ON-DISK manifest and swept
-      // (minAgeMs=0: in the crash model the writer is known dead);
-      // the object-store leg's manifest PUT crash is all-or-nothing
-      // and leaves nothing to report
-      val treported = re.checkConsistency(repair = false, minAgeMs = 0L)
-      if (point == "manifest.tmpWritten" && !manifestTmpLitter)
-        assert(treported.isEmpty,
-          s"direct-PUT manifest crash left litter: $treported")
-      else
-        assert(treported.nonEmpty,
-          s"$point crash left no fsck-visible litter")
-      re.checkConsistency(repair = true, minAgeMs = 0L)
-      val after = re.checkConsistency(repair = false, minAgeMs = 0L)
-      assert(after.isEmpty, s"fsck not clean after repair: $after")
+      recoversFromTableAppendCrash(point, v0,
+        noMerge(TableStore.open(spark, dir, tableSchema)))
+    }
 
-      val v1 = re.append(Seq(("c", 3), ("d", 4)).toDF("k", "v")) // replay
-      assert(v1 == v0 + 1, "replayed append skipped a version")
-      assert(tableRows(re) == Set(("a", 1), ("b", 2), ("c", 3), ("d", 4)))
+  /** After an append of `(c, 3), (d, 4)` over `(a, 1), (b, 2)` at
+    * version `v0` was killed at `point`: the reopened table reads the
+    * pre-op state, fsck reports the litter and repair cleans it, and
+    * the replayed append commits the next version. Returns the Spark
+    * jobs the replay ran. */
+  private def recoversFromTableAppendCrash(
+      point: String,
+      v0: Long,
+      re: TableStore): Int = {
+    import spark.implicits._
+    assert(re.version == v0, "crashed append advanced the committed version")
+    assert(tableRows(re) == Set(("a", 1), ("b", 2)))
+    // litter is reported against the ON-DISK manifest and swept
+    // (minAgeMs=0: in the crash model the writer is known dead);
+    // the object-store leg's manifest PUT crash is all-or-nothing
+    // and leaves nothing to report
+    val treported = re.checkConsistency(repair = false, minAgeMs = 0L)
+    if (point == "manifest.tmpWritten" && !manifestTmpLitter)
+      assert(treported.isEmpty,
+        s"direct-PUT manifest crash left litter: $treported")
+    else
+      assert(treported.nonEmpty,
+        s"$point crash left no fsck-visible litter")
+    re.checkConsistency(repair = true, minAgeMs = 0L)
+    val after = re.checkConsistency(repair = false, minAgeMs = 0L)
+    assert(after.isEmpty, s"fsck not clean after repair: $after")
+
+    var v1 = -1L
+    val jobs = jobsDuring { // replay
+      v1 = re.append(Seq(("c", 3), ("d", 4)).toDF("k", "v"), Seq("k"))
+    }
+    assert(v1 == v0 + 1, "replayed append skipped a version")
+    assert(tableRows(re) == Set(("a", 1), ("b", 2), ("c", 3), ("d", 4)))
+    jobs
+  }
+
+  // TableStore append on the DRIVER PATH (merge left enabled, a local
+  // batch): the same publish-half fault points and commit, no Spark job
+  private val driverTableAppendKills = Seq(
+    "table.segments.tmpWritten", // staged file written, nothing moved
+    "table.segments.beforeMove", // the one move about to happen
+    "table.segments.moved", // moved into data/, tmp not yet swept
+    "table.segments.allMoved", // all moved, tmp not yet swept
+    "table.append.preCommit", // file in place, manifest not committed
+    "manifest.tmpWritten" // torn manifest: tmp written, not renamed
+  )
+
+  for (point <- driverTableAppendKills)
+    test(s"[$tag] driver-path table append killed at $point: pre-op reads, sweep, replay exact") {
+      import spark.implicits._
+      val dir = storeDir("kp-dtable")
+      val t = TableStore.open(spark, dir, tableSchema)
+      assert(jobsDuring(t.append(Seq(("b", 2), ("a", 1)).toDF("k", "v"), Seq("k"))) == 0,
+        "the baseline append left the driver path")
+      val v0 = t.version
+
+      killAt(point)
+      val jobs =
+        try jobsDuring(expectInjected(
+          t.append(Seq(("d", 4), ("c", 3)).toDF("k", "v"), Seq("k"))))
+        finally FaultPoints.clear()
+      assert(jobs == 0, s"the killed append ran $jobs Spark jobs: not the driver path")
+
+      val replayJobs = recoversFromTableAppendCrash(point, v0,
+        TableStore.open(spark, dir, tableSchema))
+      assert(replayJobs == 0, "the replayed append left the driver path")
     }
 
   test(s"[$tag] table rewrite killed at table.rewrite.preCommit: pre-op table intact, replay folds") {

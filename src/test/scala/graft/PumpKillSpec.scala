@@ -33,6 +33,11 @@ import graft.storage.{FaultPoints, ParquetLog}
   * discards the handles (crash model), reopens from disk, re-pumps,
   * and asserts: no duplicates, no gaps, final state byte-equal to a
   * never-crashed run, and the cursor resumes onward correctly.
+  *
+  * The matrix runs on both pump routes: the 20-row fixture's increment
+  * takes the job-free driver route by default, and a row bound of 0
+  * forces the job route (`(job path)` in the test name); the replay
+  * must stay on its route.
   */
 class PumpKillSpec extends SparkSpec {
 
@@ -88,6 +93,20 @@ class PumpKillSpec extends SparkSpec {
     m.table.orderBy("addr", "seq").collect().toSeq
       .map(r => (r.getString(0), r.getLong(1)))
 
+  /** Each pump route: its test-name tag and its driver row bound. */
+  private val routes = Seq(
+    "" -> graft.plans.OrderedLogScan.DriverCollectMaxRows,
+    " (job path)" -> 0L)
+
+  /** `pump`'s result, asserting it ran no Spark job on the driver
+    * route (`bound` > 0) and some on the job route. */
+  private def onRoute(bound: Long)(pump: => Long): Long = {
+    var n = 0L
+    val jobs = jobsDuring { n = pump }
+    assert((jobs == 0) == (bound > 0), s"row bound $bound: the pump ran $jobs jobs")
+    n
+  }
+
   // --------------------------------------------------------------
   // SinkIndex.pump (KV index; cursor-after, idempotent upsert)
   // --------------------------------------------------------------
@@ -98,8 +117,8 @@ class PumpKillSpec extends SparkSpec {
     "kv.cursor.tmpWritten"    // cursor tmp written, not atomically moved
   )
 
-  for (point <- sinkKills)
-    test(s"SinkIndex.pump killed at $point: replay = exactly-once effect") { withCleanHooks {
+  for (point <- sinkKills; (route, bound) <- routes)
+    test(s"SinkIndex.pump$route killed at $point: replay = exactly-once effect") { withCleanHooks {
       val logDir = tmpDir("pk-sink-log")
       val log = newLog(logDir)
       // the never-crashed oracle run
@@ -111,7 +130,7 @@ class PumpKillSpec extends SparkSpec {
       val kvDir = tmpDir("pk-sink-kv")
       val kv = KVIndex.open(spark, kvDir)
       killAt(point)
-      expectInjected(SinkIndex.pump(log, kv, kvProc))
+      expectInjected(SinkIndex.pump(log, kv, kvProc, bound))
       FaultPoints.clear()
 
       // crash model: discard handles, reopen from disk
@@ -122,7 +141,7 @@ class PumpKillSpec extends SparkSpec {
       assert(kv2.getSeq == graft.core.Seqs.SeqEmpty,
         s"cursor advanced before effect completed at $point")
       // re-pump consumes the full range and converges to the oracle
-      assert(SinkIndex.pump(log2, kv2, kvProc) == 20L)
+      assert(onRoute(bound)(SinkIndex.pump(log2, kv2, kvProc, bound)) == 20L)
       assert(kv2.getSeq == 19L)
       assert(kvState(kv2) == oracle, s"replay diverged after kill at $point")
       // one current row per addr — replay created no duplicates
@@ -131,7 +150,7 @@ class PumpKillSpec extends SparkSpec {
       // the cursor resumes ONWARD: only new entries consumed next
       import spark.implicits._
       log2.appendValues(Seq(300, 303))
-      assert(SinkIndex.pump(log2, kv2, kvProc) == 2L)
+      assert(onRoute(bound)(SinkIndex.pump(log2, kv2, kvProc, bound)) == 2L)
       assert(kv2.getSeq == 21L)
     } }
 
@@ -145,8 +164,8 @@ class PumpKillSpec extends SparkSpec {
     "kv.cursor.tmpWritten"
   )
 
-  for (point <- mlogKills)
-    test(s"MultiLogSink.pump killed at $point: replay = no dupes, no gaps") { withCleanHooks {
+  for (point <- mlogKills; (route, bound) <- routes)
+    test(s"MultiLogSink.pump$route killed at $point: replay = no dupes, no gaps") { withCleanHooks {
       val logDir = tmpDir("pk-mlog-log")
       val log = newLog(logDir)
       val cleanM = MultiLog.open(spark, tmpDir("pk-mlog-clean"))
@@ -160,7 +179,7 @@ class PumpKillSpec extends SparkSpec {
       val m = MultiLog.open(spark, mDir)
       val cur = KVIndex.open(spark, curDir)
       killAt(point)
-      expectInjected(MultiLogSink.pump(log, m, cur, fanProc))
+      expectInjected(MultiLogSink.pump(log, m, cur, fanProc, bound))
       FaultPoints.clear()
 
       val log2 = ParquetLog.open(spark, logDir, IntegerType)
@@ -168,7 +187,7 @@ class PumpKillSpec extends SparkSpec {
       val cur2 = KVIndex.open(spark, curDir)
       assert(cur2.getSeq == graft.core.Seqs.SeqEmpty,
         s"cursor advanced before effect completed at $point")
-      assert(MultiLogSink.pump(log2, m2, cur2, fanProc) == 20L)
+      assert(onRoute(bound)(MultiLogSink.pump(log2, m2, cur2, fanProc, bound)) == 20L)
       assert(cur2.getSeq == 19L)
       // exact set: every (addr, seq) exactly once — the replayed rows
       // after an appended-but-uncursored crash are deduped on read
@@ -176,7 +195,7 @@ class PumpKillSpec extends SparkSpec {
       // onward resume
       import spark.implicits._
       log2.appendValues(Seq(300, 303))
-      assert(MultiLogSink.pump(log2, m2, cur2, fanProc) == 2L)
+      assert(onRoute(bound)(MultiLogSink.pump(log2, m2, cur2, fanProc, bound)) == 2L)
       assert(mlogState(m2).size == 22)
     } }
 

@@ -29,7 +29,9 @@ import graft.storage.{FileIO, Manifest, ParquetLog, Segment, TableStore}
   *     the append's base, every row group of a file sorted by the
   *     store's layout, each manifest entry's rows, bytes (and log seq
   *     range) equal to its file's footer and size, no staging dir left
-  *     behind, and a clean fsck.
+  *     behind, a clean fsck, and the Spark jobs of the local-rows
+  *     append: none with the cut on (the driver path), some with it
+  *     off.
   */
 class WriterShapeSpec extends SparkSpec {
   import WriterShapeSpec.Shape
@@ -79,8 +81,8 @@ class WriterShapeSpec extends SparkSpec {
   private val cutOff = Seq("spark.graft.smallAppendCoalesceMaxBytes" -> "0")
   private val foldJob = Seq("spark.graft.segmentMergeDriverMaxBytes" -> "0")
 
-  /** The rows of every row group of `file`, in file order, as
-    * `column -> value` for the `cols` asked. */
+  /** The rows of every row group of `file`, in file order, as the
+    * values (null for a null) of the `cols` asked. */
   private def rowGroups(file: String, cols: Seq[String]): Seq[Seq[Seq[Any]]] = {
     val r = ParquetFileReader.open(FileIO.forPath(file).inputFile(file))
     try {
@@ -92,7 +94,9 @@ class WriterShapeSpec extends SparkSpec {
           (0L until pages.getRowCount).map { _ =>
             val g: Group = rr.read()
             cols.map { c =>
-              schema.getType(schema.getFieldIndex(c)).asPrimitiveType.getPrimitiveTypeName.name match {
+              if (g.getFieldRepetitionCount(c) == 0) null
+              else schema.getType(schema.getFieldIndex(c)).asPrimitiveType
+                .getPrimitiveTypeName.name match {
                 case "INT64" => g.getLong(c, 0)
                 case _ => g.getString(c, 0)
               }
@@ -105,6 +109,9 @@ class WriterShapeSpec extends SparkSpec {
   private def ordered(rows: Seq[Seq[Any]]): Boolean =
     rows.sliding(2).forall {
       case Seq(a, b) => (a zip b).map {
+        case (null, null) => 0
+        case (null, _) => -1 // nulls first, as Spark's ascending sort
+        case (_, null) => 1
         case (x: Long, y: Long) => x.compare(y)
         case (x, y) => x.toString.compare(y.toString)
       }.find(_ != 0).getOrElse(0) <= 0
@@ -157,12 +164,25 @@ class WriterShapeSpec extends SparkSpec {
     Seq("k", "id").map(c => when(col(c).isNotNull, col(c)).as(c)): _*)
     .as("value"))
 
+  /** The jobs of `append`, checked for the local-rows shape: none when
+    * the small-append cut is on (`conf` does not turn it off), some
+    * when it is off. */
+  private def appendJobs(conf: Seq[(String, String)], shape: Shape)(
+      append: => Long): Long = {
+    var out = 0L
+    val jobs = jobsDuring { out = append }
+    if (shape.name == "local rows")
+      if (conf.containsSlice(cutOff)) assert(jobs > 0, "cut off, yet no job ran")
+      else assert(jobs == 0, s"local rows under the cut ran $jobs jobs")
+    out
+  }
+
   private def logCase(conf: Seq[(String, String)], shape: Shape): Unit = {
     val dir = tmpDir("ws-log-") + "/log"
     val log = withConf(conf)(ParquetLog.open(spark, dir, inputSchema))
     log.append(value(Seq(("base", 0L), ("base", 1L)).toDF("k", "id")))
     val input = shape.build(scan)
-    val base = log.append(value(input))
+    val base = appendJobs(conf, shape)(log.append(value(input)))
     assert(base == 2L)
     val rows = log.toDF.where(col("seq") >= base)
       .select(col("seq"), col("value.k"), col("value.id"), col("nulled"))
@@ -182,7 +202,7 @@ class WriterShapeSpec extends SparkSpec {
     val t = withConf(conf)(TableStore.open(spark, dir, inputSchema))
     t.append(Seq(("base", 0L), ("base", 1L)).toDF("k", "id"), tableSort)
     val input = shape.build(scan)
-    assert(t.append(input, tableSort) == 2L)
+    assert(appendJobs(conf, shape)(t.append(input, tableSort)) == 2L)
     val m = Manifest.load(dir).get
     assert(m.segments.exists(s => s.minSeq == 2L && s.maxSeq == 2L),
       "the commit recorded no entry at its version")
@@ -198,6 +218,23 @@ class WriterShapeSpec extends SparkSpec {
     ("log append, job path (cut off)", c => logCase(cutOff ++ c, _)),
     ("table append, small-append cut on", c => tableCase(c, _)),
     ("table append, cut off", c => tableCase(cutOff ++ c, _)))
+
+  test("table append, driver path: rows land in Spark's sortWithin order, nulls first") {
+    val schema = StructType(Seq(StructField("k", StringType),
+      StructField("id", LongType, nullable = false)))
+    val input = Seq[(String, Long)](("k2", 5L), (null, 7L), ("k1", 9L),
+      ("k2", 1L), (null, 2L), ("k1", 3L)).toDF("k", "id")
+    val dir = tmpDir("ws-sort-")
+    val t = TableStore.open(spark, dir, schema)
+    assert(jobsDuring(t.append(input, tableSort)) == 0, "left the driver path")
+    val segs = Manifest.load(dir).get.segments
+    assert(segs.length == 1)
+    val groups = rowGroups(FileIO.join(dir, segs.head.path), tableSort)
+    // the sublog limit cap of SliceRead reads each row group's first
+    // rows as its smallest: every group is in layout order
+    assert(groups.flatten == input.orderBy(tableSort.map(col): _*).collect()
+      .map(r => Seq(r.get(0), r.get(1))).toSeq)
+  }
 
   for ((writer, run) <- writers; (fold, conf) <- Seq(
       "driver fold" -> Nil, "fold job" -> foldJob))
